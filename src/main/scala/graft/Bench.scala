@@ -110,31 +110,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // clamp: 0/negative would leave `times` empty and the median index out of bounds
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    // 2x cores, NOT 1x (r19): partitions = cpus schedules every stage as
-    // exactly one task wave, so one core stolen by another process
-    // stretches the whole stage end-to-end — the mechanism behind three
-    // rounds of 3-8x driver-session inflations on the heavy gram/shingle
-    // stages (r18 verdict "What's wrong #1"). At 2x, a late task's slot
-    // picks up the next pending task instead of idling (rebalance
-    // headroom), AQE coalesces the small stages back to wave size, and
-    // the quiet-session cost is noise-level (A/B in SCALING.md §"Bench
-    // robustness"). Env-overridable for re-running the A/B.
-    val shufflePartitions = sys.env.getOrElse(
-      "SPARK_GRAFT_SHUFFLE_PARTITIONS", (cpus.toInt * 2).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.silenceTinyWindowWarning() // AFTER setLogLevel: setAllLevels would clobber it
-    Logs.silenceCheckpointReleaseWarning()
+    val spark = LocalSession.create()
     // shared-artifact pre-build, timed and reported SEPARATELY: the
     // FrameMemo edge lists (LSH pairs, both k-NN graphs, jaccard/minhash
     // pair graphs) are built once and read by many queries, so inside
@@ -198,12 +176,8 @@ object Bench {
           }),
           // the IVF top-5 build on its own chain (r21): it reads no other
           // ann artifact (k-means + assignment over the raw embeddings),
-          // and it is the one store-EXCLUDED rebuild left in a warm
-          // session (float-mean centroids — ArtifactStore scaladoc), so
-          // in the r20 shape it serialized behind the ann chain's five
-          // warm store reads and set the whole warm build window's wall
-          // (ann 10.2 s vs ≤7 s every other chain). On its own chain the
-          // warm wall is the ivf build alone.
+          // so it runs beside the ann chain instead of serializing behind
+          // its five builds.
           "ivf" -> (() => {
             ops.SimilaritySearch.knnIvfTop5(spark, sfDir)
           }),
@@ -319,16 +293,11 @@ object Bench {
     // timed.
     try SparkEntry.queries.get("q16_dim_region").foreach(fn => exec(fn(spark, sfDir)))
     catch { case _: Throwable => () }
-    // focused re-runs for plan iteration / the contention A/B: a
-    // comma-separated list of query names (full, or the qNN stem before
-    // the first underscore — "q22" selects q22_*, NOT q220-q226; bare
-    // startsWith matching silently over-selected exactly that way, r19
-    // ADVICE). NEVER set by the driver — round evidence is always the
-    // full registry ("nq" on the line records the size).
+    // focused re-runs for plan iteration: a comma-separated list of
+    // query names or qNN stems (SparkEntry.select). Round evidence is
+    // always the full registry ("nq" on the line records the size).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    val timedSet = only.fold(SparkEntry.queries)(ks =>
-      SparkEntry.queries.filter { case (k, _) =>
-        ks.exists(p => k == p || k.startsWith(p + "_")) })
+    val timedSet = only.fold(SparkEntry.queries)(SparkEntry.select)
     // a filter that selects nothing is a typo, and timing zero queries
     // would silently write an empty .subset detail file — fail loudly
     if (only.isDefined && timedSet.isEmpty) {
@@ -350,10 +319,8 @@ object Bench {
     val detailPath = if (only.isEmpty) DetailFile else DetailFile + ".subset"
     java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
       renderDetail(results, sfDir, runs, sharedBuildSec,
-        loadPre, loadPost, shufflePartitions.toInt, chainSecs,
-        streaming.StreamingMetrics.snapshot,
-        Some((ops.ArtifactStore.codeFingerprint,
-          ops.ArtifactStore.stats._1, ops.ArtifactStore.stats._2)))
+        loadPre, loadPost, spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        chainSecs, streaming.StreamingMetrics.snapshot)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(renderLine(results, sfDir, runs, sharedBuildSec, sharedBuildFailed,
       Some((residPre, residPost)), (loadPre, loadPost),
@@ -500,8 +467,7 @@ object Bench {
                                   loadPost: Option[(Double, Double)] = None,
                                   shufflePartitions: Int = 0,
                                   chainSecs: Seq[(String, Double)] = Seq.empty,
-                                  streamingRuns: Map[String, streaming.StreamingMetrics.Run] = Map.empty,
-                                  storeStats: Option[(String, Int, Int)] = None): String = {
+                                  streamingRuns: Map[String, streaming.StreamingMetrics.Run] = Map.empty): String = {
     def ms(v: Double): String = String.format(java.util.Locale.ROOT,
       "%.2f", java.lang.Double.valueOf(v))
     // runs_sec is the RAW array in execution order (median derived) —
@@ -545,9 +511,6 @@ object Bench {
        |  "loadavg_pre": ${loadJson(loadPre)},
        |  "loadavg_post": ${loadJson(loadPost)},
        |  "shuffle_partitions": $shufflePartitions,
-       |  "artifact_store": ${storeStats.map { case (fp, h, m) =>
-            s"""{"fingerprint": "${jsonEscape(fp)}", "hits": $h, "misses": $m}"""
-          }.getOrElse("null")},
        |  "streaming": {
        |$streamingJson
        |  },

@@ -1,7 +1,7 @@
 package graft
 
-/** Harness-side log tuning shared by the Bench/Verify mains and the test
-  * session.
+/** Harness-side log tuning shared by [[LocalSession]] (the Bench, Verify
+  * and RunMedallion mains) and the test session.
   */
 object Logs {
 

@@ -135,6 +135,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.iterator.map(_.queries).reduce(_ ++ _)
 
+  /** The registered queries named by `names`, each a full query name or
+    * its qNN stem before the first underscore: "q22" selects q22_*, NOT
+    * q220–q226, which a bare prefix match would over-select. Shared by
+    * Bench's SPARK_GRAFT_BENCH_ONLY and Verify's trailing args.
+    */
+  def select(names: Set[String]): Map[String, (SparkSession, String) => DataFrame] =
+    queries.filter { case (k, _) => names.exists(p => k == p || k.startsWith(p + "_")) }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

@@ -2,30 +2,33 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (tools/check.py).
+  *
+  * Usage: `graft.Verify sfDir outDir [name ...]`. Optional trailing names
+  * (full query names or qNN stems, as in [[SparkEntry.select]]) restrict
+  * both the queries run and the keys written to oracle_sql.json, so
+  * `tools/check.py` runs unchanged on a subset.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // 2x cores, matching Bench (r19): partitions = cpus is one task wave
-    // per stage — zero rebalance headroom when another process steals a
-    // core, which stretched the driver-session heavy stages 3-8x for
-    // three rounds. See Bench.main + SCALING.md §"Bench robustness".
-    val shufflePartitions = sys.env.getOrElse(
-      "SPARK_GRAFT_SHUFFLE_PARTITIONS", (cpus.toInt * 2).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.silenceTinyWindowWarning() // AFTER setLogLevel: setAllLevels would clobber it
-    Logs.silenceCheckpointReleaseWarning()
+    val Array(sfDir, outDir) = args.take(2)
+    val spark = LocalSession.create()
+    try dump(spark, sfDir, outDir, args.drop(2).toSeq)
+    finally spark.stop()
+  }
+
+  /** Writes `outDir/<name>` parquet for each selected query (all when
+    * `names` is empty) and `outDir/oracle_sql.json` for the selected
+    * queries that carry oracle SQL. A query that throws is reported on
+    * stderr as `[verify] <name> failed`; the others still run.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           names: Seq[String]): Unit = {
+    val selected =
+      if (names.isEmpty) SparkEntry.queries else SparkEntry.select(names.toSet)
+    require(selected.nonEmpty, s"no registered query matches ${names.mkString(", ")}")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -44,18 +47,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // store evidence in the correctness session's own output (r21): a
-    // driver correctness run self-reports whether it read warm artifacts
-    // or rebuilt cold — the same fingerprint+hits/misses evidence
-    // BENCH_DETAIL carries, on the "[verify]"-greppable stderr channel
-    // (NOT as a file in outDir: the dump dir stays exactly one entry per
-    // declared query + oracle_sql.json, whatever enumerates it).
-    val (hits, misses) = ops.ArtifactStore.stats
-    System.err.println(s"""[verify] artifact_store {"fingerprint": """ +
-      s""""${ops.ArtifactStore.codeFingerprint}", "hits": $hits, "misses": $misses}""")
-    spark.stop()
   }
 }

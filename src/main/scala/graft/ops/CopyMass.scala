@@ -47,7 +47,7 @@ object CopyMass {
     * q155 reads the kept fingerprint posting): the 5-gram explode + md5
     * + per-doc count + df-cap window is the snapshot-build step, not
     * per-query work, and q197 was the one curation matrix still
-    * re-running it inside every timed run. Persistable class: md5 digest
+    * re-running it inside every timed run. Deterministic: md5 digest
     * strings + exact integer sums (partition-order-independent; the q197
     * oracle hash-gates the identical derivation). Priced in Bench's
     * dsir_gram chain (the lightest chain — it reads no gram-family memo,

@@ -204,11 +204,11 @@ object Dedup {
     * one per-doc window; the verification join touches only candidate
     * docs' token arrays, never the corpus.
     */
-  /** q108's pair frame as a FrameMemo/ArtifactStore artifact (r21) —
+  /** q108's pair frame as a FrameMemo artifact (r21) —
     * the same stored-pair-frame contract its siblings q26 (jaccard),
     * q27 (minhashLsh) and q28 (simhash) already present: the pair graph
     * is built once per corpus snapshot (priced in Bench's dedup chain),
-    * and the registered query presents it. Persistable: integer doc
+    * and the registered query presents it. Deterministic: integer doc
     * ids/counts plus one per-row double division (the allowed per-row
     * float class). q108 was the one exact-pair query still paying its
     * full posting + prefix-join build inside every timed run.

@@ -113,7 +113,11 @@ object ExactSubstr {
     * applied BEFORE grouping — the flat-stream pre-filter keeps a
     * ubiquitous boilerplate gram's occurrence list from ever being
     * collected into one row, the same reason the old join pre-filtered
-    * both sides. Kept groups are ≤ MaxDfSub docs wide.
+    * both sides. The cap bounds DOCS per row (≤ MaxDfSub), not
+    * occurrences inside one doc: every position of a kept hash is
+    * collected, so a doc repeating one gram n times puts n entries in
+    * its row, and the chained explodes generate O(n²) rows from it in
+    * one task.
     */
   private[graft] def keptGrams(s: SparkSession, d: String): DataFrame =
     FrameMemo.cached(s, d, "gramPostingDf" + MaxDfSub) {

@@ -101,13 +101,7 @@ object FrameMemo {
       val hit = memo.get(k)
       if (hit != null) hit
       else {
-        // the disk-backed read-through layer (ArtifactStore): for the
-        // few measured-expensive allowlisted keys, a previous session's
-        // persisted artifact replaces the build with one parquet read —
-        // keyed by code + data fingerprints so a stale read is
-        // impossible. All other keys pass straight through to the build.
-        val built = ArtifactStore.readThrough(s, dir, key)(
-          materializeReleasingScratch(build))
+        val built = materializeReleasingScratch(build)
         val raced = memo.putIfAbsent(k, built)
         if (raced != null) {
           // losing a cross-chain race (reachable since Bench's parallel

@@ -56,12 +56,11 @@ object LabelProp {
       .select(col("vec_id"), coalesce(col("lab"), col("voted")).as("lab"))
   }
 
-  /** The cell-bounded kNN edge list as a FrameMemo/ArtifactStore
-    * artifact (r21) — the same stored-graph contract the other graph
+  /** The cell-bounded kNN edge list as a FrameMemo artifact (r21) — the same stored-graph contract the other graph
     * consumers already stand on (q93 reads knnGraphLsh, q118
     * knnGraphExact): the Σ|cell|² within-cell self-join + per-src rank
     * is the snapshot-build step a 100 TB pipeline runs once per corpus,
-    * not per propagation. Persistable: integer ids ranked by exact
+    * not per propagation. Deterministic: integer ids ranked by exact
     * integer d², ties by vec_id — fully partition-order-independent
     * (the q191 oracle hash-gates the identical derivation). The
     * PROPAGATION rounds still run live inside q191's timed runs.

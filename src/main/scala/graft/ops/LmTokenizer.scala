@@ -331,7 +331,7 @@ object LmTokenizer {
     * list as its model. q135/q140 still TRAIN live per timed run —
     * training cost is their contract; this artifact only stops the two
     * encode/apply queries from re-training per run (they were paying
-    * the full 10-merge iteration ×3 runs each). Persistable: training
+    * the full 10-merge iteration ×3 runs each). Deterministic: training
     * is integer/string-exact and partition-order-independent — the
     * q135 ≡ q140 oracle hash-gate IS that proof, and both consumers'
     * oracles replay the identical chain. Priced in Bench's shared build.

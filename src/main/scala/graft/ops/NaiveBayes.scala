@@ -102,7 +102,7 @@ object NaiveBayes {
       .orderBy("doc_id")
   }
 
-  /** The prediction frame as a FrameMemo/ArtifactStore artifact (r21):
+  /** The prediction frame as a FrameMemo artifact (r21):
     * train + inference are integer-exact end-to-end (micro-nat weights,
     * integer score sums, deterministic tie-breaks — the q153 oracle
     * hash-gates it), so the frame is partition-order-independent and

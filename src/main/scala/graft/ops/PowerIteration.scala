@@ -100,12 +100,8 @@ object PowerIteration {
     * values are bit-identical (exact integer sums over the identical
     * multiset of q_i·q_j terms, regrouping-invariant). Plan: 3 Exchanges
     * + SortMergeJoin → 1 Exchange, no join (plans/r21/q210_*.txt).
-    *
-    * Persistable (r20 verdict #2): every column is an exact integer
-    * aggregate — partition-order-independent — so the cell frame joins
-    * PersistKeys and a warm session replaces the whole build with one
-    * 4096-row parquet read (the dsir_gram chain's rebuild was half the
-    * warm shared-build floor).
+    * Every column is an exact integer aggregate, so the cell frame is
+    * partition-order-independent.
     */
   private[graft] def gramCells(s: SparkSession, d: String): DataFrame =
     FrameMemo.cached(s, d, "gramCells") {

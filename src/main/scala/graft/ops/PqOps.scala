@@ -220,10 +220,8 @@ object PqOps {
     * codebooks. r21 (verdict #2): training is exact-integer Lloyd /
     * truncating-division codebook updates — deterministic and
     * partition-order-independent (the q147 oracle hash-gates the very
-    * same chain) — so the driver-side model persists through
-    * ArtifactStore as a 1.5k-row keyed file, and a warm session's
-    * modelOf is one tiny parquet read instead of CoarseIters + Iters
-    * full training passes. The frame is built FROM the trained model
+    * same chain) — so the model is one 1.5k-row memoized frame that
+    * [[modelOf]] decodes. The frame is built FROM the trained model
     * (collected driver state → parallelize), not by a second training
     * path, so encode/decode round-trips by construction.
     */

@@ -204,11 +204,17 @@ object Winnowing {
       keptPostingOf(fingerprints(s, d))
     }
 
-  private[graft] def keptPostingOf(fp: DataFrame): DataFrame =
-    fp.select("doc_id", "fp_hash").distinct()
+  private[graft] def keptPostingOf(fp: DataFrame): DataFrame = {
+    // the df cap runs on the flat distinct stream BEFORE grouping (as in
+    // ExactSubstr.groupedPosting): a fingerprint carried by every doc is
+    // dropped as a count, never collected into one unbounded row
+    val flat = fp.select("doc_id", "fp_hash").distinct()
+    val kept = flat.groupBy("fp_hash").agg(count(lit(1)).as("df"))
+      .filter(col("df") <= MaxDf).select("fp_hash")
+    flat.join(kept, "fp_hash")
       .groupBy("fp_hash")
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) <= MaxDf)
+  }
 
   private def overlapFromPosting(kp: DataFrame): DataFrame = {
     // per-doc kept-fingerprint counts, re-derived narrowly from the

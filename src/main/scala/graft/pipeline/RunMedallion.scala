@@ -75,14 +75,7 @@ object RunMedallion {
 
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/lakehouse")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.create()
     val star = run(spark, root)
     Seq(
       "q1" -> Analysis.q1TableCounts(star),

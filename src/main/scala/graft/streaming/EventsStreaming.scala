@@ -390,6 +390,15 @@ object EventsStreaming {
       throw new java.io.IOException(s"recovery failed: could not restore $old -> $live")
   }
 
+  /** State-partition count for the bounded-replay query family
+    * (q116–q143/q209/q215): 8, r19's measured choice for the window-keyed
+    * queries; the r22 A/B in OPTIMIZATION_r22.md measured 16 and 32 on
+    * the large-state interval joins and rejected both. At cluster scale
+    * this is sized per query to executors × cores, per the
+    * [[runToMemory]] scaladoc.
+    */
+  private[graft] val ReplayStatePartitions = 8
+
   /** Drive a streaming frame to completion against the (bounded) parquet
     * source via a memory sink; returns the materialized result table.
     * Used by tests and local verification — production would write to a
@@ -406,17 +415,6 @@ object EventsStreaming {
     * executor count × cores, deliberately, per query. Restored after the
     * run (bench/verify drive queries sequentially).
     */
-  /** State-partition count for the bounded-replay query family
-    * (q116–q143/q209/q215): local default 8 (r19's measured choice for
-    * the window-keyed queries; the r22 A/B in OPTIMIZATION_r22.md also
-    * measured 16/32 on the large-state interval joins), env-overridable
-    * for re-running that A/B. At cluster scale this is sized per query
-    * to executors × cores, per the [[runToMemory]] scaladoc.
-    */
-  private[graft] val ReplayStatePartitions: Int =
-    try math.max(1, sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "8").trim.toInt)
-    catch { case _: NumberFormatException => 8 }
-
   def runToMemory(s: SparkSession, streamed: DataFrame, name: String,
                   mode: OutputMode = OutputMode.Append,
                   statePartitions: Option[Int] = None): DataFrame =

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Winnowing
 
@@ -63,6 +65,38 @@ class WinnowingSpec extends AnyFunSuite {
     val shared = rows.head.getLong(2)
     assert(shared >= Winnowing.MinShared,
       s"planted 300-char passage yields only $shared shared fingerprints")
+  }
+
+  // the pre-fix posting formula, kept as the reference: collect each
+  // hash's whole doc list, THEN drop lists wider than MaxDf
+  private def collectThenFilter(fp: DataFrame): DataFrame =
+    fp.select("doc_id", "fp_hash").distinct()
+      .groupBy("fp_hash")
+      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
+      .filter(size(col("ds")) <= Winnowing.MaxDf)
+
+  private def postingSet(df: DataFrame): Set[(Long, List[Long])] =
+    df.select("fp_hash", "ds").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toSet
+
+  test("kept posting: a hash in MaxDf+1 docs is dropped; equals collect-then-filter") {
+    import spark.implicits._
+    val hot = 42L     // in MaxDf + 1 docs: over the cap
+    val edge = 7L     // in exactly MaxDf docs: kept
+    val fp = ((1L to Winnowing.MaxDf + 1L).map(d => (d, hot)) ++
+      (1L to Winnowing.MaxDf.toLong).map(d => (d, edge)) ++
+      // a repeated (doc, hash) selection counts once toward df
+      Seq((3L, 9L), (3L, 9L), (5L, 9L))).toDF("doc_id", "fp_hash")
+    val kept = postingSet(Winnowing.keptPostingOf(fp))
+    assert(kept == Set(edge -> (1L to Winnowing.MaxDf.toLong).toList, 9L -> List(3L, 5L)))
+    assert(kept == postingSet(collectThenFilter(fp)))
+  }
+
+  test("kept posting on the sf0.001 fingerprints equals collect-then-filter") {
+    val fp = Winnowing.fingerprints(spark, "/root/testdata/sf0.001")
+    val kept = postingSet(Winnowing.keptPostingOf(fp))
+    assert(kept.nonEmpty)
+    assert(kept == postingSet(collectThenFilter(fp)))
   }
 
   test("real corpus: reported pairs sit clear of the MinShared threshold (measured gap)") {
