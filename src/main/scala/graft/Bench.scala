@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.ops.{FrameMemo}
 
 /** Benchmark main: every SparkEntry query against SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout. Methodology: deterministic (sorted) query
@@ -112,33 +113,21 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // clamp: 0/negative would leave `times` empty and the median index out of bounds
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
+    // focused re-runs for plan iteration: a comma-separated list of
+    // query names or qNN stems (SparkEntry.select). Round evidence is
+    // always the full registry ("nq" on the line records the size).
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
+    val timedSet = only.fold(SparkEntry.queries)(SparkEntry.select)
+    // a filter that selects nothing is a typo, and timing zero queries
+    // would silently write an empty .subset detail file — fail loudly,
+    // before the session and the shared build are paid for
+    if (only.isDefined && timedSet.isEmpty) {
+      System.err.println(s"[bench] SPARK_GRAFT_BENCH_ONLY=" +
+        s"${only.get.mkString(",")} selected no queries; " +
+        "names must match a full query name or its qNN stem")
+      sys.exit(2)
+    }
     val spark = LocalSession.create()
-    // shared-artifact pre-build, timed and reported SEPARATELY: the
-    // FrameMemo edge lists (LSH pairs, both k-NN graphs, jaccard/minhash
-    // pair graphs) are built once and read by many queries, so inside
-    // the per-query loop the one run that builds is discarded by the
-    // median — without this line the build cost would be billed to no
-    // query at all and a pair-build regression would be invisible in the
-    // recorded bench evidence. This is the amortized "build the layout"
-    // step of the stored-edge-list contract, priced honestly.
-    // only when the memo will actually retain the artifacts: on a
-    // non-memoizable dir the pre-build would be discarded and every
-    // consumer would rebuild per run anyway — pre-paying would bill the
-    // same work twice and the note would falsely claim memoization
-    // a FAILED build must not fold its partial elapsed time into the
-    // total under the "memoized" label: the memo is unpopulated, every
-    // consumer rebuilds per run (billed in their own medians), and the
-    // note would falsely claim amortization. Report the failure as its
-    // own marker instead; the root cause still surfaces as query errors.
-    // The build set runs as PARALLEL chains (r18): each chain orders its
-    // internal artifact dependencies (a memo build may read an earlier
-    // memo in the same chain), chains are mutually independent, and the
-    // Spark scheduler interleaves their jobs across the 32 cores a
-    // single sequential build chain left mostly idle (measured 45 s
-    // sequential → the slowest chain's wall-clock in parallel). A race
-    // on a cross-chain memo (FrameMemo putIfAbsent) at worst builds
-    // twice and keeps one — never a wrong result. Any chain failure →
-    // the same shared_build FAILED marker as before.
     // tiny untimed SESSION-INIT warmup BEFORE the build window (r20
     // ADVICE low): since the q16 warmup moved after the build (r19 #4),
     // shared_build_sec absorbed first-job costs that are session init —
@@ -150,163 +139,38 @@ object Bench {
     try exec(spark.read.parquet(s"$sfDir/region.parquet")
       .groupBy("r_regionkey").count())
     catch { case _: Throwable => () }
-    val (sharedBuildSec, sharedBuildFailed, chainSecs) =
-      if (!ops.FrameMemo.memoizable(sfDir)) (0.0, false, Seq.empty[(String, Double)])
+    // shared-artifact pre-build, timed and reported SEPARATELY: the
+    // SparkEntry.sharedArtifacts frames (LSH pairs, both k-NN graphs,
+    // jaccard/minhash pair graphs, gram postings) are built once and read
+    // by many queries, so inside the per-query loop the one run that
+    // builds is discarded by the median — without this line the build
+    // cost would be billed to no query at all. Only when the memo will
+    // actually retain the artifacts: on a non-memoizable dir every
+    // consumer rebuilds per run anyway, and pre-paying would bill the
+    // same work twice. A FAILED build reports its own marker rather than
+    // folding partial time into the total: the memo is unpopulated and
+    // every consumer rebuilds per run (billed in their own medians).
+    // prebuild joins its workers before returning, so no build job
+    // overlaps the timed loop.
+    val (sharedBuildSec, sharedBuildFailed, artifactSecs) =
+      if (!FrameMemo.memoizable(sfDir)) (0.0, false, Seq.empty[(String, Double)])
       else {
         val tB = System.nanoTime()
-        // NAMED chains, each timed on its own (r19 verdict #1): the one
-        // scalar shared_build folded 25+ artifact builds across 7
-        // parallel chains, so a 9x-inflated build round (218 s driver vs
-        // 24.6 s committed) could not be attributed to a chain from
-        // committed evidence. Per-chain wall times go to BENCH_DETAIL
-        // ("shared_build_chains") and the slowest chain's name to the
-        // stdout line ("sbc"). Chain wall-clock overlaps (they run in
-        // parallel), so Σ chains ≥ shared_build_sec by design — the map
-        // answers "WHICH chain was slow", the scalar "how long did the
-        // build window stall the session".
-        val chains: Seq[(String, () => Unit)] = Seq(
-          // ANN graphs + anchors + method frames (ordered: the top5
-          // frames and hybrid read the memoized anchors/pair frame)
-          "ann" -> (() => {
-            ops.SimilaritySearch.knnGraphLsh(spark, sfDir) // + LSH pair frame
-            ops.SimilaritySearch.knnGraphExact(spark, sfDir)
-            ops.SimilaritySearch.knnExactTop5(spark, sfDir) // q30/q117 anchor
-            ops.SimilaritySearch.knnLshTop5(spark, sfDir)
-            ops.Retrieval.hybridRanked(spark, sfDir)
-          }),
-          // the IVF top-5 build on its own chain (r21): it reads no other
-          // ann artifact (k-means + assignment over the raw embeddings),
-          // so it runs beside the ann chain instead of serializing behind
-          // its five builds.
-          "ivf" -> (() => {
-            ops.SimilaritySearch.knnIvfTop5(spark, sfDir)
-          }),
-          // text dedup: pair graphs, then the component/method frames
-          // q28/q49/q208 read
-          "dedup" -> (() => {
-            ops.Dedup.jaccardPairs(spark, sfDir, threshold = 0.2)
-            ops.Dedup.minhashLshPairs(spark, sfDir, threshold = 0.2)
-            ops.Dedup.lshGroupRows(spark, sfDir)
-            ops.Dedup.simhashPairs(spark, sfDir)
-            // q221/q225's visual pair frame (reads no other memo)
-            ops.ImageHash.dhashPairs(spark, sfDir)
-            // q108's prefix-filtered exact pair frame (r21)
-            ops.Dedup.prefixJaccardPairsStored(spark, sfDir, 4, 5)
-          }),
-          // PQ model + codes + IVF-PQ index + memoized search frame
-          "pq" -> (() => {
-            exec(ops.PqOps.pqCodes(spark, sfDir))
-            ops.PqOps.ivfPqSearch(spark, sfDir)
-            // q191's cell-bounded kNN edge list (r21; reads the pq_codes
-            // memo built above — same-chain ordering)
-            ops.LabelProp.cellKnn(spark, sfDir)
-          }),
-          // DSIR score table + the embedding Gram (q157/q160, q210/q214)
-          "dsir_gram" -> (() => {
-            ops.Dsir.importanceScores(spark, sfDir)
-            ops.PowerIteration.gramOf(spark, sfDir)
-            // q197's df-capped copy-mass table (r22): reads only
-            // `documents`, no gram-family memo — placed on the lightest
-            // chain to keep the cold build window balanced
-            ops.CopyMass.cappedMass(spark, sfDir)
-          }),
-          // the corpus gram/fingerprint asset set: raw stream first,
-          // then its df-capped postings and the winnowed fingerprints
-          "chargram" -> (() => {
-            ops.Winnowing.gramFrame(spark, sfDir)
-            ops.ExactSubstr.keptGrams(spark, sfDir)
-            ops.Winnowing.fingerprints(spark, sfDir)
-            // q155's kept grouped posting (r22; reads the fingerprints
-            // memo built above — same-chain ordering)
-            ops.Winnowing.keptFpPosting(spark, sfDir)
-            // the q224 snapshot-maintenance assets: the stored base
-            // manifest + the from-scratch audit totals (reads the
-            // gramFrame memo built above — same-chain ordering)
-            ops.ArtifactDelta.baseManifest(spark, sfDir)
-            ops.ArtifactDelta.scratchTotals(spark, sfDir)
-          }),
-          // the word-shingle digest asset set (r19): per-n (split,
-          // digest) membership tables + the 3-gram df table — read by
-          // q179/q180/q219 instead of re-exploding the corpus per call
-          "shingle" -> (() => {
-            ops.NoveltyCurve.Ns.foreach(n =>
-              ops.ShingleStore.splitGrams(spark, sfDir, n))
-            ops.ShingleStore.df3(spark, sfDir)
-            // the q227 snapshot-maintenance assets (r20): the stored
-            // base split-count manifest + the from-scratch flag-table
-            // audit totals (reads the splitGrams(3) memo built above —
-            // same-chain ordering)
-            ops.ShingleDelta.baseCounts(spark, sfDir)
-            ops.ShingleDelta.scratchFlagTotals(spark, sfDir)
-            // the r19 q220-variance fix: quality scores + the vocab
-            // count table as stored columns (read by q98/q220)
-            ops.CorpusReports.qualityScored(spark, sfDir)
-            ops.TextAnalysis.tokenCounts(spark, sfDir)
-          }),
-          // the r19 curation/decontamination asset set: scored docs
-          // (q50/q52/q69), the 5-gram posting + doc catalog
-          // (q65/q66/q69/q163), per-doc repetition signals (q64/q69)
-          "curation" -> (() => {
-            ops.TextAnalysis.scoredDocs(spark, sfDir)
-            ops.CorpusSignals.fiveGramMeta(spark, sfDir)
-            ops.CorpusSignals.fiveGramPosting(spark, sfDir)
-            ops.CorpusSignals.repetitionSignals(spark, sfDir)
-            // the trained-BPE artifact (r21): q136/q141 read it instead
-            // of re-training per run; q135/q140 still train live.
-            // Placed here (the lightest chain) to keep the cold build's
-            // wall-clock balanced.
-            ops.LmTokenizer.trainedBpe(spark, sfDir)
-            // q153's NB prediction frame (r21): q153 presents it,
-            // q178/q185 derive their eval reports from it
-            ops.NaiveBayes.sourcePredictions(spark, sfDir)
-          }))
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        // each chain is awaited through its own .recover, NOT
-        // Future.sequence: sequence fails fast on the first chain error,
-        // which would start timeQueries while surviving chains still run
-        // build jobs on the shared scheduler (their work would inflate the
-        // first timed queries' runs_sec) and stamp sharedBuildSec at first
-        // failure instead of when work actually stops. Mapping through
-        // recover makes every future terminal-complete, so the awaits
-        // drain ALL chains before the timed loop begins.
-        val settled: Seq[Either[String, (String, Double)]] = chains
-          .map { case (name, c) => Future {
-            val t0 = System.nanoTime()
-            c()
-            name -> (System.nanoTime() - t0) / 1e9
-          }.map(Right(_): Either[String, (String, Double)])
-            .recover { case _: Throwable => Left(name) } }
-          .map(f => Await.result(f, Duration.Inf))
-        val ok = settled.forall(_.isRight)
-        val sec = (System.nanoTime() - tB) / 1e9
-        if (ok) (sec, false, settled.collect { case Right(ns) => ns })
-        else (0.0, true, Seq.empty[(String, Double)])
+        FrameMemo.prebuild(spark, sfDir, SparkEntry.sharedArtifacts) match {
+          case Right(secs) => ((System.nanoTime() - tB) / 1e9, false, secs)
+          case Left(failed) =>
+            System.err.println(s"[bench] shared_build FAILED artifacts: ${failed.mkString(", ")}")
+            (0.0, true, Seq.empty[(String, Double)])
+        }
       }
     // untimed warmup AFTER the shared build (r19 verdict #4): it used to
     // run first, so the first timed queries (q01/q02 in sorted order)
-    // inherited whatever residual IO/JIT tail the 7-chain build left —
-    // the driver's q02 showed monotonically decreasing [9.54, 7.23,
-    // 3.56] run arrays from exactly this adjacency. Placed here it
-    // absorbs both session init AND the build's tail before anything is
-    // timed.
+    // inherited whatever residual IO/JIT tail the build left — the
+    // driver's q02 showed monotonically decreasing [9.54, 7.23, 3.56] run
+    // arrays from exactly this adjacency. Placed here it absorbs both
+    // session init AND the build's tail before anything is timed.
     try SparkEntry.queries.get("q16_dim_region").foreach(fn => exec(fn(spark, sfDir)))
     catch { case _: Throwable => () }
-    // focused re-runs for plan iteration: a comma-separated list of
-    // query names or qNN stems (SparkEntry.select). Round evidence is
-    // always the full registry ("nq" on the line records the size).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    val timedSet = only.fold(SparkEntry.queries)(SparkEntry.select)
-    // a filter that selects nothing is a typo, and timing zero queries
-    // would silently write an empty .subset detail file — fail loudly
-    if (only.isDefined && timedSet.isEmpty) {
-      System.err.println(s"[bench] SPARK_GRAFT_BENCH_ONLY=" +
-        s"${only.get.mkString(",")} selected no queries; " +
-        "names must match a full query name or its qNN stem")
-      spark.stop()
-      sys.exit(2)
-    }
     val loadPre = loadAvg()
     val residPre = blockResidency(spark)
     val results = timeQueries(spark, sfDir, timedSet, runs)
@@ -320,11 +184,11 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
       renderDetail(results, sfDir, runs, sharedBuildSec,
         loadPre, loadPost, spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        chainSecs, streaming.StreamingMetrics.snapshot)
+        artifactSecs, streaming.StreamingMetrics.snapshot)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(renderLine(results, sfDir, runs, sharedBuildSec, sharedBuildFailed,
       Some((residPre, residPost)), (loadPre, loadPost),
-      chainSecs.sortBy(-_._2).headOption.map(_._1)))
+      artifactSecs.sortBy(-_._2).headOption.map(_._1)))
     spark.stop()
     val failed = results.collect { case (k, Left(_)) => k }
     if (failed.nonEmpty) {
@@ -350,7 +214,7 @@ object Bench {
                  sharedBuildFailed: Boolean = false,
                  residency: Option[((Int, Long), (Int, Long))] = None,
                  load: (Option[(Double, Double)], Option[(Double, Double)]) = (None, None),
-                 slowestChain: Option[String] = None): String = {
+                 slowestArtifact: Option[String] = None): String = {
     // Locale.ROOT: a comma-decimal default locale would emit invalid JSON.
     // DECISECONDS below 10 s, WHOLE seconds above: run-to-run noise is
     // ~30%, so finer digits were pure noise that cost line width × every
@@ -407,14 +271,14 @@ object Bench {
     // amortized build = what a full pass actually costs) and also broken
     // out so a build regression is visible on its own
     val totalAll = total + sharedBuildSec
-    // "sbc" = slowest build chain's name (~16 chars, budgeted in
-    // BenchHarnessSpec): the one-word answer to "which chain stalled
-    // this session's build window" — per-chain seconds in BENCH_DETAIL
+    // "sba" = slowest build artifact's name (budgeted in
+    // BenchHarnessSpec): the one-word answer to "which artifact stalled
+    // this session's build window" — per-artifact seconds in BENCH_DETAIL
     val buildJson =
       if (sharedBuildFailed) ""","shared_build_error":true"""
       else if (sharedBuildSec > 0)
         s""","shared_build":${ms(sharedBuildSec)}""" +
-          slowestChain.fold("")(n => s""","sbc":"$n"""")
+          slowestArtifact.fold("")(n => s""","sba":"$n"""")
       else ""
     // block-store residency [cachedRDDs, MiB] before/after the timed
     // loop — ~36 chars, budgeted in BenchHarnessSpec's width model
@@ -466,7 +330,7 @@ object Bench {
                                   loadPre: Option[(Double, Double)] = None,
                                   loadPost: Option[(Double, Double)] = None,
                                   shufflePartitions: Int = 0,
-                                  chainSecs: Seq[(String, Double)] = Seq.empty,
+                                  artifactSecs: Seq[(String, Double)] = Seq.empty,
                                   streamingRuns: Map[String, streaming.StreamingMetrics.Run] = Map.empty): String = {
     def ms(v: Double): String = String.format(java.util.Locale.ROOT,
       "%.2f", java.lang.Double.valueOf(v))
@@ -485,10 +349,12 @@ object Bench {
     // without a replay session (the r16-r18 adjudication gap).
     def loadJson(l: Option[(Double, Double)]): String =
       l.map { case (a, b) => s"[${ms(a)}, ${ms(b)}]" }.getOrElse("null")
-    // per-chain wall times (execution overlaps: the chains run in
-    // parallel, so these attribute WHERE a slow build window went —
-    // they do not sum to shared_build_sec)
-    val chainsJson = chainSecs
+    // per-artifact wall seconds: from when a prebuild worker takes the
+    // artifact until its frame is materialized, INCLUDING any wait on a
+    // dependency another worker is building. Artifacts build
+    // FrameMemo.PrebuildWorkers at a time, so these attribute WHERE a
+    // slow build window went — they do not sum to shared_build_sec.
+    val artifactsJson = artifactSecs
       .map { case (n, t) => s""""${jsonEscape(n)}": ${ms(t)}""" }
       .mkString("{", ", ", "}")
     // the streaming family's engine counters from each query's LAST
@@ -507,7 +373,7 @@ object Bench {
        |  "sf": "${sfDir.split('/').last}",
        |  "runs": $runs,
        |  "shared_build_sec": ${ms(sharedBuildSec)},
-       |  "shared_build_chains": $chainsJson,
+       |  "shared_build_artifacts": $artifactsJson,
        |  "loadavg_pre": ${loadJson(loadPre)},
        |  "loadavg_post": ${loadJson(loadPost)},
        |  "shuffle_partitions": $shufflePartitions,

@@ -143,6 +143,75 @@ object SparkEntry {
   def select(names: Set[String]): Map[String, (SparkSession, String) => DataFrame] =
     queries.filter { case (k, _) => names.exists(p => k == p || k.startsWith(p + "_")) }
 
+  /** The shared in-session artifacts: the FrameMemo-backed frames (plus
+    * the embedding Gram) that several registered queries read, one named
+    * builder each; memos they read on the way (the PQ model, the LSH pair
+    * frame) build with them. Bench pre-builds this list with
+    * `FrameMemo.prebuild` and prices it as `shared_build`; the names key
+    * BENCH_DETAIL's `shared_build_artifacts`. A builder that reads
+    * another memo just calls it, so the order only decides which builds
+    * start first.
+    */
+  val sharedArtifacts: Seq[(String, (SparkSession, String) => Any)] =
+    Seq[(String, (SparkSession, String) => Any)](
+    // ANN graphs + anchors + method frames (the top5 frames and hybrid
+    // read the anchors/pair frame)
+    "knnGraphLsh" -> ops.SimilaritySearch.knnGraphLsh _,
+    "knnGraphExact" -> ops.SimilaritySearch.knnGraphExact _,
+    "knnExactTop5" -> ops.SimilaritySearch.knnExactTop5 _,
+    "knnLshTop5" -> ops.SimilaritySearch.knnLshTop5 _,
+    "hybridRanked" -> ops.Retrieval.hybridRanked _,
+    "knnIvfTop5" -> ops.SimilaritySearch.knnIvfTop5 _,
+    // text dedup pair graphs and the component/method frames
+    // q28/q49/q208 read; q221/q225's visual pairs; q108's exact pairs
+    "jaccardPairs" -> ((s: SparkSession, d: String) =>
+      ops.Dedup.jaccardPairs(s, d, threshold = 0.2)),
+    "minhashLshPairs" -> ((s: SparkSession, d: String) =>
+      ops.Dedup.minhashLshPairs(s, d, threshold = 0.2)),
+    "lshGroupRows" -> ops.Dedup.lshGroupRows _,
+    "simhashPairs" -> ops.Dedup.simhashPairs _,
+    "dhashPairs" -> ops.ImageHash.dhashPairs _,
+    "prefixJaccardPairs" -> ((s: SparkSession, d: String) =>
+      ops.Dedup.prefixJaccardPairsStored(s, d, 4, 5)),
+    // PQ model + codes, the IVF-PQ search frame, q191's cell-bounded kNN
+    "pqCodes" -> ((s: SparkSession, d: String) =>
+      Bench.exec(ops.PqOps.pqCodes(s, d))),
+    "ivfPqSearch" -> ops.PqOps.ivfPqSearch _,
+    "cellKnn" -> ops.LabelProp.cellKnn _,
+    // DSIR scores, the embedding Gram (q157/q160, q210/q214), q197's
+    // df-capped copy mass
+    "importanceScores" -> ops.Dsir.importanceScores _,
+    "gramOf" -> ops.PowerIteration.gramOf _,
+    "cappedMass" -> ops.CopyMass.cappedMass _,
+    // the corpus gram stream, its df-capped posting, the winnowed
+    // fingerprints and q155's kept posting; q224's base manifest and
+    // from-scratch audit totals
+    "gramFrame" -> ops.Winnowing.gramFrame _,
+    "keptGrams" -> ops.ExactSubstr.keptGrams _,
+    "fingerprints" -> ops.Winnowing.fingerprints _,
+    "keptFpPosting" -> ops.Winnowing.keptFpPosting _,
+    "baseManifest" -> ops.ArtifactDelta.baseManifest _,
+    "scratchTotals" -> ops.ArtifactDelta.scratchTotals _) ++
+    // per-n word-shingle membership tables + the 3-gram df table
+    // (q179/q180/q219), q227's base counts and audit totals, and the
+    // quality/vocab columns q98/q220 read
+    ops.NoveltyCurve.Ns.map(n => s"splitGrams:$n" ->
+      ((s: SparkSession, d: String) => ops.ShingleStore.splitGrams(s, d, n))) ++ Seq(
+    "df3" -> ops.ShingleStore.df3 _,
+    "baseCounts" -> ops.ShingleDelta.baseCounts _,
+    "scratchFlagTotals" -> ops.ShingleDelta.scratchFlagTotals _,
+    "qualityScored" -> ops.CorpusReports.qualityScored _,
+    "tokenCounts" -> ops.TextAnalysis.tokenCounts _,
+    // curation/decontamination: scored docs (q50/q52/q69), the 5-gram
+    // posting + doc catalog (q65/q66/q69/q163), repetition signals
+    // (q64/q69), the trained BPE (q136/q141), q153's NB predictions
+    "scoredDocs" -> ops.TextAnalysis.scoredDocs _,
+    "fiveGramMeta" -> ops.CorpusSignals.fiveGramMeta _,
+    "fiveGramPosting" -> ops.CorpusSignals.fiveGramPosting _,
+    "repetitionSignals" -> ops.CorpusSignals.repetitionSignals _,
+    "trainedBpe" -> ops.LmTokenizer.trainedBpe _,
+    "sourcePredictions" -> ops.NaiveBayes.sourcePredictions _)
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

@@ -17,11 +17,12 @@ object GraphOps {
 
   /** Early-exit threshold for q93: stop when max |Δrank| < Eps. Sized
     * against the GraphSpec replay gate, not wishfully: on the q90 k-NN
-    * graph maxΔ decays at only ~0.82/round (measured: 9.9e-4 at round 1,
-    * 2.4e-5 at round 10 — ProfPR), so 1e-6 does NOT fire inside the
-    * 10-round budget and the q93 output is bit-identical to the fixed
-    * loop. On a graph that does converge early, exiting at maxΔ < 1e-6
-    * leaves the result within 1e-6·d/(1-d) ≈ 5.7e-6 of the full run —
+    * graph maxΔ decays at only ~0.82/round (measured by a driver-side
+    * scalar replay of the sf0.1 graph: 9.9e-4 at round 1, 2.4e-5 at
+    * round 10), so 1e-6 does NOT fire inside the 10-round budget and
+    * the q93 output is bit-identical to the fixed loop. On a graph that
+    * does converge early, exiting at maxΔ < 1e-6 leaves the result
+    * within 1e-6·d/(1-d) ≈ 5.7e-6 of the full run —
     * inside the replay gate's 1e-5 tolerance by construction.
     */
   val Eps = 1e-6

@@ -56,22 +56,23 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(!ok.contains("shared_build_error"))
   }
 
-  test("per-chain build evidence: sbc names the slowest chain, the detail carries the map") {
+  test("per-artifact build evidence: sba names the slowest artifact, the detail carries the map") {
     // the r19 adjudication gap: a 218s-vs-24.6s build window could not
-    // be attributed to a chain because shared_build was ONE scalar
+    // be attributed to a build because shared_build was ONE scalar
     val results = Seq("q01_x" -> (Right(Seq(1.0)): Either[String, Seq[Double]]))
     val line = Bench.renderLine(results, "/sf", runs = 3, sharedBuildSec = 9.0,
-      slowestChain = Some("chargram"))
-    assert(line.contains(""""sbc":"chargram""""))
-    // no build -> no phantom chain name
+      slowestArtifact = Some("keptGrams"))
+    assert(line.contains(""""sba":"keptGrams""""))
+    // no build -> no phantom artifact name
     assert(!Bench.renderLine(results, "/sf", runs = 3,
-      slowestChain = Some("chargram")).contains("\"sbc\""))
+      slowestArtifact = Some("keptGrams")).contains("\"sba\""))
     val detail = Bench.renderDetail(results, "/sf", runs = 3, sharedBuildSec = 9.0,
-      chainSecs = Seq("ann" -> 3.214, "chargram" -> 8.9))
-    assert(detail.contains(""""shared_build_chains": {"ann": 3.21, "chargram": 8.90}"""))
-    // chain-less runs render an empty map, not invalid JSON
+      artifactSecs = Seq("knnGraphLsh" -> 3.214, "keptGrams" -> 8.9))
+    assert(detail.contains(
+      """"shared_build_artifacts": {"knnGraphLsh": 3.21, "keptGrams": 8.90}"""))
+    // artifact-less runs render an empty map, not invalid JSON
     assert(Bench.renderDetail(results, "/sf", runs = 3, sharedBuildSec = 0.0)
-      .contains(""""shared_build_chains": {}"""))
+      .contains(""""shared_build_artifacts": {}"""))
   }
 
   test("streaming engine counters render in the detail doc") {
@@ -115,12 +116,12 @@ class BenchHarnessSpec extends AnyFunSuite {
     for (results <- Seq(allGood, allBad)) {
       // worst-case residency width: hundreds of RDDs, 6-digit MiB;
       // worst-case load width: 3-char ms() renders per sample;
-      // worst-case build: 3-char time + the longest chain name
+      // worst-case build: 3-char time + the longest artifact name
       val line = Bench.renderLine(results, "/root/testdata/sf0.1", runs = 3,
         sharedBuildSec = 999.0,
         residency = Some(((999, 999999L), (999, 999999L))),
         load = (Some((999.0, 999.0)), Some((999.0, 999.0))),
-        slowestChain = Some("dsir_gram"))
+        slowestArtifact = Some(SparkEntry.sharedArtifacts.map(_._1).maxBy(_.length)))
       assert(!line.contains("\n"), "must be a single line")
       assert(line.length <= 1880,
         s"bench JSON line is ${line.length} chars; the harness captures only the " +

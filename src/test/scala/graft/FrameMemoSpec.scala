@@ -5,10 +5,13 @@ import graft.ops.FrameMemo
 
 /** The build-once contract behind the shared edge lists: memoized only
   * for immutable testdata roots, always materialized, built exactly once
-  * per (session, dir, key).
+  * per (session, dir, key) — in-flight builds included — and pre-built
+  * by a bounded worker pool.
   */
 class FrameMemoSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+  /** A memoizable (immutable testdata) dir. */
+  private val snapshot = "/root/testdata/sf0.001"
 
   test("memoizable covers exactly the immutable roots, with path-separator boundaries") {
     assert(FrameMemo.memoizable("/root/testdata"))
@@ -83,5 +86,96 @@ class FrameMemoSpec extends AnyFunSuite {
     // materialized: consumers may iterate without re-running lineage; a
     // localCheckpoint'ed frame plans as an ExistingRDD scan
     assert(a.queryExecution.executedPlan.toString.contains("ExistingRDD"))
+  }
+
+  test("concurrent callers of one key share one build and one frame") {
+    import spark.implicits._
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    def build() = {
+      builds.incrementAndGet()
+      entered.countDown()
+      release.await(60, TimeUnit.SECONDS)
+      Seq(1, 2, 3).toDF("x")
+    }
+    val key = s"concurrent-spec-${System.nanoTime()}"
+    val got = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
+    def caller(tag: String) = new Thread(() => {
+      got.put(tag, FrameMemo.cached(spark, snapshot, key)(build()))
+      ()
+    })
+    val first = caller("first")
+    first.start()
+    assert(entered.await(60, TimeUnit.SECONDS), "first build never started")
+    // the first build is now held open; the second caller must wait on
+    // it (BLOCKED) rather than run a build of its own (WAITING on the latch)
+    val second = caller("second")
+    second.start()
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (second.getState != Thread.State.BLOCKED &&
+           second.getState != Thread.State.WAITING &&
+           second.getState != Thread.State.TIMED_WAITING &&
+           System.nanoTime() < deadline) Thread.sleep(5)
+    release.countDown()
+    first.join(60000)
+    second.join(60000)
+    assert(builds.get == 1, "an in-flight build must not be started twice")
+    assert(got.get("second") eq got.get("first"), "both callers get the same frame instance")
+  }
+
+  test("a throwing build is not memoized: the next call builds again") {
+    import spark.implicits._
+    val key = s"throw-spec-${System.nanoTime()}"
+    intercept[RuntimeException] {
+      FrameMemo.cached(spark, snapshot, key)(throw new RuntimeException("boom"))
+    }
+    var builds = 0
+    val df = FrameMemo.cached(spark, snapshot, key) {
+      builds += 1; Seq(7).toDF("x")
+    }
+    assert(builds == 1, "the failed build must leave no entry behind")
+    assert(df.count() == 1)
+  }
+
+  test("prebuild: per-entry timings in declared order, bounded workers, failures named") {
+    import java.util.concurrent.atomic.AtomicInteger
+    val running = new AtomicInteger(0)
+    val highWater = new AtomicInteger(0)
+    val finished = new AtomicInteger(0)
+    def entry(name: String, fail: Boolean = false) =
+      name -> ((_: org.apache.spark.sql.SparkSession, _: String) => {
+        highWater.accumulateAndGet(running.incrementAndGet(), math.max)
+        try {
+          Thread.sleep(50)
+          if (fail) throw new IllegalStateException(s"$name failed")
+        } finally { running.decrementAndGet(); finished.incrementAndGet() }
+      })
+    val names = (1 to 12).map(i => s"a$i")
+    FrameMemo.prebuild(spark, "unused_dir", names.map(entry(_))) match {
+      case Right(secs) =>
+        assert(secs.map(_._1) == names, "one timing per entry, in declared order")
+        assert(secs.forall(_._2 >= 0.05))
+      case Left(failed) => fail(s"no entry should fail: $failed")
+    }
+    assert(highWater.get <= FrameMemo.PrebuildWorkers,
+      s"${highWater.get} builds ran at once; the pool has ${FrameMemo.PrebuildWorkers}")
+    assert(highWater.get > 1, "entries must build concurrently")
+    assert(running.get == 0 && finished.get == names.size,
+      "every build has finished when prebuild returns")
+    finished.set(0)
+    val mixed = names.take(3).map(entry(_)) ++ Seq(entry("broken", fail = true)) ++
+      names.drop(3).take(3).map(entry(_))
+    assert(FrameMemo.prebuild(spark, "unused_dir", mixed) == Left(Seq("broken")))
+    assert(running.get == 0 && finished.get == mixed.size,
+      "the other entries still build, and none is running after the call")
+    assert(highWater.get <= FrameMemo.PrebuildWorkers)
+  }
+
+  test("FrameMemo declares exactly one ConcurrentHashMap field (perfbench Classify reads it)") {
+    val fields = Class.forName("graft.ops.FrameMemo$").getDeclaredFields.filter(f =>
+      classOf[java.util.concurrent.ConcurrentHashMap[_, _]].isAssignableFrom(f.getType))
+    assert(fields.length == 1, fields.map(_.getName).mkString(", "))
   }
 }
