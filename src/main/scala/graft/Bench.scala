@@ -61,8 +61,8 @@ object Bench {
     * sorted by name. A throwing query must NOT be billed as a
     * (near-zero) time — that would make the bench total IMPROVE when a
     * regression breaks a query — so a failure is a `Left(exception
-    * class)` for that query, never a swallowed fast run. Pinned by
-    * BenchHarnessSpec.
+    * class)` for that query, never a swallowed fast run; the exception
+    * itself goes to stderr. Pinned by BenchHarnessSpec.
     */
   def timeQueries(spark: SparkSession, sfDir: String,
                   queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
@@ -79,7 +79,11 @@ object Bench {
         val t0 = System.nanoTime()
         if (err.isEmpty)
           try exec(fn(spark, sfDir))
-          catch { case t: Throwable => err = Some(t.getClass.getSimpleName) }
+          catch {
+            case t: Throwable =>
+              System.err.println(s"[bench] $name failed: $t")
+              err = Some(t.getClass.getSimpleName)
+          }
         (System.nanoTime() - t0) / 1e9
       }
       name -> err.toLeft(times)
@@ -144,24 +148,23 @@ object Bench {
     // jaccard/minhash pair graphs, gram postings) are built once and read
     // by many queries, so inside the per-query loop the one run that
     // builds is discarded by the median — without this line the build
-    // cost would be billed to no query at all. Only when the memo will
-    // actually retain the artifacts: on a non-memoizable dir every
-    // consumer rebuilds per run anyway, and pre-paying would bill the
-    // same work twice. A FAILED build reports its own marker rather than
-    // folding partial time into the total: the memo is unpopulated and
-    // every consumer rebuilds per run (billed in their own medians).
+    // cost would be billed to no query at all. On a dir the memo does
+    // not retain, prebuild builds nothing (every consumer rebuilds per
+    // run anyway, and pre-paying would bill the same work twice), so
+    // shared_build is 0. A FAILED build reports its own marker rather
+    // than folding partial time into the total: the memo is unpopulated
+    // and every consumer rebuilds per run (billed in their own medians).
     // prebuild joins its workers before returning, so no build job
     // overlaps the timed loop.
+    val tB = System.nanoTime()
     val (sharedBuildSec, sharedBuildFailed, artifactSecs) =
-      if (!FrameMemo.memoizable(sfDir)) (0.0, false, Seq.empty[(String, Double)])
-      else {
-        val tB = System.nanoTime()
-        FrameMemo.prebuild(spark, sfDir, SparkEntry.sharedArtifacts) match {
-          case Right(secs) => ((System.nanoTime() - tB) / 1e9, false, secs)
-          case Left(failed) =>
-            System.err.println(s"[bench] shared_build FAILED artifacts: ${failed.mkString(", ")}")
-            (0.0, true, Seq.empty[(String, Double)])
-        }
+      FrameMemo.prebuild(spark, sfDir, SparkEntry.sharedArtifacts) match {
+        case Right(secs) if secs.isEmpty => (0.0, false, secs)
+        case Right(secs) => ((System.nanoTime() - tB) / 1e9, false, secs)
+        case Left(failed) =>
+          System.err.println("[bench] shared_build FAILED artifacts: " +
+            failed.map { case (name, t) => s"$name: $t" }.mkString(", "))
+          (0.0, true, Seq.empty[(String, Double)])
       }
     // untimed warmup AFTER the shared build (r19 verdict #4): it used to
     // run first, so the first timed queries (q01/q02 in sorted order)
@@ -236,8 +239,8 @@ object Bench {
     val short = if (shortKeys.values.toSet.size == shortKeys.size) shortKeys
                 else shortKeys.keys.map(k => k -> k).toMap // collision: keep full names
     // failures must not blow the window either: a failed query appears
-    // ONLY as its short key in errors (exception details are in the sbt
-    // log), successes only in queries — so every success/failure mix
+    // ONLY as its short key in errors (timeQueries prints the exception
+    // to stderr), successes only in queries — so every success/failure mix
     // renders shorter than the all-success line the spec budgets
     // TOP-[[Shown]] SLOWEST only on the line (registry growth outran
     // the capture window at ~186 queries even with every byte-trim —

@@ -174,8 +174,7 @@ object SparkEntry {
     "prefixJaccardPairs" -> ((s: SparkSession, d: String) =>
       ops.Dedup.prefixJaccardPairsStored(s, d, 4, 5)),
     // PQ model + codes, the IVF-PQ search frame, q191's cell-bounded kNN
-    "pqCodes" -> ((s: SparkSession, d: String) =>
-      Bench.exec(ops.PqOps.pqCodes(s, d))),
+    "pqCodes" -> ops.PqOps.residCodes _,
     "ivfPqSearch" -> ops.PqOps.ivfPqSearch _,
     "cellKnn" -> ops.LabelProp.cellKnn _,
     // DSIR scores, the embedding Gram (q157/q160, q210/q214), q197's

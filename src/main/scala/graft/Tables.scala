@@ -23,10 +23,11 @@ object Tables {
     normalizeTs(table(s, d, "lineitem"), "l_shipdate")
 
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark has no native
-    * type for. With `spark.sql.legacy.parquet.nanosAsLong=true` (set in
-    * Verify/Bench/tests) it scans as LongType nanos; normalize to a
-    * microsecond TimestampType column here so downstream code sees one
-    * schema. Day/hour/month truncations are unaffected by the ns→µs cut.
+    * type for. With `spark.sql.legacy.parquet.nanosAsLong=true` (set by
+    * `LocalSession` and `SparkTestSession`) it scans as LongType nanos;
+    * normalize to a microsecond TimestampType column here so downstream
+    * code sees one schema. Day/hour/month truncations are unaffected by
+    * the ns→µs cut.
     */
   def events(s: SparkSession, d: String): DataFrame =
     normalizeTs(table(s, d, "events"), "ts")
@@ -40,9 +41,10 @@ object Tables {
     *    double's 2^53 mantissa; `(ts / 1000L).cast("long")` came back ±1µs on
     *    ~12% of rows (caught by q58's session bounds).
     *  - TimestampNTZType (parquet timestamp[us] without tz): cast to
-    *    TimestampType. Session TZ is pinned UTC everywhere (Verify/Bench/
-    *    tests), so the instant is unchanged and matches DuckDB's
-    *    `CAST(ts AS TIMESTAMP)` oracle semantics.
+    *    TimestampType. Session TZ is pinned UTC everywhere (set by
+    *    `LocalSession` and `SparkTestSession`), so the instant is
+    *    unchanged and matches DuckDB's `CAST(ts AS TIMESTAMP)` oracle
+    *    semantics.
     *  - TimestampType: pass through.
     */
   private[graft] def normalizeTs(df: DataFrame, c: String): DataFrame = {

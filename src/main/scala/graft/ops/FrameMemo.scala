@@ -2,33 +2,36 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Build-once materialization for expensive frames shared across
-  * registered queries: candidate-pair graphs, k-NN edge lists — anything
-  * several queries would otherwise each rebuild from scratch
-  * (q43/q68/q90/q93 all consumed the same LSH bucket self-join; the r11
-  * audit billed that build 3× across one bench pass).
+/** Build-once memo for everything several registered queries would
+  * otherwise each rebuild from scratch: materialized frames
+  * (candidate-pair graphs, k-NN edge lists — q43/q68/q90/q93 all
+  * consumed the same LSH bucket self-join; the r11 audit billed that
+  * build 3× across one bench pass) and driver-side values (the embedding
+  * Gram, the trained WordPiece vocabulary, the decoded PQ model, a
+  * passed broadcast-size guard).
   *
-  * `cached` ALWAYS returns a `localCheckpoint`ed (materialized) frame, so
-  * consumers that iterate over it (connected components, PageRank) never
-  * need their own defensive checkpoint. For dirs under the driver's
-  * read-only testdata roots the materialized frame is also memoized per
-  * (session, dir, key) and shared by every later caller. At 100 TB the
-  * equivalent is a stored edge-list/manifest table built once per corpus
-  * snapshot (the DataSkipping layout-build contract) — this is the
-  * in-session analog, and both rest on the same contract: THE INPUT DIR
-  * IS AN IMMUTABLE SNAPSHOT. The guard enforces that contract rather
-  * than assuming it: a test-scratch dir can be rewritten between
-  * callers, and a memoized checkpoint would silently keep serving the
-  * old bytes — so non-immutable dirs materialize per call, uncached.
+  * [[value]] memoizes any value per (session, dir, key); [[cached]] is
+  * its frame case and ALWAYS returns a `localCheckpoint`ed
+  * (materialized) frame, so consumers that iterate over it (connected
+  * components, PageRank) never need their own defensive checkpoint.
+  * Only dirs under the read-only testdata roots ([[ImmutableRoots]]) are
+  * memoized.
+  * At 100 TB the equivalent is a stored edge-list/manifest table built
+  * once per corpus snapshot (the DataSkipping layout-build contract) —
+  * this is the in-session analog, and both rest on the same contract:
+  * THE INPUT DIR IS AN IMMUTABLE SNAPSHOT. The guard enforces that
+  * contract rather than assuming it: a test-scratch dir can be rewritten
+  * between callers, and a memoized value would silently keep serving the
+  * old bytes — so non-snapshot dirs build per call, uncached.
   *
   * Lifetime: entries live until the JVM exits — deliberate for the
   * bench/verify/test processes this serves (the artifact set is a
-  * handful of named edge lists per dir, block-store-small), and a
-  * stopped session's entries die with the same JVM. Each key builds
+  * handful of named edge lists and KiB-scale driver values per dir), and
+  * a stopped session's entries die with the same JVM. Each key builds
   * exactly once, in-flight builds included: `computeIfAbsent` only
   * creates the key's [[Entry]], and the build runs in the entry's lazy
   * val OUTSIDE any map lock, so a memoized build may itself call back
-  * into `cached` (knnGraphLsh builds on the memoized pair frame), and a
+  * into the memo (knnGraphLsh builds on the memoized pair frame), and a
   * second caller of a key that is still building waits for that build
   * instead of starting its own.
   */
@@ -37,19 +40,16 @@ object FrameMemo {
   /** Dirs the driver guarantees immutable (TESTDATA.md: read-only). */
   private val ImmutableRoots = Seq("/root/testdata")
 
-  /** Whether frames built from `dir` are shared across callers — public
-    * so Bench only runs (and bills) its shared-build pre-pass when the
-    * memo will actually retain the result.
-    */
-  def memoizable(dir: String): Boolean =
+  /** Whether values built from `dir` are shared across callers. */
+  private[graft] def memoizable(dir: String): Boolean =
     ImmutableRoots.exists(r => dir == r || dir.startsWith(r + "/"))
 
-  /** One memoized artifact: the first reader of `frame` runs the build,
+  /** One memoized value: the first reader of `value` runs the build,
     * concurrent readers block on the lazy val until it finishes. A build
-    * that throws leaves `frame` unset, and `cached` drops the entry.
+    * that throws leaves `value` unset, and [[value]] drops the entry.
     */
-  private final class Entry(build: => DataFrame) {
-    lazy val frame: DataFrame = materializeReleasingScratch(build)
+  private final class Entry(build: => Any) {
+    lazy val value: Any = build
   }
 
   /** The only `ConcurrentHashMap` field: perfbench's `Classify` finds
@@ -103,15 +103,22 @@ object FrameMemo {
     }
   }
 
-  def cached(s: SparkSession, dir: String, key: String)
-            (build: => DataFrame): DataFrame =
-    if (!memoizable(dir)) materializeReleasingScratch(build)
+  /** `build`'s result, built once per (session, dir, key) on a snapshot
+    * dir and on every call elsewhere. A build that throws is not kept:
+    * the next call builds again. Keys are shared with [[cached]].
+    */
+  def value[T](s: SparkSession, dir: String, key: String)(build: => T): T =
+    if (!memoizable(dir)) build
     else {
       val k = (s, s"$dir|$key")
       val e = memo.computeIfAbsent(k, _ => new Entry(build))
-      try e.frame
+      try e.value.asInstanceOf[T]
       catch { case t: Throwable => memo.remove(k, e); throw t }
     }
+
+  def cached(s: SparkSession, dir: String, key: String)
+            (build: => DataFrame): DataFrame =
+    value(s, dir, key)(materializeReleasingScratch(build))
 
   /** Worker threads [[prebuild]] runs the artifact list on. Builds wait
     * on the driver far more than they use CPU, so one thread serializes
@@ -127,30 +134,33 @@ object FrameMemo {
     * Returns every entry's wall seconds in list order — from the moment
     * a worker takes it until its builder returns, so time spent waiting
     * on another worker's dependency counts — or, if any builder threw,
-    * the failed names. Every worker is joined before this returns, so no
-    * build job outlives the call.
+    * each failed name with its cause. Every worker is joined before this
+    * returns, so no build job outlives the call. A dir the memo would not
+    * retain builds nothing: `Right(Seq.empty)`.
     */
   def prebuild(spark: SparkSession, dir: String,
                artifacts: Seq[(String, (SparkSession, String) => Any)])
-      : Either[Seq[String], Seq[(String, Double)]] = {
-    val done = new Array[Either[String, (String, Double)]](artifacts.size)
-    val next = new java.util.concurrent.atomic.AtomicInteger(0)
-    val workers = Seq.tabulate(PrebuildWorkers) { w =>
-      new Thread(() => {
-        var i = next.getAndIncrement()
-        while (i < artifacts.size) {
-          val (name, build) = artifacts(i)
-          val t0 = System.nanoTime()
-          done(i) =
-            try { build(spark, dir); Right(name -> (System.nanoTime() - t0) / 1e9) }
-            catch { case _: Throwable => Left(name) }
-          i = next.getAndIncrement()
-        }
-      }, s"frame-memo-prebuild-$w")
+      : Either[Seq[(String, Throwable)], Seq[(String, Double)]] =
+    if (!memoizable(dir)) Right(Seq.empty)
+    else {
+      val done = new Array[Either[(String, Throwable), (String, Double)]](artifacts.size)
+      val next = new java.util.concurrent.atomic.AtomicInteger(0)
+      val workers = Seq.tabulate(PrebuildWorkers) { w =>
+        new Thread(() => {
+          var i = next.getAndIncrement()
+          while (i < artifacts.size) {
+            val (name, build) = artifacts(i)
+            val t0 = System.nanoTime()
+            done(i) =
+              try { build(spark, dir); Right(name -> (System.nanoTime() - t0) / 1e9) }
+              catch { case t: Throwable => Left(name -> t) }
+            i = next.getAndIncrement()
+          }
+        }, s"frame-memo-prebuild-$w")
+      }
+      workers.foreach(_.start())
+      workers.foreach(_.join())
+      val failed = done.toSeq.collect { case Left(f) => f }
+      if (failed.nonEmpty) Left(failed) else Right(done.toSeq.collect { case Right(t) => t })
     }
-    workers.foreach(_.start())
-    workers.foreach(_.join())
-    val failed = done.toSeq.collect { case Left(name) => name }
-    if (failed.nonEmpty) Left(failed) else Right(done.toSeq.collect { case Right(t) => t })
-  }
 }

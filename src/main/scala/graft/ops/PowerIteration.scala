@@ -74,19 +74,12 @@ object PowerIteration {
     out.result()
   }
 
-  /** Gram memo per (session, dir) — q210 and q214 share the identical
-    * matrix, and the dim²-key shuffle is the only corpus-scale work
-    * either query does. Immutable-dir-guarded like FrameMemo (a spec
-    * fixture dir can be rewritten between calls); the model-edge map
-    * is ≤64² longs, trivially resident. Bench's shared pre-build
-    * prices the one build honestly.
+  /** The embedding Gram matrix as a driver-side map (≤64² longs),
+    * FrameMemo'd — q210 and q214 share the identical matrix, and the
+    * dim²-key shuffle is the only corpus-scale work either query does.
     */
-  private val gramMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Map[(Int, Int), Long]]()
-
   private[graft] def gramOf(s: SparkSession, d: String): Map[(Int, Int), Long] =
-    if (!FrameMemo.memoizable(d)) buildGram(s, d)
-    else gramMemo.computeIfAbsent((s, d), _ => buildGram(s, d))
+    FrameMemo.value(s, d, "gram")(buildGram(s, d))
 
   /** The Gram CELL frame (i, j, g, n, max|q_i|, max|q_j|) as a FrameMemo
     * artifact. r21 plan change (guide §2.3/§2.4 "aggregate before you

@@ -34,7 +34,7 @@ import graft.functions.TextFunctions.shingles
   * the key itself crosses the engine boundary, so every consumer's
   * DuckDB oracle replays membership bit-for-bit. Builds are priced in
   * Bench's shared_build like the char-gram artifacts (Winnowing
-  * .gramFrame chain); on non-memoizable scratch dirs each consumer
+  * .gramFrame chain); on non-snapshot scratch dirs each consumer
   * call materializes per invocation, uncached (FrameMemo contract).
   */
 object ShingleStore {

@@ -131,15 +131,11 @@ object WordPiece {
   /** The trained vocabulary = the training corpus's initial symbol
     * alphabet (plain + `##`-marked forms) ∪ every merged output — what a
     * WordPiece trainer writes to vocab.txt. Driver-side model (alphabet
-    * + [[Rounds]] rows — the IVF collected-model edge); memoized per
-    * immutable dir so q161/q162 train once per corpus (the FrameMemo
-    * contract, scalar-side).
+    * + [[Rounds]] rows — the IVF collected-model edge), FrameMemo'd so
+    * q161/q162 train once per corpus.
     */
-  private val vocabMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Set[String]]()
-
-  private[graft] def trainedVocab(s: SparkSession, d: String): Set[String] = {
-    def build: Set[String] = {
+  private[graft] def trainedVocab(s: SparkSession, d: String): Set[String] =
+    FrameMemo.value(s, d, "wordpieceVocab") {
       val words = wordTypes(s, d)
       val alphabet = wpSplit(words).select("sym").distinct()
         .collect().map(_.getString(0)).toSet
@@ -147,18 +143,6 @@ object WordPiece {
         .select("merged").collect().map(_.getString(0)).toSet
       alphabet ++ merged
     }
-    if (!FrameMemo.memoizable(d)) build
-    else {
-      val k = (s, d)
-      val hit = vocabMemo.get(k)
-      if (hit != null) hit
-      else {
-        val built = build
-        val raced = vocabMemo.putIfAbsent(k, built)
-        if (raced != null) raced else built
-      }
-    }
-  }
 
   /** Greedy longest-match-first WordPiece encode of one word (code-point
     * walk): at each position take the LONGEST vocab piece matching the

@@ -20,8 +20,16 @@ class BenchHarnessSpec extends AnyFunSuite {
         s.range(10).toDF("id").select(
           when(col("id") >= 0, raise_error(lit("deliberately broken")))
             .otherwise(col("id")).as("id"))))
-    val results = Bench.timeQueries(spark, "unused_dir", qs, runs = 2).toMap
+    val captured = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(captured, true))
+    val results =
+      try Bench.timeQueries(spark, "unused_dir", qs, runs = 2).toMap
+      finally System.setErr(stderr)
     assert(results("broken_query").isLeft, "broken query must be reported as err")
+    val err = captured.toString
+    assert(err.contains("[bench] broken_query failed:") && err.contains("deliberately broken"),
+      s"the failure's cause must reach stderr: $err")
     results("good_query") match {
       case Right(ts) =>
         assert(ts.length == 2, "one raw entry per run")

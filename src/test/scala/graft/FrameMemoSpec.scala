@@ -3,10 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.FrameMemo
 
-/** The build-once contract behind the shared edge lists: memoized only
-  * for immutable testdata roots, always materialized, built exactly once
-  * per (session, dir, key) — in-flight builds included — and pre-built
-  * by a bounded worker pool.
+/** The build-once contract behind the shared edge lists and driver-side
+  * values: memoized only for immutable testdata roots, frames always
+  * materialized, built exactly once per (session, dir, key) — in-flight
+  * builds included — and pre-built by a bounded worker pool.
   */
 class FrameMemoSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -88,22 +88,23 @@ class FrameMemoSpec extends AnyFunSuite {
     assert(a.queryExecution.executedPlan.toString.contains("ExistingRDD"))
   }
 
-  test("concurrent callers of one key share one build and one frame") {
-    import spark.implicits._
+  /** Two threads call `memo` on one key while a latch holds the first
+    * build of `make` open; returns the build count and both results.
+    */
+  private def raceOneKey[T <: AnyRef](make: () => T)(memo: (() => T) => T): (Int, T, T) = {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val entered = new CountDownLatch(1)
     val release = new CountDownLatch(1)
-    def build() = {
+    def build(): T = {
       builds.incrementAndGet()
       entered.countDown()
       release.await(60, TimeUnit.SECONDS)
-      Seq(1, 2, 3).toDF("x")
+      make()
     }
-    val key = s"concurrent-spec-${System.nanoTime()}"
-    val got = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
+    val got = new java.util.concurrent.ConcurrentHashMap[String, T]()
     def caller(tag: String) = new Thread(() => {
-      got.put(tag, FrameMemo.cached(spark, snapshot, key)(build()))
+      got.put(tag, memo(() => build()))
       ()
     })
     val first = caller("first")
@@ -121,8 +122,16 @@ class FrameMemoSpec extends AnyFunSuite {
     release.countDown()
     first.join(60000)
     second.join(60000)
-    assert(builds.get == 1, "an in-flight build must not be started twice")
-    assert(got.get("second") eq got.get("first"), "both callers get the same frame instance")
+    (builds.get, got.get("first"), got.get("second"))
+  }
+
+  test("concurrent callers of one key share one build and one frame") {
+    import spark.implicits._
+    val key = s"concurrent-spec-${System.nanoTime()}"
+    val (builds, first, second) = raceOneKey(() => Seq(1, 2, 3).toDF("x"))(
+      build => FrameMemo.cached(spark, snapshot, key)(build()))
+    assert(builds == 1, "an in-flight build must not be started twice")
+    assert(second eq first, "both callers get the same frame instance")
   }
 
   test("a throwing build is not memoized: the next call builds again") {
@@ -153,7 +162,7 @@ class FrameMemoSpec extends AnyFunSuite {
         } finally { running.decrementAndGet(); finished.incrementAndGet() }
       })
     val names = (1 to 12).map(i => s"a$i")
-    FrameMemo.prebuild(spark, "unused_dir", names.map(entry(_))) match {
+    FrameMemo.prebuild(spark, snapshot, names.map(entry(_))) match {
       case Right(secs) =>
         assert(secs.map(_._1) == names, "one timing per entry, in declared order")
         assert(secs.forall(_._2 >= 0.05))
@@ -167,10 +176,49 @@ class FrameMemoSpec extends AnyFunSuite {
     finished.set(0)
     val mixed = names.take(3).map(entry(_)) ++ Seq(entry("broken", fail = true)) ++
       names.drop(3).take(3).map(entry(_))
-    assert(FrameMemo.prebuild(spark, "unused_dir", mixed) == Left(Seq("broken")))
+    FrameMemo.prebuild(spark, snapshot, mixed) match {
+      case Left(Seq(("broken", e: IllegalStateException))) =>
+        assert(e.getMessage == "broken failed", "the failure keeps its cause")
+      case other => fail(s"expected only `broken` with its cause, got $other")
+    }
     assert(running.get == 0 && finished.get == mixed.size,
       "the other entries still build, and none is running after the call")
     assert(highWater.get <= FrameMemo.PrebuildWorkers)
+  }
+
+  test("prebuild on a dir the memo does not retain builds nothing") {
+    var builds = 0
+    val entries = Seq("a" -> ((_: org.apache.spark.sql.SparkSession, _: String) => builds += 1))
+    assert(FrameMemo.prebuild(spark, "/tmp/graft_memo_scratch", entries) == Right(Seq.empty))
+    assert(builds == 0)
+  }
+
+  test("value: concurrent callers of one key share one build and one instance") {
+    val key = s"value-concurrent-spec-${System.nanoTime()}"
+    val (builds, first, second) = raceOneKey(() => new Object)(
+      build => FrameMemo.value(spark, snapshot, key)(build()))
+    assert(builds == 1, "an in-flight build must not be started twice")
+    assert(second eq first, "both callers get the same instance")
+  }
+
+  test("value: a throwing build is not memoized, and one that keeps throwing throws every time") {
+    val key = s"value-throw-spec-${System.nanoTime()}"
+    var attempts = 0
+    def broken(): Int = { attempts += 1; throw new IllegalStateException("boom") }
+    intercept[IllegalStateException](FrameMemo.value(spark, snapshot, key)(broken()))
+    intercept[IllegalStateException](FrameMemo.value(spark, snapshot, key)(broken()))
+    assert(attempts == 2, "a failed build must leave no entry behind")
+    assert(FrameMemo.value(spark, snapshot, key)(7) == 7)
+    assert(FrameMemo.value(spark, snapshot, key)(8) == 7, "a successful build is kept")
+  }
+
+  test("value: a non-memoizable dir builds on every call") {
+    var builds = 0
+    def build() = { builds += 1; new Object }
+    val a = FrameMemo.value(spark, "/tmp/graft_memo_scratch", "v")(build())
+    val b = FrameMemo.value(spark, "/tmp/graft_memo_scratch", "v")(build())
+    assert(builds == 2)
+    assert(!(a eq b))
   }
 
   test("FrameMemo declares exactly one ConcurrentHashMap field (perfbench Classify reads it)") {

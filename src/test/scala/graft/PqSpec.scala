@@ -82,15 +82,18 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("model memo: immutable-root dirs serve ONE model instance (FrameMemo contract)") {
-    // the driver-model memo (modelOf) leans on the same ImmutableRoots
-    // contract as FrameMemo.cached — pin that a memoizable dir returns
-    // the identical model object (not merely an equal retrain), so a
-    // future eviction/keying change that silently starts retraining per
-    // call (or serving per-session copies) fails here
+    // pin that a memoizable dir returns the identical model object (not
+    // merely an equal retrain), so a future eviction/keying change that
+    // silently starts retraining per call fails here; the memo is per
+    // session, so a new session gets its own instance
     val m1 = PqOps.modelOf(spark, d)
     val m2 = PqOps.modelOf(spark, d)
     assert(m1.asInstanceOf[AnyRef] eq m2.asInstanceOf[AnyRef],
       "memoizable dir must serve the cached model instance")
+    val other = PqOps.modelOf(spark.newSession(), d)
+    assert(!(other.asInstanceOf[AnyRef] eq m1.asInstanceOf[AnyRef]),
+      "a new session must build its own model")
+    assert(other == m1, "the rebuilt model equals the first")
   }
 
   test("residuals: reconstruction error strictly below raw quantization energy") {
