@@ -2,6 +2,22 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** One registry module: every ops/sources/streaming object that
+  * registers queries extends this, and [[SparkEntry.modules]] lists the
+  * object once, so a module's queries, oracle SQL and rows-only set are
+  * registered together or not at all. RegistryDocsSpec's partition test
+  * (oracle + rows-only = registered) catches a query with neither.
+  */
+trait QueryModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+
+  /** DuckDB SQL per query whose semantics are portable ANSI SQL. */
+  def oracleSql: Map[String, String]
+
+  /** Queries registered WITHOUT oracle SQL. */
+  def rowsOnly: Set[String] = Set.empty
+}
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` is the full operator surface (SURVEY.md §2 inventory plus the
@@ -10,112 +26,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  /** One registry module: the (queries, oracleSql, rowsOnly) triple every
-    * ops/sources/streaming object exposes. The registry is the fold of
-    * [[modules]], so registering a new module is ONE Seq entry — the
-    * r16 shape (three separate 69-term `++` expressions) is where q156's
-    * wiring miss happened: a module could be added to `queries` but not
-    * `oracleSql`/`rowsOnlyQueries`. A mis-wired triple cannot ship
-    * silently: RegistryDocsSpec's partition test (oracle + rows-only =
-    * registered, subset checks) fails on any queries/oracle mismatch,
-    * and its QUERIES.md phantom-row test fails if a module is dropped
-    * from the Seq entirely.
-    */
-  final case class QueryModule(
-      queries: Map[String, (SparkSession, String) => DataFrame],
-      oracleSql: Map[String, String],
-      rowsOnly: Set[String])
-
-  private def m(
-      q: Map[String, (SparkSession, String) => DataFrame],
-      o: Map[String, String],
-      r: Set[String] = Set.empty): QueryModule = QueryModule(q, o, r)
-
-  /** Every registered module, one line each (Dedup/SimilaritySearch/
-    * EventsOps expose `allQueries` = base ++ FrameMemo-backed extras).
-    */
+  /** Every registered module. */
   private[graft] val modules: Seq[QueryModule] = Seq(
-    m(ops.ParityQueries.queries, ops.ParityQueries.oracleSql, ops.ParityQueries.rowsOnly),
-    m(ops.TextAnalysis.queries, ops.TextAnalysis.oracleSql, ops.TextAnalysis.rowsOnly),
-    m(ops.Dedup.allQueries, ops.Dedup.oracleSql, ops.Dedup.rowsOnly),
-    m(ops.SimilaritySearch.allQueries, ops.SimilaritySearch.oracleSql, ops.SimilaritySearch.rowsOnly),
-    m(ops.EventsOps.allQueries, ops.EventsOps.oracleSql, ops.EventsOps.rowsOnly),
-    m(ops.Multimodal.queries, ops.Multimodal.oracleSql, ops.Multimodal.rowsOnly),
-    m(ops.AnalyticsExtras.queries, ops.AnalyticsExtras.oracleSql, ops.AnalyticsExtras.rowsOnly),
-    m(ops.Sampling.queries, ops.Sampling.oracleSql, ops.Sampling.rowsOnly),
-    m(ops.CorpusSignals.queries, ops.CorpusSignals.oracleSql, ops.CorpusSignals.rowsOnly),
-    m(ops.EmbeddingOps.queries, ops.EmbeddingOps.oracleSql, ops.EmbeddingOps.rowsOnly),
-    m(ops.CorpusPrep.queries, ops.CorpusPrep.oracleSql, ops.CorpusPrep.rowsOnly),
-    m(ops.LakehouseOps.queries, ops.LakehouseOps.oracleSql, ops.LakehouseOps.rowsOnly),
-    m(ops.IntervalOps.queries, ops.IntervalOps.oracleSql, ops.IntervalOps.rowsOnly),
-    m(ops.CorpusReports.queries, ops.CorpusReports.oracleSql, ops.CorpusReports.rowsOnly),
-    m(ops.GraphOps.queries, ops.GraphOps.oracleSql, ops.GraphOps.rowsOnly),
-    m(sources.Layout.queries, sources.Layout.oracleSql, sources.Layout.rowsOnly),
-    m(sources.DataSkipping.queries, sources.DataSkipping.oracleSql, sources.DataSkipping.rowsOnly),
-    m(ops.ScaleOps.queries, ops.ScaleOps.oracleSql, ops.ScaleOps.rowsOnly),
-    m(ops.SegmentDedup.queries, ops.SegmentDedup.oracleSql, ops.SegmentDedup.rowsOnly),
-    m(streaming.StreamingQueries.queries, streaming.StreamingQueries.oracleSql, streaming.StreamingQueries.rowsOnly),
-    m(ops.ProfileOps.queries, ops.ProfileOps.oracleSql, ops.ProfileOps.rowsOnly),
-    m(ops.ClusterOps.queries, ops.ClusterOps.oracleSql, ops.ClusterOps.rowsOnly),
-    m(ops.LmTokenizer.queries, ops.LmTokenizer.oracleSql, ops.LmTokenizer.rowsOnly),
-    m(ops.PqOps.queries, ops.PqOps.oracleSql, ops.PqOps.rowsOnly),
-    m(ops.Retrieval.queries, ops.Retrieval.oracleSql, ops.Retrieval.rowsOnly),
-    m(ops.NaiveBayes.queries, ops.NaiveBayes.oracleSql, ops.NaiveBayes.rowsOnly),
-    m(ops.Winnowing.queries, ops.Winnowing.oracleSql, ops.Winnowing.rowsOnly),
-    m(ops.UnigramLm.queries, ops.UnigramLm.oracleSql, ops.UnigramLm.rowsOnly),
-    m(ops.Dsir.queries, ops.Dsir.oracleSql, ops.Dsir.rowsOnly),
-    m(ops.Mining.queries, ops.Mining.oracleSql, ops.Mining.rowsOnly),
-    m(ops.WordPiece.queries, ops.WordPiece.oracleSql, ops.WordPiece.rowsOnly),
-    m(ops.SymSpell.queries, ops.SymSpell.oracleSql, ops.SymSpell.rowsOnly),
-    m(ops.LinearProbe.queries, ops.LinearProbe.oracleSql, ops.LinearProbe.rowsOnly),
-    m(ops.QualityBuckets.queries, ops.QualityBuckets.oracleSql, ops.QualityBuckets.rowsOnly),
-    m(ops.CountMin.queries, ops.CountMin.oracleSql, ops.CountMin.rowsOnly),
-    m(ops.Chunking.queries, ops.Chunking.oracleSql, ops.Chunking.rowsOnly),
-    m(ops.QlRetrieval.queries, ops.QlRetrieval.oracleSql, ops.QlRetrieval.rowsOnly),
-    m(ops.ExactSubstr.queries, ops.ExactSubstr.oracleSql, ops.ExactSubstr.rowsOnly),
-    m(ops.EpochAllocation.queries, ops.EpochAllocation.oracleSql, ops.EpochAllocation.rowsOnly),
-    m(ops.BatchPlan.queries, ops.BatchPlan.oracleSql, ops.BatchPlan.rowsOnly),
-    m(ops.VocabCoverage.queries, ops.VocabCoverage.oracleSql, ops.VocabCoverage.rowsOnly),
-    m(ops.ClassifierEval.queries, ops.ClassifierEval.oracleSql, ops.ClassifierEval.rowsOnly),
-    m(ops.NoveltyCurve.queries, ops.NoveltyCurve.oracleSql, ops.NoveltyCurve.rowsOnly),
-    m(ops.QualitySweep.queries, ops.QualitySweep.oracleSql, ops.QualitySweep.rowsOnly),
-    m(ops.CentroidMatrix.queries, ops.CentroidMatrix.oracleSql, ops.CentroidMatrix.rowsOnly),
-    m(ops.Collocations.queries, ops.Collocations.oracleSql, ops.Collocations.rowsOnly),
-    m(ops.DataCard.queries, ops.DataCard.oracleSql, ops.DataCard.rowsOnly),
-    m(ops.VectorCard.queries, ops.VectorCard.oracleSql, ops.VectorCard.rowsOnly),
-    m(ops.SplitBalance.queries, ops.SplitBalance.oracleSql, ops.SplitBalance.rowsOnly),
-    m(ops.SourceProfile.queries, ops.SourceProfile.oracleSql, ops.SourceProfile.rowsOnly),
-    m(ops.LabelDispersion.queries, ops.LabelDispersion.oracleSql, ops.LabelDispersion.rowsOnly),
-    m(ops.SourceEntropy.queries, ops.SourceEntropy.oracleSql, ops.SourceEntropy.rowsOnly),
-    m(ops.LabelProp.queries, ops.LabelProp.oracleSql, ops.LabelProp.rowsOnly),
-    m(ops.ZipfFit.queries, ops.ZipfFit.oracleSql, ops.ZipfFit.rowsOnly),
-    m(ops.HeapsCurve.queries, ops.HeapsCurve.oracleSql, ops.HeapsCurve.rowsOnly),
-    m(ops.CellValidity.queries, ops.CellValidity.oracleSql, ops.CellValidity.rowsOnly),
-    m(ops.VocabOverlap.queries, ops.VocabOverlap.oracleSql, ops.VocabOverlap.rowsOnly),
-    m(ops.CondEntropy.queries, ops.CondEntropy.oracleSql, ops.CondEntropy.rowsOnly),
-    m(ops.CopyMass.queries, ops.CopyMass.oracleSql, ops.CopyMass.rowsOnly),
-    m(ops.BatchMix.queries, ops.BatchMix.oracleSql, ops.BatchMix.rowsOnly),
-    m(ops.QualityQuartiles.queries, ops.QualityQuartiles.oracleSql, ops.QualityQuartiles.rowsOnly),
-    m(ops.SkewCensus.queries, ops.SkewCensus.oracleSql, ops.SkewCensus.rowsOnly),
-    m(ops.Retention.queries, ops.Retention.oracleSql, ops.Retention.rowsOnly),
-    m(ops.RfmSegments.queries, ops.RfmSegments.oracleSql, ops.RfmSegments.rowsOnly),
-    m(ops.BasketAffinity.queries, ops.BasketAffinity.oracleSql, ops.BasketAffinity.rowsOnly),
-    m(ops.NumericCorr.queries, ops.NumericCorr.oracleSql, ops.NumericCorr.rowsOnly),
-    m(ops.AbcPareto.queries, ops.AbcPareto.oracleSql, ops.AbcPareto.rowsOnly),
-    m(ops.YoyGrowth.queries, ops.YoyGrowth.oracleSql, ops.YoyGrowth.rowsOnly),
-    m(ops.GiniConcentration.queries, ops.GiniConcentration.oracleSql, ops.GiniConcentration.rowsOnly),
-    m(ops.DedupReport.queries, ops.DedupReport.oracleSql, ops.DedupReport.rowsOnly),
-    m(ops.PowerIteration.queries, ops.PowerIteration.oracleSql, ops.PowerIteration.rowsOnly),
-    m(ops.TriangleCount.queries, ops.TriangleCount.oracleSql, ops.TriangleCount.rowsOnly),
-    m(ops.ImageHash.queries, ops.ImageHash.oracleSql, ops.ImageHash.rowsOnly),
-    m(ops.AudioFeatures.queries, ops.AudioFeatures.oracleSql, ops.AudioFeatures.rowsOnly),
-    m(ops.CommonDirection.queries, ops.CommonDirection.oracleSql, ops.CommonDirection.rowsOnly),
-    m(ops.EventSequences.queries, ops.EventSequences.oracleSql, ops.EventSequences.rowsOnly),
-    m(ops.SketchReport.queries, ops.SketchReport.oracleSql, ops.SketchReport.rowsOnly),
-    m(ops.SignatureContract.queries, ops.SignatureContract.oracleSql, ops.SignatureContract.rowsOnly),
-    m(ops.ArtifactDelta.queries, ops.ArtifactDelta.oracleSql, ops.ArtifactDelta.rowsOnly),
-    m(ops.CrossModalDedup.queries, ops.CrossModalDedup.oracleSql, ops.CrossModalDedup.rowsOnly),
-    m(ops.ShingleDelta.queries, ops.ShingleDelta.oracleSql, ops.ShingleDelta.rowsOnly)
+    ops.ParityQueries, ops.TextAnalysis, ops.Dedup, ops.SimilaritySearch,
+    ops.EventsOps, ops.Multimodal, ops.AnalyticsExtras, ops.Sampling,
+    ops.CorpusSignals, ops.EmbeddingOps, ops.CorpusPrep, ops.LakehouseOps,
+    ops.IntervalOps, ops.CorpusReports, ops.GraphOps, sources.Layout,
+    sources.DataSkipping, ops.ScaleOps, ops.SegmentDedup,
+    streaming.StreamingQueries, ops.ProfileOps, ops.ClusterOps,
+    ops.LmTokenizer, ops.PqOps, ops.Retrieval, ops.NaiveBayes, ops.Winnowing,
+    ops.UnigramLm, ops.Dsir, ops.Mining, ops.WordPiece, ops.SymSpell,
+    ops.LinearProbe, ops.QualityBuckets, ops.CountMin, ops.Chunking,
+    ops.QlRetrieval, ops.ExactSubstr, ops.EpochAllocation, ops.BatchPlan,
+    ops.VocabCoverage, ops.ClassifierEval, ops.NoveltyCurve, ops.QualitySweep,
+    ops.CentroidMatrix, ops.Collocations, ops.DataCard, ops.VectorCard,
+    ops.SplitBalance, ops.SourceProfile, ops.LabelDispersion,
+    ops.SourceEntropy, ops.LabelProp, ops.ZipfFit, ops.HeapsCurve,
+    ops.CellValidity, ops.VocabOverlap, ops.CondEntropy, ops.CopyMass,
+    ops.BatchMix, ops.QualityQuartiles, ops.SkewCensus, ops.Retention,
+    ops.RfmSegments, ops.BasketAffinity, ops.NumericCorr, ops.AbcPareto,
+    ops.YoyGrowth, ops.GiniConcentration, ops.DedupReport, ops.PowerIteration,
+    ops.TriangleCount, ops.ImageHash, ops.AudioFeatures, ops.CommonDirection,
+    ops.EventSequences, ops.SketchReport, ops.SignatureContract,
+    ops.ArtifactDelta, ops.CrossModalDedup, ops.ShingleDelta
   )
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -143,9 +76,9 @@ object SparkEntry {
   def select(names: Set[String]): Map[String, (SparkSession, String) => DataFrame] =
     queries.filter { case (k, _) => names.exists(p => k == p || k.startsWith(p + "_")) }
 
-  /** The shared in-session artifacts: the FrameMemo-backed frames (plus
-    * the embedding Gram) that several registered queries read, one named
-    * builder each; memos they read on the way (the PQ model, the LSH pair
+  /** The shared in-session artifacts: the FrameMemo-backed frames, the
+    * embedding Gram and the on-disk layouts that registered queries
+    * read, one named builder each; memos they read on the way (the PQ model, the LSH pair
     * frame) build with them. Bench pre-builds this list with
     * `FrameMemo.prebuild` and prices it as `shared_build`; the names key
     * BENCH_DETAIL's `shared_build_artifacts`. A builder that reads
@@ -209,7 +142,17 @@ object SparkEntry {
     "fiveGramPosting" -> ops.CorpusSignals.fiveGramPosting _,
     "repetitionSignals" -> ops.CorpusSignals.repetitionSignals _,
     "trainedBpe" -> ops.LmTokenizer.trainedBpe _,
-    "sourcePredictions" -> ops.NaiveBayes.sourcePredictions _)
+    "sourcePredictions" -> ops.NaiveBayes.sourcePredictions _,
+    // on-disk layouts, each a directory of the session's scratch root:
+    // q56's bucketed tables, q57/q92's day partitions, q105's z-ordered
+    // lineitem, q106's two schema epochs, the streaming replays' stage
+    // dir and q209/q215's late-data split
+    "bucketedLayout" -> sources.Layout.bucketedLayout _,
+    "eventsPartitioned" -> sources.Layout.writeEventsPartitioned _,
+    "zorderedLineitem" -> sources.DataSkipping.zorderedLineitem _,
+    "evolvedEvents" -> sources.DataSkipping.evolvedEventsLayout _,
+    "eventsStage" -> streaming.StreamingQueries.stageEventsDir _,
+    "lateSplitEvents" -> streaming.StreamingQueries.stageSplitEventsDir _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

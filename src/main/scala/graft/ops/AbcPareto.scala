@@ -32,7 +32,7 @@ import graft.Tables
   * the one float step (cents·10⁶ overflows int64) — the q182/q194
   * pinned cast-mul-div-ROUND.
   */
-object AbcPareto {
+object AbcPareto extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q205_abc_classification" -> ((s, d) => {
@@ -91,6 +91,4 @@ object AbcPareto {
         |      FROM cum)
         |GROUP BY cls
         |ORDER BY cls""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -10,7 +10,7 @@ import graft.ops.StarSchema.{orderRegion, sumMoney, sumMoney6}
   * these as absent-from-reference but engine-relevant): multi-aggregate
   * stats, ROLLUP subtotals, lag/lead deltas, set ops, sketch counts.
   */
-object AnalyticsExtras {
+object AnalyticsExtras extends graft.QueryModule {
 
   private def lineitemRegion(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
@@ -534,5 +534,5 @@ object AnalyticsExtras {
         |ORDER BY l_returnflag""".stripMargin
   )
 
-  val rowsOnly: Set[String] = Set("q61_sketch_rollup")
+  override val rowsOnly: Set[String] = Set("q61_sketch_rollup")
 }

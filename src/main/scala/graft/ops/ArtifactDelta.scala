@@ -40,7 +40,7 @@ import graft.Tables
   *     literal TRUE — a merge that drops, duplicates, or corrupts one
   *     gram row breaks the round's hash.
   */
-object ArtifactDelta {
+object ArtifactDelta extends graft.QueryModule {
 
   /** The "newly landed batch" rule — deterministic, split-independent,
     * and SQL-replayable: last md5 hex-prefix class (~1/16 of docs).
@@ -168,6 +168,4 @@ object ArtifactDelta {
          |       CAST(fps AS VARCHAR) AS fp_scratch,
          |       TRUE AS equivalent
          |FROM tot""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

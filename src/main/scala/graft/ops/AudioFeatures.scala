@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sort; at 100 TB this is the embarrassingly-parallel scan every
   * media featurizer is.
   */
-object AudioFeatures {
+object AudioFeatures extends graft.QueryModule {
 
   private[graft] val Windows = 8
 
@@ -101,6 +101,4 @@ object AudioFeatures {
          |       COALESCE(z.zcr, CAST(0 AS BIGINT)) AS zcr, f.peak
          |FROM feat f LEFT JOIN zc z ON z.doc_id = f.doc_id AND z.win = f.win
          |ORDER BY f.doc_id, f.win""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

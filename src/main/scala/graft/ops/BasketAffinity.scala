@@ -27,7 +27,7 @@ import graft.Tables
   * basket-total fold crosses at the model edge (documented BNLJ).
   * The final top-50 is a TakeOrdered heap.
   */
-object BasketAffinity {
+object BasketAffinity extends graft.QueryModule {
 
   /** Hapax-pair guard (the q183 discipline at basket grain): a pair
     * seen once is noise whatever its lift. 2, not q183's 5 — TPC-H-
@@ -96,6 +96,4 @@ object BasketAffinity {
          |CROSS JOIN n_ord n
          |ORDER BY lift_ppm DESC, part_a, part_b
          |LIMIT $TopK""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -26,7 +26,7 @@ import graft.Tables
   * combined aggregate, a batch-key aggregate (n/B keys), and the
   * ≤|sources|-row histogram. Everything past the rank is counts.
   */
-object BatchMix {
+object BatchMix extends graft.QueryModule {
 
   /** Documents per training batch. */
   private[graft] val B = 32L
@@ -77,6 +77,4 @@ object BatchMix {
          |FROM per_batch
          |GROUP BY distinct_sources
          |ORDER BY distinct_sources""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

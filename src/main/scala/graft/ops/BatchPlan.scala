@@ -29,7 +29,7 @@ import graft.functions.TextFunctions.tokens
   * aggregate that follows is |docs|/BatchSize keys with map-side
   * combine. Nothing wider than 16 bytes/row moves.
   */
-object BatchPlan {
+object BatchPlan extends graft.QueryModule {
 
   /** Sequences per batch (padding is per batch to its max length). */
   private[graft] val BatchSize = 8
@@ -115,6 +115,4 @@ object BatchPlan {
          |FROM (SELECT * FROM arrival UNION ALL SELECT * FROM bylen)
          |GROUP BY strategy
          |ORDER BY strategy""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

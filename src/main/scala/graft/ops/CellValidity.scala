@@ -35,7 +35,7 @@ import graft.Tables
   * edge (documented BNLJ shape). Oracle replays coarseChainCtes
   * VERBATIM and reads scatter off its `pts`/`caf` CTEs.
   */
-object CellValidity {
+object CellValidity extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q194_cell_validity" -> ((s, d) => {
@@ -110,6 +110,4 @@ object CellValidity {
          |              / CAST(g.g_within AS DOUBLE)) AS BIGINT) END AS share_ppm
          |FROM al CROSS JOIN (SELECT within_num AS g_within FROM g_row) g
          |ORDER BY cell""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

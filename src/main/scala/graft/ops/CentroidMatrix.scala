@@ -32,7 +32,7 @@ import graft.Tables
   * with the corpus; labels at web scale are sources/domains (dozens),
   * not documents.
   */
-object CentroidMatrix {
+object CentroidMatrix extends graft.QueryModule {
 
   private val Offset = 1024L
 
@@ -87,6 +87,4 @@ object CentroidMatrix {
          |       END AS cos_ppm
          |FROM pairs
          |ORDER BY label_a, label_b""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -27,7 +27,7 @@ import graft.functions.TextFunctions.tokens
   * produce. The oracle replays the start arithmetic and list slicing
   * verbatim.
   */
-object Chunking {
+object Chunking extends graft.QueryModule {
 
   private[graft] val ChunkTokens = 32
   private[graft] val Stride = 24
@@ -71,6 +71,4 @@ object Chunking {
          |FROM starts
          |WHERE i = 0 OR n - i * $Stride >= $MinTail
          |ORDER BY doc_id, chunk_id""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

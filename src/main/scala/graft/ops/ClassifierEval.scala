@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * that localCheckpoint'd ≤ classes²-row frame, never rescanning the
   * corpus or re-running inference per consumer.
   */
-object ClassifierEval {
+object ClassifierEval extends graft.QueryModule {
 
   /** Confusion/PRF report over any (actual, predicted) prediction
     * frame — exposed so the spec can pin hand-computed confusions
@@ -224,6 +224,4 @@ object ClassifierEval {
          |       END AS kappa_ppm
          |FROM base CROSS JOIN s2""".stripMargin
     })
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -32,7 +32,7 @@ import graft.Tables
   * the quantized points are localCheckpoint'ed once (the PageRank
   * lineage-truncation rule).
   */
-object ClusterOps {
+object ClusterOps extends graft.QueryModule {
 
   private[graft] val K = 4
   private[graft] val Iters = 3
@@ -247,6 +247,4 @@ object ClusterOps {
          |  USING (cluster)
          |ORDER BY c.cluster, c.dim""".stripMargin)
   }
-
-  val rowsOnly: Set[String] = Set.empty
 }

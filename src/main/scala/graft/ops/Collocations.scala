@@ -29,7 +29,7 @@ import graft.functions.TextFunctions.{ngrams, tokens}
   * both sides distributed, word types are never broadcast as a whole.
   * The top-k is a TakeOrdered heap over partials, never a global sort.
   */
-object Collocations {
+object Collocations extends graft.QueryModule {
 
   /** Hapax-pair guard: pairs must occur at least this often. */
   private[graft] val MinCount = 5L
@@ -95,6 +95,4 @@ object Collocations {
          |CROSS JOIN totals t
          |ORDER BY pmi_micro DESC, gram
          |LIMIT $TopK""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

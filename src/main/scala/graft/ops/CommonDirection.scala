@@ -29,7 +29,7 @@ import graft.Tables
   * key fold — the standard model-inference plan (q153's shape with a
   * 64-number model).
   */
-object CommonDirection {
+object CommonDirection extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q214_common_direction" -> ((s, d) => {
@@ -73,6 +73,4 @@ object CommonDirection {
          |GROUP BY e.label
          |ORDER BY e.label""".stripMargin)
   }
-
-  val rowsOnly: Set[String] = Set.empty
 }

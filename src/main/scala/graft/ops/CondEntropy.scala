@@ -30,7 +30,7 @@ import graft.functions.TextFunctions.ngrams
   * counts fold the SAME table by its first-digest key; then two
   * |sources|-key integer folds joined at catalog size.
   */
-object CondEntropy {
+object CondEntropy extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q196_source_cond_entropy" -> ((s, d) => {
@@ -95,6 +95,4 @@ object CondEntropy {
         |       h_joint_micro - h_first_micro AS cond_h_micro
         |FROM ent
         |ORDER BY source""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -39,7 +39,7 @@ import graft.functions.TextFunctions.ngrams
   * rows per key into a |sources|²-key aggregate. A zero-overlap pair is
   * absent (q145 inner semantics).
   */
-object CopyMass {
+object CopyMass extends graft.QueryModule {
 
   /** The df-capped per-(source, 5-gram-digest) mass table as a FrameMemo
     * STORED ARTIFACT (r22) — the same stored-asset discipline its
@@ -110,6 +110,4 @@ object CopyMass {
         |       shared_mass * 1000000 // t.total_mass AS share_ppm
         |FROM shared JOIN totals t ON t.source = src
         |ORDER BY src, other""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

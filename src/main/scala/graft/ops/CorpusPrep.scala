@@ -38,7 +38,7 @@ private[ops] case class PackOut(doc_id: Long, shard: String, bin_seq: Long, tok:
   *     single divisions of exact integers, so results are bit-stable
   *     under any shuffle order (the oracle compares floats exactly).
   */
-object CorpusPrep {
+object CorpusPrep extends graft.QueryModule {
 
   /** Context-window token budget for q70 (tokens, chars/4 estimate). */
   val ContextTokens = 2048L
@@ -252,6 +252,4 @@ object CorpusPrep {
          |FROM toks JOIN counts USING (tok)
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -13,7 +13,7 @@ import graft.functions.TextFunctions.{qualityScore, tokens}
   * `rand()` — so every report is reproducible run-over-run and
   * matches the DuckDB oracle bit-for-bit.
   */
-object CorpusReports {
+object CorpusReports extends graft.QueryModule {
 
   /** q83 chunk geometry: 32-token windows advancing 24 tokens (8-token
     * overlap) — the long-doc → training-sample split. */
@@ -315,5 +315,5 @@ object CorpusReports {
         |ORDER BY lang, rank""".stripMargin
   )
 
-  val rowsOnly: Set[String] = Set("q98_quality_deciles_approx")
+  override val rowsOnly: Set[String] = Set("q98_quality_deciles_approx")
 }

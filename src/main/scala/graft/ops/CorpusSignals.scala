@@ -31,7 +31,7 @@ import graft.functions.TextFunctions._
   *     scores, hashes, or digests; the documents themselves never
   *     shuffle (pinned in PlanSpec alongside q50/q52).
   */
-object CorpusSignals {
+object CorpusSignals extends graft.QueryModule {
 
   /** A distinct 5-gram present in at least this many docs is
     * boilerplate (headers, license blurbs, navigation chrome). */
@@ -627,5 +627,5 @@ object CorpusSignals {
          |FROM verdicts GROUP BY lang, verdict ORDER BY lang, verdict""".stripMargin
   )
 
-  val rowsOnly: Set[String] = Set("q74_decontaminate_fuzzy")
+  override val rowsOnly: Set[String] = Set("q74_decontaminate_fuzzy")
 }

@@ -34,7 +34,7 @@ import graft.functions.TextFunctions.tokens
   * broadcast-sized counter matrix. Nothing in any exchange scales past
   * min(corpus, 256 + TopN·D) rows.
   */
-object CountMin {
+object CountMin extends graft.QueryModule {
 
   /** Sketch geometry: depth (independent hash rows) × width (buckets).
     * ε = e/W ≈ 4.2% of stream mass, δ = e^-D ≈ 1.8% failure — the
@@ -104,6 +104,4 @@ object CountMin {
          |FROM pos p JOIN cms USING (r, c)
          |GROUP BY p.t, p.exact_n
          |ORDER BY exact_n DESC, token""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * one WITH. At 100 TB both pair graphs are stored edge lists and this
   * is a broadcast-free edge-list join — linear in the pair counts.
   */
-object CrossModalDedup {
+object CrossModalDedup extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q225_crossmodal_agreement" -> ((s, d) => {
@@ -177,6 +177,4 @@ object CrossModalDedup {
          |FROM (SELECT unnest(['both', 'text_only', 'visual_only']) AS class) s
          |LEFT JOIN ccounts c USING (class)
          |ORDER BY class""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -29,7 +29,7 @@ import graft.functions.TextFunctions.{qualityScore, tokens}
   * scalars. Distinct counts are exact by design — the HLL twin for
   * approximate profiling at ingest is q131.
   */
-object DataCard {
+object DataCard extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q184_data_card" -> ((s, d) => {
@@ -98,6 +98,4 @@ object DataCard {
          |       CASE WHEN n_docs = 0 THEN 0 ELSE q_sum // n_docs END
          |         AS mean_quality_micro
          |FROM base CROSS JOIN types""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

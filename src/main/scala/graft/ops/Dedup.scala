@@ -23,7 +23,7 @@ import graft.functions.TextFunctions._
   * Hash-based signatures use xxhash64 → deterministic on any cluster,
   * but not expressible in portable SQL → those queries are rows-only.
   */
-object Dedup {
+object Dedup extends graft.QueryModule {
 
   private val Prime = 2038074743L
   /** (a, b) parameters for 32 minhash permutations h_j(x) = (a·x+b) mod p,
@@ -291,7 +291,7 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // exact dedup: digest groupBy, keep min doc_id as canonical
     "q25_dedup_exact" -> ((s, d) =>
       Tables.documents(s, d)
@@ -646,8 +646,9 @@ object Dedup {
     "q49_dedup_groups_lsh" -> ((s, d) =>
       lshGroupRows(s, d).orderBy("keep_doc_id")))
 
-  def allQueries: Map[String, (SparkSession, String) => DataFrame] =
-    queries ++ componentQueries
+  /** The registered queries: [[baseQueries]] plus the groups above. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    baseQueries ++ componentQueries
 
   /** The q26 pair pipeline as a reusable DuckDB CTE chain (ends with a
     * `pairs(doc_a, doc_b)` relation at jaccard >= the given threshold) —
@@ -850,6 +851,6 @@ object Dedup {
     * twins via q208, and q28's vote/pack signature machinery
     * bit-for-bit via q223's md5-48 contract replay (r19).
     */
-  val rowsOnly: Set[String] =
+  override val rowsOnly: Set[String] =
     Set("q27_dedup_minhash_lsh", "q28_dedup_simhash", "q49_dedup_groups_lsh")
 }

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * group-count-sized frames. Nothing here adds corpus-scale work
   * beyond the families it audits.
   */
-object DedupReport {
+object DedupReport extends graft.QueryModule {
 
   /** One report row. `approx` is referenced exactly once; `truth` and
     * `precBase` must be cheap or materialized (FrameMemo contract).
@@ -81,7 +81,7 @@ object DedupReport {
     val exactP = exactJac.select("doc_a", "doc_b")
     // exact embedding anchor on the q29 cap slice, materialized once
     val exactEmb = FrameMemo.cached(s, d, "report:exactEmbPairs") {
-      Dedup.queries("q29_dedup_embedding")(s, d).select("vec_a", "vec_b")
+      Dedup.baseQueries("q29_dedup_embedding")(s, d).select("vec_a", "vec_b")
     }
     // group truths, materialized (two component runs over exact pairs)
     val truth47 = FrameMemo.cached(s, d, "report:q47rows") {
@@ -123,5 +123,5 @@ object DedupReport {
 
   val oracleSql: Map[String, String] = Map.empty
 
-  val rowsOnly: Set[String] = Set("q208_dedup_recall_report")
+  override val rowsOnly: Set[String] = Set("q208_dedup_recall_report")
 }

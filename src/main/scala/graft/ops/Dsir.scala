@@ -37,7 +37,7 @@ import graft.functions.TextFunctions.{ngrams, tokens}
   * token granularity, but a polynomial hash is the same swap if
   * profiling ever flags it).
   */
-object Dsir {
+object Dsir extends graft.QueryModule {
 
   /** Hashed feature buckets (unigrams + bigrams share the space, as in
     * the paper). 64 keeps the oracle's model CTE readable; web scale
@@ -215,6 +215,4 @@ object Dsir {
          |FROM score
          |ORDER BY gkey DESC, doc_id
          |LIMIT $SelectK""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -23,7 +23,7 @@ import graft.functions.VectorFunctions.cosine
   *     100 TB is exactly this plan: banded candidate generation, exact
   *     cosine verification, min-label components, keep = component min.
   */
-object EmbeddingOps {
+object EmbeddingOps extends graft.QueryModule {
 
   /** Symmetric int8 range: quantized components live in [-127, 127]. */
   val QuantLevels = 127
@@ -298,5 +298,5 @@ object EmbeddingOps {
          |ORDER BY vec_id""".stripMargin
   )
 
-  val rowsOnly: Set[String] = Set("q68_dedup_groups_embedding")
+  override val rowsOnly: Set[String] = Set("q68_dedup_groups_embedding")
 }

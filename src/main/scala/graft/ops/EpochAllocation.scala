@@ -40,7 +40,7 @@ import graft.functions.TextFunctions.tokens
   * |sources|-row frame — the global window is over a dim-sized table
   * (bounded by the source catalog, like q16's dim build).
   */
-object EpochAllocation {
+object EpochAllocation extends graft.QueryModule {
 
   /** Budget = [[BudgetMult]] × total corpus tokens. */
   private[graft] val BudgetMult = 3L
@@ -140,6 +140,4 @@ object EpochAllocation {
          |             ELSE (b - cb) * w // (tw - cw) END) * 1000000 // n AS epochs_u
          |FROM decided, totals
          |ORDER BY source""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

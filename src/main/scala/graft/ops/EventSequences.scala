@@ -32,7 +32,7 @@ import graft.Tables
   * window (partitioned — never global) into a ≤|types|²-key
   * aggregate. Nothing holds per-user state beyond the aggregation.
   */
-object EventSequences {
+object EventSequences extends graft.QueryModule {
 
   /** The staged first-touch funnel times — (users at stage 1 with t1,
     * stage 2 with t2, stage 3 with t3); q216 counts them, q222 takes
@@ -188,6 +188,4 @@ object EventSequences {
         |       tr.n * 1000000 // t.n_from AS p_ppm
         |FROM tr JOIN tot t USING (from_type)
         |ORDER BY tr.from_type, tr.to_type""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

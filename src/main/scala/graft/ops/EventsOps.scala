@@ -10,7 +10,7 @@ import graft.ops.StarSchema.sumMoney
   * Structured Streaming — see graft.streaming.EventsStreaming; these
   * batch twins are the oracle-checkable surface).
   */
-object EventsOps {
+object EventsOps extends graft.QueryModule {
 
   /** Total order "(o_orderdate DESC, o_orderkey DESC)" packed into ONE
     * long: epoch-day << 44 | orderkey. Exact only while 0 <= orderkey <
@@ -31,7 +31,7 @@ object EventsOps {
     shiftleft(unix_date(to_date(orderdate)).cast("long"), 44) + guarded
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // tumbling-window (hourly) counts + value totals per event type
     "q32_events_hourly" -> ((s, d) =>
       Tables.events(s, d)
@@ -445,8 +445,9 @@ object EventsOps {
     * approx_quantile — gated against exact q44 in ApproxQuantileSpec
     * instead.
     */
-  val rowsOnly: Set[String] = Set("q51_quantiles_approx")
+  override val rowsOnly: Set[String] = Set("q51_quantiles_approx")
 
-  def allQueries: Map[String, (SparkSession, String) => DataFrame] =
-    queries ++ jsonQueries ++ asofQueries
+  /** The registered queries: [[baseQueries]] plus the groups above. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    baseQueries ++ jsonQueries ++ asofQueries
 }

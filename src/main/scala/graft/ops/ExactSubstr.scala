@@ -38,7 +38,7 @@ import graft.Tables
   * broadcast (r22; the old flat-stream self-join broadcast the whole
   * posting). Only spec fixtures recompute grams inline.
   */
-object ExactSubstr {
+object ExactSubstr extends graft.QueryModule {
 
   /** Report runs of at least this many canon chars (≥ the winnowing
     * guarantee bound 11, so q155's sampled fingerprints would also see
@@ -302,6 +302,4 @@ object ExactSubstr {
          |GROUP BY i.doc_a, i.doc_b
          |ORDER BY i.doc_a, i.doc_b""".stripMargin
     })
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -29,7 +29,7 @@ import graft.Tables
   * one range exchange, one decile aggregate, 1-row total/Gini folds
   * crossed at the model edge (documented BNLJ), 10 output rows.
   */
-object GiniConcentration {
+object GiniConcentration extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q207_revenue_gini" -> ((s, d) => {
@@ -91,6 +91,4 @@ object GiniConcentration {
         |         / (CAST(t.n AS DOUBLE) * CAST(t.total AS DOUBLE))) AS BIGINT) AS gini_ppm
         |FROM deciles CROSS JOIN totals t
         |ORDER BY decile""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * (q90), where high rank marks vectors central to dense semantic
   * neighborhoods (prototypes) and low rank marks outliers.
   */
-object GraphOps {
+object GraphOps extends graft.QueryModule {
 
   val Damping = 0.85
   val Iters = 10
@@ -218,5 +218,5 @@ object GraphOps {
 
   val oracleSql: Map[String, String] = Map(
     "q118_pagerank_exact" -> q118OracleSql)
-  val rowsOnly: Set[String] = Set("q93_pagerank")
+  override val rowsOnly: Set[String] = Set("q93_pagerank")
 }

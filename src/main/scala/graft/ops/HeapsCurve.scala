@@ -31,7 +31,7 @@ import graft.functions.TextFunctions.tokens
   * collapse to ≤64 bit-length buckets and the cumulative/lag windows
   * run over that bounded frame (the q177 allowlisted shape).
   */
-object HeapsCurve {
+object HeapsCurve extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q193_heaps_curve" -> ((s, d) => {
@@ -123,6 +123,4 @@ object HeapsCurve {
         |       END AS beta_ppm
         |FROM lagged
         |ORDER BY docs_cutoff""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -38,7 +38,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sort. The dedup join over these hashes is the q28 plan verbatim
   * (4×16-bit pigeonhole chunks ⇒ hamming ≤ 3 candidates).
   */
-object ImageHash {
+object ImageHash extends graft.QueryModule {
 
   private[graft] val GridRows = 8
   private[graft] val GridCols = 9
@@ -221,6 +221,4 @@ object ImageHash {
        |    ON a.chunk = b.chunk AND a.cval = b.cval AND a.doc_id < b.doc_id
        |  WHERE bit_count(xor(a.dhash, b.dhash)) <= $HammingMax
        |)""".stripMargin
-
-  val rowsOnly: Set[String] = Set.empty
 }

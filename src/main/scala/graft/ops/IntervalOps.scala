@@ -11,7 +11,7 @@ import graft.Tables
   * (`unix_micros`), never interval types, so Spark and the oracle agree
   * bit-for-bit.
   */
-object IntervalOps {
+object IntervalOps extends graft.QueryModule {
 
   private val WindowUs = 30L * 60 * 1000 * 1000 // 30 min attribution
   private val NearUs = 300L * 1000 * 1000       // ±5 min proximity
@@ -145,6 +145,4 @@ object IntervalOps {
         |GROUP BY p.event_id
         |ORDER BY p.event_id""".stripMargin
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -33,7 +33,7 @@ import graft.Tables
   * (self-pairs contribute 0) — the convention that keeps the
   * denominator n² exact without an n·(n−1) special case.
   */
-object LabelDispersion {
+object LabelDispersion extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q189_label_dispersion" -> ((s, d) => {
@@ -114,6 +114,4 @@ object LabelDispersion {
         |            ELSE disp * 1000000 // g_disp END AS rel_ppm
         |FROM al CROSS JOIN g_disp
         |ORDER BY label""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -35,7 +35,7 @@ import graft.Tables
   * vote rounds as CTEs over it — clustering, graph, and propagation
   * all cross-engine exact.
   */
-object LabelProp {
+object LabelProp extends graft.QueryModule {
 
   /** Out-degree of the kNN graph. */
   private[graft] val K = 5
@@ -157,6 +157,4 @@ object LabelProp {
          |JOIN l1 ON l1.vec_id = b.vec_id
          |JOIN l2 ON l2.vec_id = b.vec_id
          |ORDER BY b.vec_id""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -11,7 +11,7 @@ import graft.Tables
   * operations that replace "recompute everything" once the fact history
   * is too large to rescan.
   */
-object LakehouseOps {
+object LakehouseOps extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // SCD type-2 dimension history: run-length encode each customer's
@@ -447,6 +447,4 @@ object LakehouseOps {
         |GROUP BY region_name, year, month
         |ORDER BY region_name, year, month""".stripMargin
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

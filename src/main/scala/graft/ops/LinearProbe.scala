@@ -38,7 +38,7 @@ import graft.Tables
   * collected-model pattern). No per-round residual join: the residual
   * rides the SAME row as the features it multiplies.
   */
-object LinearProbe {
+object LinearProbe extends graft.QueryModule {
 
   private[graft] val Dims = 64
   private[graft] val Rounds = 3
@@ -148,6 +148,4 @@ object LinearProbe {
          |)
          |SELECT label, COUNT(*) AS n, CAST(SUM(score) AS BIGINT) AS sum_score
          |FROM scored GROUP BY label ORDER BY label""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -24,7 +24,7 @@ import graft.functions.TextFunctions.tokens
   *    rows at web scale, never billions) — exactly how production BPE
   *    trainers are structured.
   */
-object LmTokenizer {
+object LmTokenizer extends graft.QueryModule {
 
   // ---------------------------------------------------------------- q134
 
@@ -677,6 +677,4 @@ object LmTokenizer {
     // operator's contract, and the driver's hash compare enforces it
     "q140_bpe_train_batched" -> q135OracleSql,
     "q141_bpe_apply_oov" -> q141OracleSql)
-
-  val rowsOnly: Set[String] = Set.empty
 }

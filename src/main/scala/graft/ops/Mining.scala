@@ -32,7 +32,7 @@ import graft.functions.VectorFunctions.cosine
   * scored frame (no second corpus pass); top-k negatives are a
   * per-anchor window over the scored stream. One exchange total.
   */
-object Mining {
+object Mining extends graft.QueryModule {
 
   /** Anchor set size — the q30 anchor convention. */
   private[graft] val MineQueries = 10
@@ -103,6 +103,4 @@ object Mining {
          |FROM negs n JOIN best_pos p USING (query_id)
          |WHERE n.neg_rank <= $NegK
          |ORDER BY query_id, neg_rank""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

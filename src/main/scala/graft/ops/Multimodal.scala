@@ -16,7 +16,7 @@ import graft.Tables
   * pipeline would start from — what reaches the decoder is a valid file
   * of the claimed format, not a blob with a label.
   */
-object Multimodal {
+object Multimodal extends graft.QueryModule {
 
   /** One media row: payload + metadata (what an object-store manifest of
     * images/audio would scan to).
@@ -441,6 +441,4 @@ object Multimodal {
        |  UNION ALL
        |  SELECT doc_id, '${MediaCodec.WavMime}', cell, v FROM wcell
        |)""".stripMargin
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -34,7 +34,7 @@ import graft.functions.TextFunctions.tokens
   * aggregates per (doc, class) — the corpus pays tokenize + one
   * aggregation, the standard NB inference plan.
   */
-object NaiveBayes {
+object NaiveBayes extends graft.QueryModule {
 
   /** Quantization grain: micro-nats per log-likelihood unit. */
   // micro-nat quantization grain; shares Retrieval.quant's documented
@@ -179,6 +179,4 @@ object NaiveBayes {
          |       cls = actual AS correct, margin
          |FROM ranked WHERE rnk = 1
          |ORDER BY doc_id""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * is |Ns| single-row aggregates unioned. At 100 TB each pass is the
   * q66 posting shape, which is the scalable decontamination plan.
   */
-object NoveltyCurve {
+object NoveltyCurve extends graft.QueryModule {
 
   /** Gram lengths on the curve: unigram overlap is near-total by
     * construction (shared vocabulary), 8-grams approach verbatim reuse.
@@ -167,6 +167,4 @@ object NoveltyCurve {
          |LEFT JOIN totals t ON t.split = s.split
          |LEFT JOIN shared sh ON sh.split = s.split AND sh.other = s.other
          |ORDER BY s.split, s.other""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

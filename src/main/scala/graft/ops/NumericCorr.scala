@@ -29,7 +29,7 @@ import graft.Tables
   * Scale shape: ONE narrow map-side-combined fold to a 1-row sum
   * frame; the 3-row report explodes from it at the model edge.
   */
-object NumericCorr {
+object NumericCorr extends graft.QueryModule {
 
   private def corrExpr(sx: String, sy: String, sxx: String, syy: String,
                        sxy: String): String =
@@ -100,6 +100,4 @@ object NumericCorr {
          |)
          |ORDER BY pair""".stripMargin
     })
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -20,7 +20,7 @@ import graft.ops.StarSchema._
   *   - SQL casts mirror Spark result types (year() is INT in Spark,
   *     BIGINT in DuckDB, etc.).
   */
-object ParityQueries {
+object ParityQueries extends graft.QueryModule {
 
   /** Shared oracle CTEs: region-enriched orders + monthly revenue fact
     * (the reference star schema, SQL/01_create_schema.sql, over testdata).
@@ -403,7 +403,4 @@ object ParityQueries {
          |JOIN dim_time dt ON f.year = dt.year AND f.month = dt.month
          |ORDER BY dr.region_id, dt.time_id""".stripMargin
   )
-
-  /** Every parity query is SQL-expressible — none are rows-only. */
-  val rowsOnly: Set[String] = Set.empty
 }

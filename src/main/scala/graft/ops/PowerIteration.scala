@@ -46,7 +46,7 @@ import graft.Tables
   * errors on the BIGINT cast — the engines would diverge instead of
   * failing together, so the build fails loudly first.
   */
-object PowerIteration {
+object PowerIteration extends graft.QueryModule {
 
   private[graft] val Rounds = 30
   private[graft] val Scale = 1000L
@@ -172,6 +172,4 @@ object PowerIteration {
          |$unions)
          |ORDER BY iter, dim_i""".stripMargin)
   }
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -42,7 +42,7 @@ import graft.Tables
   * derivation, and all 8 subspace chains replay in DuckDB), the
   * composed IVF+ADC+rerank search is q148.
   */
-object PqOps {
+object PqOps extends graft.QueryModule {
 
   private[graft] val SubSpaces = 8
   private[graft] val SubDim = 8 // 64 dims / 8 subspaces
@@ -501,5 +501,5 @@ object PqOps {
   }
 
   val oracleSql: Map[String, String] = Map("q147_pq_codes" -> q147OracleSql)
-  val rowsOnly: Set[String] = Set("q148_knn_ivf_pq")
+  override val rowsOnly: Set[String] = Set("q148_knn_ivf_pq")
 }

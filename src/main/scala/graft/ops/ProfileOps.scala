@@ -15,7 +15,7 @@ import graft.functions.TextFunctions.tokens
   * see [[approxProfile]]); divergence is one (source, token) count
   * shuffle plus a 50-row broadcast.
   */
-object ProfileOps {
+object ProfileOps extends graft.QueryModule {
 
   /** The lineitem columns profiled by q131; all cast to double so one
     * long-form schema carries min/max for int and float columns alike.
@@ -313,6 +313,4 @@ object ProfileOps {
          |CROSS JOIN g_total gt
          |GROUP BY ce.source
          |ORDER BY ce.source""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

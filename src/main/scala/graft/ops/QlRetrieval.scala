@@ -36,7 +36,7 @@ import graft.functions.TextFunctions.tokens
   * shuffle (localCheckpoint'd, read 3×), the query-term side broadcast,
   * per-query constants collected-model-sized. Nothing new shuffles.
   */
-object QlRetrieval {
+object QlRetrieval extends graft.QueryModule {
 
   /** Dirichlet pseudo-count, ≈ the corpus's average document length —
     * the textbook setting (Zhai & Lafferty sweep 500–10000 on TREC
@@ -155,6 +155,4 @@ object QlRetrieval {
          |  FROM sc
          |) WHERE rank <= ${Retrieval.TopK}
          |ORDER BY query_id, rank""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -43,7 +43,7 @@ import graft.functions.TextFunctions.tokens
   * (approx percentile cutoffs) is the documented degradation path —
   * the CCNet paper itself uses exact cutpoints computed offline.
   */
-object QualityBuckets {
+object QualityBuckets extends graft.QueryModule {
 
   /** (doc_id, lang, n_bigrams, s) with s = Σ per-bigram micro-nat NLL. */
   private def docNll(s: SparkSession, d: String): DataFrame = {
@@ -121,6 +121,4 @@ object QualityBuckets {
         |SELECT doc_id, lang, n_bigrams, avg_nll_u,
         |       CASE t WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
         |FROM keyed ORDER BY doc_id""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

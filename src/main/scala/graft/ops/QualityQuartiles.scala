@@ -28,7 +28,7 @@ import graft.functions.TextFunctions.qualityScore
   * rank targets join back at |sources| size and the pick collapses
   * in one conditional aggregate.
   */
-object QualityQuartiles {
+object QualityQuartiles extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q199_quality_quartiles" -> ((s, d) => {
@@ -77,6 +77,4 @@ object QualityQuartiles {
          |FROM ranked
          |GROUP BY source
          |ORDER BY source""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

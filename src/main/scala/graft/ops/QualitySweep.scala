@@ -31,7 +31,7 @@ import graft.functions.TextFunctions.{qualityScore, tokens}
   * convention). Nothing downstream of the bucket aggregate scales
   * with the corpus.
   */
-object QualitySweep {
+object QualitySweep extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q181_quality_threshold_sweep" -> ((s, d) => {
@@ -97,6 +97,4 @@ object QualitySweep {
          |            ELSE tokens_dropped * 1000000 // total_tokens END AS tokens_ppm
          |FROM cum WHERE b >= 1
          |ORDER BY threshold_pct""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -28,7 +28,7 @@ import graft.Tables
   * no cohort and are excluded by the inner join — the documented
   * population.
   */
-object Retention {
+object Retention extends graft.QueryModule {
 
   /** Monday-aligned epoch week as INTEGER arithmetic on the column
     * literally named `ts` — `div`, never `/` (Column./ is double
@@ -91,6 +91,4 @@ object Retention {
         |       m.n_active * 1000000 // s.cohort_size AS retention_ppm
         |FROM matrix m JOIN sizes s USING (cohort_week)
         |ORDER BY cohort_week, week_offset""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

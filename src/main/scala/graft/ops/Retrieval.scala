@@ -31,7 +31,7 @@ import graft.functions.TextFunctions.tokens
   * ≤ [[TermsPerQuery]] terms) and add in WRITTEN order c1+c2+c3,
   * bit-identically in both engines; the driver compare rounds to 4dp.
   */
-object Retrieval {
+object Retrieval extends graft.QueryModule {
 
   /** Lucene-default BM25 shape parameters (written as the literal
     * doubles "1.2"/"2.2"/"0.75"/"0.25" in BOTH engines' expressions so
@@ -415,6 +415,4 @@ object Retrieval {
          |  FROM fused
          |) WHERE rank <= $TopK
          |ORDER BY query_id, rank""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -30,7 +30,7 @@ import graft.Tables
   * no orders are the q09 anti-join population — excluded here by
   * construction.
   */
-object RfmSegments {
+object RfmSegments extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q202_rfm_segments" -> ((s, d) => {
@@ -90,6 +90,4 @@ object RfmSegments {
         |FROM srk
         |GROUP BY 1
         |ORDER BY segment""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

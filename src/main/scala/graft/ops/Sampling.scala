@@ -13,7 +13,7 @@ import graft.Tables
   * md5 (not xxhash64) so the assignment is portable SQL and the oracle
   * can replay it bit-for-bit.
   */
-object Sampling {
+object Sampling extends graft.QueryModule {
 
   /** Max passes over any single source in the q114 mixing plan (the
     * standard "small sources repeat, but never more than a few epochs"
@@ -209,6 +209,4 @@ object Sampling {
         |FROM epochs
         |ORDER BY source""".stripMargin
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -9,7 +9,7 @@ import graft.Tables
   * fallbacks for the pathologies AQE can't fix (a single hot key inside
   * one task, skewed aggregation keys).
   */
-object ScaleOps {
+object ScaleOps extends graft.QueryModule {
 
   /** Equi-join where the LEFT side has skewed key frequencies: spread
     * each hot key over `salts` shuffle partitions by salting the left
@@ -106,6 +106,4 @@ object ScaleOps {
         |GROUP BY 1
         |ORDER BY 1""".stripMargin
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

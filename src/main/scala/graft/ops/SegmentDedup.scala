@@ -31,7 +31,7 @@ import graft.functions.TextFunctions.tokens
   *     exists so the oracle can replay the whole lifecycle from raw
   *     tables.
   */
-object SegmentDedup {
+object SegmentDedup extends graft.QueryModule {
 
   /** Tokens per dedup segment (q112): the "line" granularity. The
     * corpus is single-line word salad (no \n\n paragraph breaks), so
@@ -207,6 +207,4 @@ object SegmentDedup {
          |JOIN batch_min bm USING (dg)
          |ORDER BY b.doc_id""".stripMargin
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -43,7 +43,7 @@ import graft.functions.TextFunctions.shingles
   *     double-counts a doc, or mis-flips one flag breaks the round's
   *     hash.
   */
-object ShingleDelta {
+object ShingleDelta extends graft.QueryModule {
 
   /** The maintained shingle grain: q26/q219's n = 3 (the df-cap grain —
     * one n keeps the audit pass single-artifact; the machinery is
@@ -197,6 +197,4 @@ object ShingleDelta {
          |       CAST(fp.fps AS VARCHAR) AS fp_scratch,
          |       TRUE AS equivalent
          |FROM fp, gcounts, nd""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -44,7 +44,7 @@ import graft.functions.TextFunctions.{fingerprint, foldFp, tokens, FoldPrime}
   * sample keeps the gate's cost proportional to the AUDIT size, not
   * the corpus.
   */
-object SignatureContract {
+object SignatureContract extends graft.QueryModule {
 
   import org.apache.spark.sql.graft.ColumnBridge.{column => asCol, expression => asExpr}
 
@@ -116,6 +116,4 @@ object SignatureContract {
          |       sig.sig48, TRUE
          |FROM h JOIN sig USING (doc_id)
          |ORDER BY method, doc_id""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

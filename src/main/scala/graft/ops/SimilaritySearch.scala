@@ -17,7 +17,7 @@ import graft.functions.VectorFunctions._
   *     model state), candidates meet in a bucket equi-join (shuffle on
   *     bucket key instead of a cross join), then exact re-rank.
   */
-object SimilaritySearch {
+object SimilaritySearch extends graft.QueryModule {
 
   private val Dim = 64
 
@@ -43,7 +43,7 @@ object SimilaritySearch {
         .otherwise(lit(0L))
     }.reduce(_ + _)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // per-label centroid profile (the embedding-space summary a corpus
     // audit reads): portable per-dimension form — posexplode rows keyed
     // (label, pos), two-phase avg, ROUND for a stable float compare (the
@@ -535,8 +535,9 @@ object SimilaritySearch {
        |    ON a.vec_id < $GraphAnchorNodes AND a.vec_id <> b.vec_id
        |) WHERE rank <= $GraphK""".stripMargin
 
-  def allQueries: Map[String, (SparkSession, String) => DataFrame] =
-    queries ++ ivfQueries ++ graphQueries ++ reportQueries
+  /** The registered queries: [[baseQueries]] plus the groups above. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    baseQueries ++ ivfQueries ++ graphQueries ++ reportQueries
 
   val oracleSql: Map[String, String] = Map(
     "q60_label_centroids" ->
@@ -571,7 +572,7 @@ object SimilaritySearch {
         |ORDER BY query_id, rank""".stripMargin
   )
 
-  val rowsOnly: Set[String] =
+  override val rowsOnly: Set[String] =
     Set("q31_knn_lsh", "q42_knn_ivf", "q43_dedup_embedding_lsh",
       "q90_knn_graph_lsh", "q117_ann_recall_report")
 }

@@ -41,7 +41,7 @@ import graft.Tables
   * nothing collected. The 1-row Σtokens fold broadcasts (BNLJ allowed
   * like q114's corpus-total fold).
   */
-object SketchReport {
+object SketchReport extends graft.QueryModule {
 
   /** HLL acceptance band, percent of exact (AnalyticsSpec's gate). */
   private[graft] val HllBandPct = 5
@@ -306,5 +306,5 @@ object SketchReport {
     * the tree — rows-only; its guarantee is hash-gated by q220's
     * q226_mrl_k1024 rows (exact sides SQL-replayed, within TRUE).
     */
-  val rowsOnly: Set[String] = Set("q226_mrl_quantiles")
+  override val rowsOnly: Set[String] = Set("q226_mrl_quantiles")
 }

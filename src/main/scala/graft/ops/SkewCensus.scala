@@ -29,7 +29,7 @@ import graft.Tables
   * census unions |keys| such frames — independent branches, each
   * dim-bounded after its first aggregate.
   */
-object SkewCensus {
+object SkewCensus extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q200_join_key_skew" -> ((s, d) => {
@@ -89,6 +89,4 @@ object SkewCensus {
          |FROM uni
          |ORDER BY table_key""".stripMargin
     })
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -30,7 +30,7 @@ import graft.functions.TextFunctions.tokens
   * (c·q(c) ≤ c·ln(c)·10⁶); past that the same terms pre-aggregate
   * hierarchically.
   */
-object SourceEntropy {
+object SourceEntropy extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q190_source_entropy" -> ((s, d) => {
@@ -83,6 +83,4 @@ object SourceEntropy {
         |       END AS evenness_ppm
         |FROM ent
         |ORDER BY source""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

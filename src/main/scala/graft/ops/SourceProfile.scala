@@ -23,7 +23,7 @@ import graft.functions.TextFunctions.{qualityScore, tokens}
   * type counts — the q184 tagged-NDV discipline per stratum; the join
   * of the two runs on source-catalog-sized frames.
   */
-object SourceProfile {
+object SourceProfile extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q188_source_profile" -> ((s, d) => {
@@ -73,6 +73,4 @@ object SourceProfile {
          |       q_sum // n_docs AS mean_quality_micro
          |FROM base b JOIN types t ON t.source = b.source
          |ORDER BY b.source""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -24,7 +24,7 @@ import graft.Tables
   * documented dim-build BNLJ shape) runs on frames bounded by the
   * source catalog.
   */
-object SplitBalance {
+object SplitBalance extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q187_split_balance" -> ((s, d) => {
@@ -86,6 +86,4 @@ object SplitBalance {
         |LEFT JOIN splittot g ON g.split = sp.split
         |CROSS JOIN tot t
         |ORDER BY sp.source, sp.split""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -56,7 +56,7 @@ import graft.functions.TextFunctions.tokens
   * no window over the corpus, no cross product (PlanSpec's global
   * sweep applies).
   */
-object SymSpell {
+object SymSpell extends graft.QueryModule {
 
   /** A type this frequent is trusted vocabulary (suggestion targets). */
   private[graft] val CanonMinFreq = 5L
@@ -165,6 +165,4 @@ object SymSpell {
          |SELECT r.word, b.sugg, b.n_sugg
          |FROM noisy r LEFT JOIN best b ON r.word = b.word AND b.rk = 1
          |ORDER BY r.word""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -11,7 +11,7 @@ import graft.functions.TextFunctions._
   * shuffle except the final presentation sort), so they scale linearly
   * with corpus size.
   */
-object TextAnalysis {
+object TextAnalysis extends graft.QueryModule {
 
   /** q73's Misra-Gries sketch size (per-source AND merge level). */
   private[graft] val MgSketchK = 64
@@ -628,6 +628,6 @@ object TextAnalysis {
     * contract replay + fast-path-equivalence verdict (r19); q73's
     * accuracy envelope by q220.
     */
-  val rowsOnly: Set[String] =
+  override val rowsOnly: Set[String] =
     Set("q24_fingerprint", "q52_corpus_curation_lsh", "q73_top_tokens_sketch")
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * middle node, one membership join on (a, c), one 3-way explode into
   * a per-node count. Nothing touches raw vectors.
   */
-object TriangleCount {
+object TriangleCount extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q211_knn_triangles" -> ((s, d) => {
@@ -63,6 +63,4 @@ object TriangleCount {
          |)
          |GROUP BY vec_id
          |ORDER BY vec_id""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

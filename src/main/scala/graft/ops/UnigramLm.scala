@@ -30,7 +30,7 @@ import graft.functions.TextFunctions.tokens
   * map — model state, the IVF/q153 edge) plus one piece-count groupBy.
   * Types scale out across tasks; no driver loop touches per-word data.
   */
-object UnigramLm {
+object UnigramLm extends graft.QueryModule {
 
   /** Max piece length (seed substrings 1..4 chars). */
   private[graft] val MaxPiece = 4
@@ -303,6 +303,4 @@ object UnigramLm {
   val oracleSql: Map[String, String] = Map(
     "q156_unigram_lm_train" -> q156OracleSql,
     "q159_tokenizer_fertility" -> q159OracleSql)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -27,7 +27,7 @@ import graft.Tables
   * the (dim) 64-key min/max aggregate; the card is 1-row folds
   * crossed at the model edge (documented BNLJ shape).
   */
-object VectorCard {
+object VectorCard extends graft.QueryModule {
 
   /** Near-zero threshold on the quantized norm²: 10⁴ ⇔ raw ‖v‖ < 0.1. */
   private[graft] val NearT = 10000L
@@ -84,6 +84,4 @@ object VectorCard {
          |)
          |SELECT n_vecs, n_zero_norm, n_near_zero, n_dup_vecs, n_const_dims
          |FROM base CROSS JOIN cdims""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -33,7 +33,7 @@ import graft.functions.TextFunctions.tokens
   * over that bounded frame (the q173 dim-frame argument, allowlisted
   * in PlanSpec's unpartitioned-window sweep).
   */
-object VocabCoverage {
+object VocabCoverage extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q177_vocab_coverage" -> ((s, d) => {
@@ -89,6 +89,4 @@ object VocabCoverage {
         |         - CAST(SUM(ff) OVER (ORDER BY j) AS BIGINT)) * 1000000
         |         // CAST(SUM(ff) OVER () AS BIGINT) AS oov_ppm
         |FROM bucketed ORDER BY vocab_cutoff""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

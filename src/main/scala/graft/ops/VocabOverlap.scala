@@ -26,7 +26,7 @@ import graft.functions.TextFunctions.tokens
   * per-source type counts ride the same frame. Nothing after the
   * distinct scales with documents.
   */
-object VocabOverlap {
+object VocabOverlap extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q195_source_vocab_overlap" -> ((s, d) => {
@@ -69,6 +69,4 @@ object VocabOverlap {
         |JOIN sizes lo ON lo.source = src_lo
         |JOIN sizes hi ON hi.source = src_hi
         |ORDER BY src_lo, src_hi""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -33,7 +33,7 @@ import graft.Tables
   * bucket-cap discipline as the LSH families. Everything is integer
   * end-to-end: the oracle replays the chain exactly.
   */
-object Winnowing {
+object Winnowing extends graft.QueryModule {
 
   /** k-gram length in canon chars; shared substrings of length
     * ≥ [[WinnowW]] + [[WinnowK]] − 1 = 11 are guaranteed caught.
@@ -282,6 +282,4 @@ object Winnowing {
          |GROUP BY a.doc_id, b.doc_id
          |HAVING COUNT(*) >= $MinShared
          |ORDER BY shared_fp DESC, doc_a, doc_b""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -40,7 +40,7 @@ import graft.functions.TextFunctions.tokens
   * collected as the 1-row model and folded back as literals. Per-round
   * localCheckpoint + eager release (the q118 retention rule).
   */
-object WordPiece {
+object WordPiece extends graft.QueryModule {
 
   /** Merge rounds — matches [[LmTokenizer.BpeRounds]] so the two
     * bottom-up families are directly comparable on the same corpus.
@@ -347,6 +347,4 @@ object WordPiece {
   val oracleSql: Map[String, String] = Map(
     "q161_wordpiece_train" -> q161OracleSql,
     "q162_wordpiece_encode" -> q162OracleSql)
-
-  val rowsOnly: Set[String] = Set.empty
 }

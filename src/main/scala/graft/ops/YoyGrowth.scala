@@ -26,7 +26,7 @@ import graft.Tables
   * ≤ brands × years frame. Nothing after the fold scales with
   * lineitem.
   */
-object YoyGrowth {
+object YoyGrowth extends graft.QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q206_yoy_brand_growth" -> ((s, d) => {
@@ -66,6 +66,4 @@ object YoyGrowth {
         |              / CAST(prev_cents AS DOUBLE)) AS BIGINT) END AS yoy_ppm
         |FROM lagged
         |ORDER BY brand, yr""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -37,7 +37,7 @@ import graft.functions.TextFunctions.tokens
   * and ONE map-side-combined fold to a 1-row sum frame — the fit
   * itself is model-edge arithmetic.
   */
-object ZipfFit {
+object ZipfFit extends graft.QueryModule {
 
   /** Head size the fit runs on — the standard Zipf-fit practice of
     * dropping the heavy-tie tail (hapax plateaus break log-log
@@ -101,6 +101,4 @@ object ZipfFit {
          |         / (CAST(n * sxx - sx * sx AS DOUBLE)
          |         * CAST(n * syy - sy * sy AS DOUBLE))) AS BIGINT) AS r2_ppm
          |FROM sums""".stripMargin)
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.ops.FrameMemo
 
 /** Z-order clustering + file-stats manifest skipping — the data-skipping
   * machinery for predicates the directory layout can't serve.
@@ -31,7 +32,7 @@ import graft.Tables
   * (maintained incrementally at write time); intersecting it is a
   * kilobyte-scale planning step that replaces a full scan.
   */
-object DataSkipping {
+object DataSkipping extends graft.QueryModule {
 
   // ------------------------------------------------------------ z-order
 
@@ -132,24 +133,21 @@ object DataSkipping {
 
   /** Z-ordered flat lineitem layout: (gx, gy, z, measures) range-
     * partitioned into 8 files by z and sorted by z within each, plus a
-    * committed stats manifest over (gx, gy) — built once per testdata
-    * dir (same load-once contract as Layout's bucketed/partitioned
-    * layouts). Returns (layout dir, manifest dir).
+    * stats manifest over (gx, gy), written under a fresh directory of
+    * the session's scratch root. Returns (layout dir, manifest dir).
     */
   def zorderedLineitem(s: SparkSession, d: String): (String, String) = {
-    val root = s"${Layout.tmpRoot}/graft_zorder_${Layout.tag(d, "lineitem")}"
-    val (data, man) = (s"$root/data", s"$root/manifest")
-    if (!(Layout.hasSuccess(s, data) && Layout.hasSuccess(s, man))) {
+    val root = FrameMemo.layout(s, d, "zorderedLineitem") { out =>
       gridXY(Tables.lineitem(s, d)
         .select("l_orderkey", "l_partkey", "l_quantity", "l_returnflag"))
         .withColumn("z", zorder16(col("gx"), col("gy")))
         .repartitionByRange(8, col("z"))
         .sortWithinPartitions("z")
-        .write.mode("overwrite").parquet(data)
-      buildManifest(s, data, Seq("gx", "gy"))
-        .coalesce(1).write.mode("overwrite").parquet(man)
+        .write.parquet(s"$out/data")
+      buildManifest(s, s"$out/data", Seq("gx", "gy"))
+        .coalesce(1).write.parquet(s"$out/manifest")
     }
-    (data, man)
+    (s"$root/data", s"$root/manifest")
   }
 
   // --------------------------------------------------- schema evolution
@@ -159,22 +157,20 @@ object DataSkipping {
     * files (first half of January) lack the column entirely; `batch=2`
     * files carry it. The hive-style `batch=` naming keeps the epochs
     * independently prunable (a crude as-of read: `batch <= k` is the
-    * table before the change). Load-once cached like the other layouts.
+    * table before the change). Written under a fresh directory of the
+    * session's scratch root; returns it.
     */
-  def evolvedEventsLayout(s: SparkSession, d: String): String = {
-    val root = s"${Layout.tmpRoot}/graft_evolved_${Layout.tag(d, "events")}"
-    val cutoff = lit("2024-01-16").cast("date")
-    val ev = Tables.events(s, d)
-    if (!Layout.hasSuccess(s, s"$root/batch=1"))
+  def evolvedEventsLayout(s: SparkSession, d: String): String =
+    FrameMemo.layout(s, d, "evolvedEvents") { root =>
+      val cutoff = lit("2024-01-16").cast("date")
+      val ev = Tables.events(s, d)
       ev.filter(to_date(col("ts")) < cutoff)
         .select("event_id", "user_id", "event_type", "ts")
-        .write.mode("overwrite").parquet(s"$root/batch=1")
-    if (!Layout.hasSuccess(s, s"$root/batch=2"))
+        .write.parquet(s"$root/batch=1")
       ev.filter(to_date(col("ts")) >= cutoff)
         .select("event_id", "user_id", "event_type", "ts", "value")
-        .write.mode("overwrite").parquet(s"$root/batch=2")
-    root
-  }
+        .write.parquet(s"$root/batch=2")
+    }
 
   // ------------------------------------------------------------ queries
 
@@ -288,6 +284,4 @@ object DataSkipping {
         |GROUP BY 1
         |ORDER BY 1""".stripMargin
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.ops.FrameMemo
 import graft.ops.StarSchema.sumMoney
 
 /** Physical table layout for scale: partitioned and bucketed parquet.
@@ -26,49 +27,7 @@ import graft.ops.StarSchema.sumMoney
   * only when buckets are single-file), no small-file explosion from
   * task x partition fan-out.
   */
-object Layout {
-
-  /** Cache tag for a derived layout: hash of the source dir PATH plus a
-    * CONTENT fingerprint (size + mtime) of the source tables it was
-    * built from. The driver regenerates testdata between rounds under
-    * the same paths — a path-only tag would let a stale cached layout
-    * (committed `_SUCCESS` from the previous round's bytes) silently
-    * serve old rows against a fresh oracle. A regeneration changes
-    * size/mtime → new tag → rebuild; the previous round's dirs just age
-    * out of /tmp.
-    */
-  private[sources] def tag(d: String, tables: String*): String = {
-    // Hadoop FS, not java.io.File: a table "file" may be a directory of
-    // part files (rewriting one part in place does NOT bump the dir
-    // mtime, so a dir-level stat would serve stale bytes), and the path
-    // may live on a non-local filesystem. Fingerprint = every file's
-    // (name, size, mtime) under the path, recursively. A MISSING source
-    // table fails loudly here — java.io.File silently yielded 0:0 and
-    // cached a layout of nothing.
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val fp = tables.sorted.map { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$d/$t.parquet")
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p))
-        throw new java.io.FileNotFoundException(
-          s"layout source table missing: $p — refusing to fingerprint an absent table")
-      val it = fs.listFiles(p, true)
-      val files = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val st = it.next()
-        files += s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-      }
-      s"$t:${files.sorted.mkString(",")}"
-    }.mkString("|")
-    java.lang.Integer.toHexString((d + "|" + fp).hashCode & 0x7fffffff)
-  }
-  private[sources] def tmpRoot: String = System.getProperty("java.io.tmpdir")
-
-  /** A committed write left Spark's _SUCCESS marker behind. */
-  private[sources] def hasSuccess(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+object Layout extends graft.QueryModule {
 
   /** Write `df` as a bucketed+sorted single-file-per-bucket parquet
     * table registered in the catalog (bucket metadata lives in the
@@ -91,43 +50,37 @@ object Layout {
       .saveAsTable(name)
   }
 
-  /** customer⋈orders + per-customer rollup over co-bucketed tables:
-    * both sides land in the same 16-bucket hash layout on custkey, so
+  /** The co-bucketed customer/orders layout of `d`: both tables written
+    * in the same 16-bucket hash layout on custkey, one file per bucket,
+    * under a fresh directory of the session's scratch root and
+    * registered in the catalog as [[bucketedTable]]. Returns the
+    * directory.
+    */
+  def bucketedLayout(s: SparkSession, d: String): String =
+    FrameMemo.layout(s, d, "bucketedLayout") { root =>
+      writeBucketed(s, Tables.customer(s, d).select("c_custkey", "c_mktsegment"),
+        bucketedTable(root, "customer"), s"$root/customer", 16, "c_custkey")
+      writeBucketed(s, Tables.orders(s, d).select("o_custkey", "o_totalprice"),
+        bucketedTable(root, "orders"), s"$root/orders", 16, "o_custkey")
+    }
+
+  /** Catalog name of `table` in the bucketed layout at `root`. It is
+    * named from the layout's directory: sessions of one context share
+    * the catalog, so a fixed name would let one session replace
+    * another's table.
+    */
+  private def bucketedTable(root: String, table: String): String =
+    s"graft_${table}_b" + root.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** customer⋈orders + per-customer rollup over the co-bucketed layout:
     * the join AND the aggregation run with zero shuffle exchange (only
     * partition-local sorts) — LayoutSpec pins that plan shape. The
     * orderBy is presentation-only (oracle hash contract).
     */
-  /** Where the co-bucketed customer/orders layout for `d` lives — the
-    * single source of truth for the path (LayoutSpec asserts on the
-    * files; deriving the tag twice is how a stale copy passes).
-    */
-  private[graft] def bucketedRoot(d: String): String =
-    bucketedRootFor(tag(d, "customer", "orders"))
-
-  private def bucketedRootFor(t: String): String =
-    s"$tmpRoot/graft_bucketed_$t"
-
-  def bucketedOrdersPerCustomer(s: SparkSession, d: String,
-                                buckets: Int = 16): DataFrame = {
-    // derive the tag ONCE and build the root from it: tag() is a
-    // recursive FS listing of both source tables, so computing it twice
-    // per call doubles that I/O for nothing
-    val t = tag(d, "customer", "orders")
-    val root = bucketedRootFor(t)
-    // bucketing's whole point is that the layout shuffle is paid ONCE at
-    // load, then every query rides it for free — so the load is
-    // idempotent: rebuild only when the catalog entry or the committed
-    // files are missing (source testdata is immutable per directory)
-    if (!(s.catalog.tableExists(s"graft_customer_b$t") &&
-        s.catalog.tableExists(s"graft_orders_b$t") &&
-        hasSuccess(s, s"$root/customer") && hasSuccess(s, s"$root/orders"))) {
-      writeBucketed(s, Tables.customer(s, d).select("c_custkey", "c_mktsegment"),
-        s"graft_customer_b$t", s"$root/customer", buckets, "c_custkey")
-      writeBucketed(s, Tables.orders(s, d).select("o_custkey", "o_totalprice"),
-        s"graft_orders_b$t", s"$root/orders", buckets, "o_custkey")
-    }
-    val c = s.table(s"graft_customer_b$t")
-    val o = s.table(s"graft_orders_b$t")
+  def bucketedOrdersPerCustomer(s: SparkSession, d: String): DataFrame = {
+    val root = bucketedLayout(s, d)
+    val c = s.table(bucketedTable(root, "customer"))
+    val o = s.table(bucketedTable(root, "orders"))
     c.join(o, c("c_custkey") === o("o_custkey"))
       .groupBy("c_custkey", "c_mktsegment")
       .agg(count(lit(1)).as("n_orders"),
@@ -136,17 +89,15 @@ object Layout {
 
   /** Events re-laid-out hive-partitioned by event day (the gold-layer
     * layout for an append-only fact: each day's load lands in its own
-    * directory, compactable and prunable independently).
+    * directory, compactable and prunable independently), written under
+    * a fresh directory of the session's scratch root. Returns it.
     */
-  def writeEventsPartitioned(s: SparkSession, d: String): String = {
-    val root = s"$tmpRoot/graft_events_parted_${tag(d, "events")}"
-    // same load-once contract as the bucketed layout
-    if (!hasSuccess(s, root))
+  def writeEventsPartitioned(s: SparkSession, d: String): String =
+    FrameMemo.layout(s, d, "eventsPartitioned") { root =>
       Tables.events(s, d)
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_date").parquet(root)
-    root
-  }
+    }
 
   /** Daily totals over a date slice of the partitioned layout. The
     * range predicate on the partition column never touches row data:
@@ -326,6 +277,4 @@ object Layout {
         |GROUP BY 1, 2
         |ORDER BY 1, 2""".stripMargin
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

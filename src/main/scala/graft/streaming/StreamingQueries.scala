@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import graft.ops.FrameMemo
 
 /** Driver-visible queries that execute through the Structured Streaming
   * engine (MicroBatchExecution + stateful aggregation), not the batch
@@ -12,115 +13,58 @@ import org.apache.spark.sql.streaming.OutputMode
   * an AvailableNow replay of the bounded events table through the
   * windowed-aggregation plan must land on exactly the batch q32 answer.
   */
-object StreamingQueries {
+object StreamingQueries extends graft.QueryModule {
 
-  /** FileStreamSource needs a directory; the testdata is one parquet
-    * FILE per table. Stage via symlink (no copy — sf0.1 events is tens
-    * of MB and Verify/Bench call this once per run), one staging dir per
-    * source dir so SFs never collide.
+  /** The events table staged for FileStreamSource, which reads a
+    * directory while the testdata holds one parquet FILE per table: a
+    * fresh directory of the session's scratch root holding a symlink to
+    * `d`/events.parquet (no copy). Returns the directory.
     */
-  private def pathDigest(raw: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(raw.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(6).map("%02x".format(_)).mkString
-
-  private[graft] def stageEventsDir(d: String): String = {
-    import java.nio.file.{Files, LinkOption, Paths}
-    val src = Paths.get(s"$d/events.parquet")
-    // readable prefix + a digest of the RAW path: sanitization alone maps
-    // distinct dirs (sf0.1 vs a hypothetical sf0_1) onto one name, and a
-    // collision would silently replay the wrong table
-    val raw = src.toAbsolutePath.toString
-    val digest = pathDigest(raw)
-    // "ev" prefix: sanitizing the absolute path turns the leading "/"
-    // into "_", and Spark's hidden-path convention filters _-prefixed
-    // names during glob resolution — every streaming query logged
-    // "WARN DataSource: All paths were ignored" against the stage dir
-    // (data still flowed via the file-source listing, but the WARN
-    // read like a stale-listing race in the bench tail)
-    val stage = Paths.get(
-      s"/tmp/graft_stream_stage/ev${raw.replaceAll("[^A-Za-z0-9]", "_")}_$digest")
-    Files.createDirectories(stage)
-    val link = stage.resolve("events.parquet")
-    // a link left from an earlier run can dangle if the target was
-    // swapped out underneath it (the driver regenerates testdata between
-    // rounds) — NOFOLLOW detects the link itself, the follow-check its
-    // health; recreate rather than trip FileAlreadyExists. deleteIfExists
-    // + the create catch make both halves of check-then-act safe against
-    // a concurrent stager (which stages the identical source anyway).
-    if (Files.exists(link, LinkOption.NOFOLLOW_LINKS) && !Files.exists(link))
-      Files.deleteIfExists(link)
-    if (!Files.exists(link, LinkOption.NOFOLLOW_LINKS))
-      try Files.createSymbolicLink(link, src)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => ()
-      }
-    stage.toString
-  }
-
-  /** Fresh per-invocation scratch dir for the maintenance-sink queries:
-    * deleted up front so each run rebuilds from zero — the rebuild is
-    * the measured work, and a leftover ledger/fact from a previous
-    * invocation can never leak into the oracle compare.
-    */
-  private def scratchDir(kind: String, d: String): String = {
-    val root = s"/tmp/graft_stream_$kind/${pathDigest(new java.io.File(d).getAbsolutePath)}"
-    // same teardown idiom as EventsStreaming.commitSwap — one recursive-
-    // delete implementation to keep correct, not two
-    Seq("", ".tmp", ".old").foreach { sfx =>
-      val f = new java.io.File(root + sfx)
-      if (f.exists()) new scala.reflect.io.Directory(f).deleteRecursively()
+  private[graft] def stageEventsDir(s: SparkSession, d: String): String =
+    FrameMemo.layout(s, d, "eventsStage") { stage =>
+      java.nio.file.Files.createSymbolicLink(
+        java.nio.file.Paths.get(stage, "events.parquet"),
+        java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
     }
-    root
-  }
+
+  /** The sink path of a maintenance-sink query (q127's gold, q128's
+    * fact): `kind` inside a fresh directory of the session's scratch
+    * root, so every run rebuilds from zero and the sink's `.tmp`/`.old`
+    * swap siblings stay inside that directory.
+    */
+  private def scratchDir(s: SparkSession, kind: String): String =
+    s"${FrameMemo.freshDir(s, kind)}/$kind"
 
   /** Micro-batch count for the q209 late-data replay. */
   private[graft] val LateBatches = 4
 
-  /** Staged K-file split of the events table for the q209 late-data
-    * replay: file i holds rows with event_id % K == i (a deterministic,
-    * ts-INTERLEAVED split — every batch spans the full time range, so
-    * once batch 0 has advanced the watermark near max(ts) − delay,
-    * batches 1..K−1 arrive mostly late: the worst-case replay the audit
-    * quantifies). Mtimes are pinned to i minutes past epoch so
-    * FileStreamSource (oldest-first) processes file i as micro-batch i,
-    * deterministically. Built once per source path (content-addressed
-    * dir, tmp→rename swap so a crashed build never half-serves; rebuild
-    * triggers only if a batch file is missing).
+  /** K-file split of the events table for the q209/q215 late-data
+    * replay, written under a fresh directory of the session's scratch
+    * root: file `b<i>.parquet` holds rows with event_id % K == i (a
+    * deterministic, ts-INTERLEAVED split — every batch spans the full
+    * time range, so once batch 0 has advanced the watermark near
+    * max(ts) − delay, batches 1..K−1 arrive mostly late: the worst-case
+    * replay the audit quantifies). Mtimes are pinned to i minutes past
+    * epoch so FileStreamSource (oldest-first) processes file i as
+    * micro-batch i, deterministically. Returns the directory.
     */
-  private[graft] def stageSplitEventsDir(s: SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val raw = Paths.get(s"$d/events.parquet").toAbsolutePath.toString
-    // "ev" prefix: see stageEventsDir (leading "_" is Spark-hidden)
-    val stage = Paths.get(s"/tmp/graft_stream_late/ev" +
-      s"${raw.replaceAll("[^A-Za-z0-9]", "_")}_${pathDigest(raw)}_$LateBatches")
-    // freshness: the driver regenerates testdata between rounds at the
-    // SAME path (the stageEventsDir dangling-symlink lesson) — a stage
-    // dir older than its source file is stale and must rebuild. The
-    // stage dir's own mtime records build time (batch files carry
-    // pinned epoch mtimes for replay ordering, so compare the dir).
-    val complete = Files.isDirectory(stage) &&
-      (0 until LateBatches).forall(i => Files.exists(stage.resolve(s"b$i.parquet"))) &&
-      Files.getLastModifiedTime(stage).compareTo(
-        Files.getLastModifiedTime(Paths.get(raw))) >= 0
-    if (!complete) {
-      val tmp = Paths.get(stage.toString + ".tmp")
-      new scala.reflect.io.Directory(tmp.toFile).deleteRecursively()
-      Files.createDirectories(tmp)
+  private[graft] def stageSplitEventsDir(s: SparkSession, d: String): String =
+    FrameMemo.layout(s, d, "lateSplitEvents") { stage =>
+      import java.nio.file.{Files, Paths}
+      import scala.jdk.CollectionConverters._
       val ev = graft.Tables.events(s, d)
       (0 until LateBatches).foreach { i =>
-        val part = tmp.resolve(s"part$i")
+        val part = Paths.get(stage, s"part$i")
+        val batch = Paths.get(stage, s"b$i.parquet")
         ev.filter(pmod(col("event_id"), lit(LateBatches.toLong)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(part.toString)
+          .coalesce(1).write.parquet(part.toString)
         val listing = Files.list(part)
         val file =
           try listing.iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet"))
             .getOrElse(throw new IllegalStateException(s"no parquet part in $part"))
           finally listing.close()
-        Files.move(file, tmp.resolve(s"b$i.parquet"))
+        Files.move(file, batch)
         new scala.reflect.io.Directory(part.toFile).deleteRecursively()
         // q209/q215 number engine batches by zipWithIndex over NON-EMPTY
         // progress entries while their oracles number by event_id % K
@@ -128,17 +72,13 @@ object StreamingQueries {
         // numberings (and the watermark recurrence) apart and the hash
         // gate would break confusingly downstream. Make the implicit
         // every-class-populated assumption a loud stage-time failure.
-        require(s.read.parquet(tmp.resolve(s"b$i.parquet").toString).limit(1).count() > 0,
+        require(s.read.parquet(batch.toString).limit(1).count() > 0,
           s"late-replay split b$i is empty: event_id residues mod $LateBatches " +
             "must all be populated or batch numbering diverges from the oracle")
-        Files.setLastModifiedTime(tmp.resolve(s"b$i.parquet"),
+        Files.setLastModifiedTime(batch,
           java.nio.file.attribute.FileTime.fromMillis(60000L * i))
       }
-      new scala.reflect.io.Directory(stage.toFile).deleteRecursively()
-      Files.move(tmp, stage)
     }
-    stage.toString
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // q209: watermark LATE-DATA QUANTIFICATION — the ops-side
@@ -196,7 +136,7 @@ object StreamingQueries {
     // merges are additive (the mergeable-sketch law, q168's spec).
     "q172_stream_hotkey_cms" -> ((s, d) => {
       import graft.ops.CountMin
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val probes = stream.select(
         posexplode(array((0 until CountMin.D).map(r =>
           CountMin.bucket(col("user_id").cast("string"), lit(r))): _*))
@@ -256,7 +196,7 @@ object StreamingQueries {
     // state eviction, is exercised in StreamingSpec; here the contract
     // is exact oracle equality).
     "q116_stream_hourly_replay" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val replayed = EventsStreaming.runToMemory(s,
         EventsStreaming.hourlyCounts(stream), "q116_stream_hourly_replay",
         OutputMode.Complete, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -276,7 +216,7 @@ object StreamingQueries {
     // ~3h of the table) stay in state and are withheld, so this answer is
     // a strict subset of q116's.
     "q119_stream_hourly_append" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val sealedWindows = EventsStreaming.runToMemory(s,
         EventsStreaming.hourlyCounts(stream), "q119_stream_hourly_append",
         OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -292,7 +232,7 @@ object StreamingQueries {
     // MERGING-state operator under the oracle gate (q119 covers
     // fixed-window state; sessions also merge windows).
     "q122_stream_sessions_append" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val sealedSessions = EventsStreaming.runToMemory(s,
         EventsStreaming.sessionWindows(stream), "q122_stream_sessions_append",
         OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -308,7 +248,7 @@ object StreamingQueries {
     // streaming join machinery (two stateful sides, interval-bounded
     // buffers) reproduces it bit-for-bit.
     "q123_stream_attribution_replay" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val joined = EventsStreaming.runToMemory(s,
         EventsStreaming.purchaseAttribution(stream),
         "q123_stream_attribution_replay",
@@ -326,7 +266,7 @@ object StreamingQueries {
     // gates the user-defined state machine a feature-store pipeline
     // writes when the built-in semantics don't fit.
     "q124_stream_sessionize_custom" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val closed = EventsStreaming.runToMemory(s,
         EventsStreaming.sessionize(s, stream), "q124_stream_sessionize_custom",
         OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -341,8 +281,8 @@ object StreamingQueries {
     // maintenance pipeline end-to-end, not a transform. Fresh scratch
     // dir per invocation: the rebuild IS the measured work.
     "q127_stream_gold_additive" -> ((s, d) => {
-      val gold = scratchDir("gold", d)
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val gold = scratchDir(s, "gold")
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val ckpt = EventsStreaming.replayCheckpointDir("q127")
       // state-partition discipline (see withStatePartitions): the
       // foreachBatch batch aggregation + merge write run at 8, matching
@@ -367,8 +307,8 @@ object StreamingQueries {
     // CONFLICT loader. Oracle = the hourly totals the final fact must
     // converge to (q32's aggregation).
     "q128_stream_fact_upsert" -> ((s, d) => {
-      val fact = scratchDir("fact", d)
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val fact = scratchDir(s, "fact")
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val ckpt = EventsStreaming.replayCheckpointDir("q128")
       // state-partition discipline (see withStatePartitions): the
       // Update-mode aggregation's state store otherwise inherits the
@@ -391,7 +331,7 @@ object StreamingQueries {
     // flatMapGroupsWithState): per-user running event counts in Update
     // mode; on a bounded replay the final update per user IS the total.
     "q129_stream_user_counts" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val counts = EventsStreaming.runToMemory(s,
         EventsStreaming.runningUserCounts(s, stream),
         "q129_stream_user_counts", OutputMode.Update, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -407,7 +347,7 @@ object StreamingQueries {
     // after the watermark window re-admitted) needs controlled
     // micro-batch fixtures and is pinned in StreamingSpec.
     "q130_stream_dedup_ingest" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val deduped = EventsStreaming.runToMemory(s,
         EventsStreaming.dedupEvents(stream), "q130_stream_dedup_ingest",
         OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -428,7 +368,7 @@ object StreamingQueries {
     // rows are restricted to purchases the final watermark expired;
     // unmatched purchases in the last 2h stay withheld in state.
     "q126_stream_attribution_outer" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val joined = EventsStreaming.runToMemory(s,
         EventsStreaming.purchaseAttribution(stream, joinType = "left_outer"),
         "q126_stream_attribution_outer",
@@ -437,7 +377,7 @@ object StreamingQueries {
     }),
 
     "q125_stream_enrich_replay" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val enriched = EventsStreaming.runToMemory(s,
         EventsStreaming.enrichWithRegion(s, stream, d),
         "q125_stream_enrich_replay",
@@ -453,7 +393,7 @@ object StreamingQueries {
     // purchase_ts ∈ [click_ts, click_ts + 1h]. Clicks in the last 3h
     // (1h interval + 2h delay) stay withheld in state.
     "q143_stream_attribution_full" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(d))
+      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
       val joined = EventsStreaming.runToMemory(s,
         EventsStreaming.purchaseAttribution(stream, joinType = "full_outer"),
         "q143_stream_attribution_full",
@@ -795,6 +735,4 @@ object StreamingQueries {
         |JOIN region r ON r.r_regionkey = n.n_regionkey
         |ORDER BY e.event_id""".stripMargin
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

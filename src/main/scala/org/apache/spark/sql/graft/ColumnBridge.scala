@@ -95,4 +95,11 @@ object ColumnBridge {
         Some(lr.rdd.getStorageLevel)
       case _ => None
     }
+
+  /** A new directory `prefix-<uuid>` under the JVM temp dir, deleted
+    * with its contents at JVM exit (`Utils.createTempDir` is
+    * `private[spark]`).
+    */
+  def tempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getPath
 }

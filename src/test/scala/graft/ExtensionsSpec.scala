@@ -73,10 +73,10 @@ class ExtensionsSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     docs.write.mode("overwrite").parquet("/tmp/graft_test/documents.parquet")
     // reuse the other tables from testdata by pointing dir at a tmp copy
-    val pairs = ops.Dedup.queries("q27_dedup_minhash_lsh")(spark, "/tmp/graft_test")
+    val pairs = ops.Dedup.baseQueries("q27_dedup_minhash_lsh")(spark, "/tmp/graft_test")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((0L, 1L)))
-    val exact = ops.Dedup.queries("q26_dedup_ngram_jaccard")(spark, "/tmp/graft_test")
+    val exact = ops.Dedup.baseQueries("q26_dedup_ngram_jaccard")(spark, "/tmp/graft_test")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(exact.toSeq == Seq((0L, 1L)))
   }
@@ -89,7 +89,7 @@ class ExtensionsSpec extends AnyFunSuite {
       (2L, unrelated, "en", "t", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet("/tmp/graft_test2/documents.parquet")
-    val pairs = ops.Dedup.queries("q28_dedup_simhash")(spark, "/tmp/graft_test2")
+    val pairs = ops.Dedup.baseQueries("q28_dedup_simhash")(spark, "/tmp/graft_test2")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((0L, 1L)))
   }
@@ -100,7 +100,7 @@ class ExtensionsSpec extends AnyFunSuite {
       (7L, "different", "en", "t", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet("/tmp/graft_test3/documents.parquet")
-    val r = ops.Dedup.queries("q25_dedup_exact")(spark, "/tmp/graft_test3")
+    val r = ops.Dedup.baseQueries("q25_dedup_exact")(spark, "/tmp/graft_test3")
       .collect().map(x => (x.getLong(1), x.getLong(2)))
     assert(r.toSeq == Seq((3L, 2L), (7L, 1L))) // canonical=min id, copies
   }
@@ -113,7 +113,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val rows = Seq((0L, v0, 0), (1L, v0near, 0)) ++ others
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet("/tmp/graft_test4/embeddings.parquet")
-    val r = ops.SimilaritySearch.queries("q30_knn_bruteforce")(spark, "/tmp/graft_test4")
+    val r = ops.SimilaritySearch.baseQueries("q30_knn_bruteforce")(spark, "/tmp/graft_test4")
       .filter(col("query_id") === 0 && col("rank") === 1).collect()
     assert(r(0).getLong(1) == 1L) // neighbor_id
   }

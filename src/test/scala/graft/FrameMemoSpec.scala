@@ -193,6 +193,34 @@ class FrameMemoSpec extends AnyFunSuite {
     assert(builds == 0)
   }
 
+  test("prebuild builds every declared shared artifact without streaming or touching the shuffle width") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.streams.addListener(listener)
+    val t0 = System.nanoTime()
+    val built =
+      try FrameMemo.prebuild(spark, snapshot, SparkEntry.sharedArtifacts)
+      finally {
+        org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
+        spark.streams.removeListener(listener)
+      }
+    info(f"prebuild of ${SparkEntry.sharedArtifacts.size} artifacts: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    built match {
+      case Right(secs) => assert(secs.map(_._1) == SparkEntry.sharedArtifacts.map(_._1))
+      case Left(failed) => fail(s"artifacts failed: ${failed.mkString(", ")}")
+    }
+    assert(started.get == 0, "a shared artifact started a streaming query")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == width,
+      "a shared artifact changed the session's shuffle width")
+  }
+
   test("value: concurrent callers of one key share one build and one instance") {
     val key = s"value-concurrent-spec-${System.nanoTime()}"
     val (builds, first, second) = raceOneKey(() => new Object)(

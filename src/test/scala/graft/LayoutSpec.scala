@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Layout
+import graft.ops.FrameMemo
 import graft.ops.StarSchema.sumMoney
 
 /** Physical-layout guarantees: bucketed tables join and aggregate with
@@ -149,23 +150,82 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("bucketed writes land exactly one file per bucket") {
-    Layout.bucketedOrdersPerCustomer(spark, d) // ensure written
+    val root = Layout.bucketedLayout(spark, d)
     for (sub <- Seq("customer", "orders")) {
-      // the REAL root via Layout.bucketedRoot — a re-derived tag here
-      // once let the assertion pass against a stale dir from an older
-      // tag scheme
-      val files = new java.io.File(s"${Layout.bucketedRoot(d)}/$sub")
+      val files = new java.io.File(s"$root/$sub")
         .listFiles().filter(_.getName.endsWith(".parquet"))
       assert(files.length == 16, s"$sub: ${files.length} files for 16 buckets")
     }
   }
 
-  test("layout tag fails loudly on a missing source table") {
-    // java.io.File stats silently fingerprinted an absent table as 0:0
-    // and cached a layout of nothing; the Hadoop-FS tag must refuse
-    val e = intercept[java.io.FileNotFoundException](
-      Layout.bucketedRoot("/tmp/graft_no_such_dir_xyz"))
-    assert(e.getMessage.contains("refusing to fingerprint"))
+  test("layout builder fails loudly on a missing source table") {
+    // an absent source must surface as a named error on every call, not
+    // as an empty layout, and the failure must not be memoized
+    def attempt() = intercept[org.apache.spark.sql.AnalysisException](
+      Layout.bucketedLayout(spark, "/tmp/graft_no_such_dir_xyz"))
+    for (e <- Seq(attempt(), attempt())) {
+      assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+      assert(e.getMessage.contains("graft_no_such_dir_xyz/customer.parquet"))
+    }
+  }
+
+  /** The on-disk layouts of `SparkEntry.sharedArtifacts`, by name. */
+  private val layouts = Seq("bucketedLayout", "eventsPartitioned", "zorderedLineitem",
+    "evolvedEvents", "eventsStage", "lateSplitEvents")
+
+  private def pathsOf(built: Any): Seq[String] = built match {
+    case p: String => Seq(p)
+    case (a: String, b: String) => Seq(a, b)
+    case other => fail(s"not a layout path: $other")
+  }
+
+  test("each layout is a memoized path: a second call returns it and starts 0 jobs") {
+    val s = spark.newSession()
+    val builders = SparkEntry.sharedArtifacts.toMap
+    for (name <- layouts) {
+      val first = builders(name)(s, d)
+      val (second, jobs) = SparkTestSession.jobsDuring(builders(name)(s, d))
+      assert(second == first, s"$name: second call returned another path")
+      assert(jobs == 0, s"$name: second call started $jobs jobs")
+      pathsOf(first).foreach(p =>
+        assert(p.startsWith(FrameMemo.scratchRoot(s) + "/") && new java.io.File(p).isDirectory,
+          s"$name: $p is not a directory under the session's scratch root"))
+    }
+  }
+
+  test("another session builds its own layouts under its own scratch root") {
+    val (a, b) = (spark.newSession(), spark.newSession())
+    assert(FrameMemo.scratchRoot(a) != FrameMemo.scratchRoot(b))
+    for (name <- layouts) {
+      val build = SparkEntry.sharedArtifacts.toMap.apply(name)
+      val (pa, pb) = (pathsOf(build(a, d)), pathsOf(build(b, d)))
+      assert(pa.forall(_.startsWith(FrameMemo.scratchRoot(a) + "/")), name)
+      assert(pb.forall(_.startsWith(FrameMemo.scratchRoot(b) + "/")), name)
+    }
+    // the two sessions share one catalog: each reads its own bucketed tables
+    val q56 = SparkEntry.queries("q56_bucketed_join")
+    assert(q56(a, d).collect().toSeq == q56(b, d).collect().toSeq)
+  }
+
+  test("the scratch root is one fresh dir under java.io.tmpdir, not a content-tagged name") {
+    val root = java.nio.file.Paths.get(FrameMemo.scratchRoot(spark))
+    assert(root.getParent == java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    assert(!root.getFileName.toString.matches("graft_.*_[0-9a-f]+"), root.toString)
+    assert(FrameMemo.scratchRoot(spark) == root.toString, "one root per session")
+  }
+
+  test("a fixture rewritten at the same path is re-staged: q215 reflects the new rows") {
+    // a non-snapshot dir under the session's scratch root, gone at JVM exit
+    val dir = FrameMemo.freshDir(spark, "restage-fixture")
+    def q215() = SparkEntry.queries("q215_stream_state_audit")(spark, dir).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    // one row per event_id residue, all in one hour: a single cell in state
+    StateAuditSpec.writeEvents(spark, dir, (0L to 3L).map(_ -> "2024-01-01T01:30:00Z"))
+    val before = q215()
+    assert(before == (0 to 3).map(i => (i, 1L, 1L, 0L)), before.mkString(", "))
+    StateAuditSpec.writeEvents(spark, dir, StateAuditSpec.HandFixture)
+    val after = q215()
+    assert(after == StateAuditSpec.HandFixtureAudit, after.mkString(", "))
   }
 
   test("q92 plans a dynamic partition pruning subquery on the fact scan") {

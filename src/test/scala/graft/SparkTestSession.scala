@@ -22,4 +22,21 @@ object SparkTestSession {
     Logs.silenceCheckpointReleaseWarning()
     s
   }
+
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBusBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBusBridge.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -10,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StateAuditSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  import spark.implicits._
 
   private def run(dir: String): Seq[(Int, Long, Long, Long)] =
     SparkEntry.queries("q215_stream_state_audit")(spark, dir).collect()
@@ -23,27 +22,10 @@ class StateAuditSpec extends AnyFunSuite {
     // 2 left); batch 2's late filter (lagged wm 04:00) drops the
     // 03:30 row, inserts 06:00 (3 in state, eviction wm 04:30 removes
     // none); batch 3 drops 03:00, updates 06:00 (3 in state).
-    val rows = Seq(
-      (0L, "2024-01-01T01:30:00Z"), (4L, "2024-01-01T06:00:00Z"),
-      (1L, "2024-01-01T03:59:59.999999Z"), (5L, "2024-01-01T04:00:00Z"),
-      (9L, "2024-01-01T06:30:00Z"),
-      (2L, "2024-01-01T03:30:00Z"), (6L, "2024-01-01T05:00:00Z"),
-      (3L, "2024-01-01T03:00:00Z"), (7L, "2024-01-01T05:30:00Z"))
     val dir = java.nio.file.Files.createTempDirectory("graft-state").toString
-    rows.toDF("event_id", "tss")
-      .select(col("event_id"), to_timestamp(col("tss")).as("ts"))
-      .withColumn("user_id", col("event_id") % 3)
-      .withColumn("event_type", lit("click"))
-      .withColumn("value", lit(1.0))
-      .withColumn("props", lit("{}"))
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    StateAuditSpec.writeEvents(spark, dir, StateAuditSpec.HandFixture)
     val got = run(dir)
-    assert(got == Seq(
-      (0, 2L, 2L, 0L),
-      (1, 2L, 3L, 2L),
-      (2, 3L, 1L, 0L),
-      (3, 3L, 1L, 0L)), got.mkString(", "))
+    assert(got == StateAuditSpec.HandFixtureAudit, got.mkString(", "))
   }
 
   test("q215: engine state counters equal the documented lifecycle on the corpus") {
@@ -79,5 +61,39 @@ class StateAuditSpec extends AnyFunSuite {
     val got = run(d)
     assert(got == expected, s"engine $got vs lifecycle $expected")
     assert(got.map(_._4).sum > 0, "the replay must actually evict state")
+  }
+}
+
+object StateAuditSpec {
+
+  /** The hand fixture: (event_id, ts) rows. */
+  val HandFixture: Seq[(Long, String)] = Seq(
+    (0L, "2024-01-01T01:30:00Z"), (4L, "2024-01-01T06:00:00Z"),
+    (1L, "2024-01-01T03:59:59.999999Z"), (5L, "2024-01-01T04:00:00Z"),
+    (9L, "2024-01-01T06:30:00Z"),
+    (2L, "2024-01-01T03:30:00Z"), (6L, "2024-01-01T05:00:00Z"),
+    (3L, "2024-01-01T03:00:00Z"), (7L, "2024-01-01T05:30:00Z"))
+
+  /** q215's answer on [[HandFixture]]. */
+  val HandFixtureAudit: Seq[(Int, Long, Long, Long)] = Seq(
+    (0, 2L, 2L, 0L),
+    (1, 2L, 3L, 2L),
+    (2, 3L, 1L, 0L),
+    (3, 3L, 1L, 0L))
+
+  /** Write `rows` (event_id, ISO timestamp) as `dir`/events.parquet in the
+    * events schema, replacing any earlier file at that path.
+    */
+  def writeEvents(spark: org.apache.spark.sql.SparkSession, dir: String,
+                  rows: Seq[(Long, String)]): Unit = {
+    import spark.implicits._
+    rows.toDF("event_id", "tss")
+      .select(col("event_id"), to_timestamp(col("tss")).as("ts"))
+      .withColumn("user_id", col("event_id") % 3)
+      .withColumn("event_type", lit("click"))
+      .withColumn("value", lit(1.0))
+      .withColumn("props", lit("{}"))
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
   }
 }

@@ -44,7 +44,7 @@ class StreamingSpec extends AnyFunSuite {
     // the 15 streaming queries of a bench/verify session — a stale or
     // state-corrupting listing would show up as a second-run drift).
     val d = "/root/testdata/sf0.001"
-    val stage = streaming.StreamingQueries.stageEventsDir(d)
+    val stage = streaming.StreamingQueries.stageEventsDir(spark, d)
     val name = java.nio.file.Paths.get(stage).getFileName.toString
     assert(!name.startsWith("_") && !name.startsWith("."),
       s"stage dir '$name' is hidden under Spark's path conventions")
