@@ -28,8 +28,15 @@ object Medallion {
     * dedup on raw values, string→date/double coercion with null-on-error
     * (`try_cast` ≡ pandas `errors="coerce"`), trim, range validation
     * (NULL fails `between`, matching pandas NaN-comparison-is-False),
-    * median imputation (observable no-op — the range filter already
-    * dropped nulls; kept for capability parity), not-null date.
+    * not-null date, median imputation (observable no-op — the range
+    * filter already dropped nulls; kept for capability parity).
+    *
+    * The reference drops null dates after imputing; here the date filter
+    * runs first. The output is the same: the range filter has already
+    * dropped every null measure, so the median fills nothing, and the
+    * rows it sees are exactly the rows kept. Filtering first gives the
+    * median branch and the main branch one identical subtree, so AQE
+    * reuses its exchange and bronze is scanned and deduplicated once.
     */
   def cleanEnergy(bronze: DataFrame): DataFrame =
     bronze
@@ -42,10 +49,12 @@ object Medallion {
         expr("try_cast(temperature_c AS double)").as("temperature_c"))
       .filter(col("temperature_c").between(-40, 60))
       .filter(col("consumption_mwh").between(0, 2000000))
-      .transform(imputeMedian("consumption_mwh"))
       .filter(col("date").isNotNull)
+      .transform(imputeMedian("consumption_mwh"))
 
-  /** Silver cleaning for emissions (bronze_to_silver.py:48-75). */
+  /** Silver cleaning for emissions (bronze_to_silver.py:48-75), with
+    * the same filter order as [[cleanEnergy]].
+    */
   def cleanEmissions(bronze: DataFrame): DataFrame =
     bronze
       .dropDuplicates()
@@ -55,8 +64,8 @@ object Medallion {
         strip(col("sector")).as("sector"),
         expr("try_cast(co2_tonnes AS double)").as("co2_tonnes"))
       .filter(col("co2_tonnes").between(0, 5000000))
-      .transform(imputeMedian("co2_tonnes"))
       .filter(col("date").isNotNull)
+      .transform(imputeMedian("co2_tonnes"))
 
   /** Single-pass data-quality observability: attach `Observation`
     * metrics to the INPUT of a cleaning stage so the reject report

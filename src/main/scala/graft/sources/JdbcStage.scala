@@ -15,13 +15,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * production.
   *
   * Scale shape: a JDBC endpoint is a single-database choke point, so at
-  * 100 TB the fact tables stay in parquet (see `pipeline.EnergyStar`)
-  * and JDBC carries only what the reference stages through it — dims
-  * and monthly aggregates, thousands of rows. `numPartitions` caps the
-  * writer's connection fan-in so a 1000-executor cluster doesn't open a
-  * socket per task against one database; the read-back side is a single
-  * partition (dims are small by definition — never range-partition a
-  * 25-row read).
+  * 100 TB the row-level data stays in the lake's silver/gold parquet and
+  * JDBC carries only what the reference stages through it — the
+  * materialized star of `pipeline.EnergyStar`: dims and monthly
+  * aggregates, thousands of rows bounded by dim cardinalities, read
+  * from executor memory. `numPartitions` caps the writer's connection
+  * fan-in so a 1000-executor cluster doesn't open a socket per task
+  * against one database; the read-back side is a single partition
+  * (dims are small by definition — never range-partition a 25-row
+  * read).
   */
 object JdbcStage {
 

@@ -21,8 +21,11 @@ import graft.pipeline.EnergyStar
   * Scale note: the driver-side connection executes set-based statements
   * only — no per-row loops; row volume stays inside the database. The
   * warehouse tables here are dims and monthly aggregates (thousands of
-  * rows — the reference's exact payload); 100 TB fact data stays in
-  * parquet (`EnergyStar`), where Spark IS the warehouse.
+  * rows — the reference's exact payload), the same rows `EnergyStar`
+  * holds materialized in executor memory, bounded by dim cardinalities
+  * (regions × sources/sectors × months), not by data volume. 100 TB of
+  * row-level data stays in the lake's silver/gold parquet, where Spark
+  * IS the warehouse.
   */
 object JdbcWarehouse {
 

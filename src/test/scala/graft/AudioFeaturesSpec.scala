@@ -25,7 +25,7 @@ class AudioFeaturesSpec extends AnyFunSuite {
   test("q213: two samples resample into 8 windows; ASCII bytes are all negative samples") {
     // "ab" -> bytes 97, 98 -> samples -7936, -7680; windowBounds(2, 8)
     // puts windows 0-3 on sample 0 and 4-7 on sample 1
-    val dir = java.nio.file.Files.createTempDirectory("graft-audio").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-audio")
     write(dir, Seq((2L, "ab")))
     val got = run(dir)
     val expect = (0 to 3).map(w => (2L, w, 1L, 7936L, 0L, 7936L)) ++
@@ -37,7 +37,7 @@ class AudioFeaturesSpec extends AnyFunSuite {
     // "a" + "é"(0xC3 0xA9) + "b"*13 -> 16 bytes -> 8 windows of 2:
     // window 0 = (97-, 195+): one flip; window 1 = (169+, 98-): one
     // flip; windows 2-7 all-'b', no flips
-    val dir = java.nio.file.Files.createTempDirectory("graft-audio2").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-audio2")
     write(dir, Seq((2L, "aé" + "b" * 13)))
     val got = run(dir)
     assert(got.size == 8)

@@ -21,7 +21,7 @@ class CommonDirectionSpec extends AnyFunSuite {
     // q210's fixture: direction converges to (1000, 171); label 0 vecs
     // (1.0, 0) -> dot = 1000·1000; label 1 vec (0.6, 0.8) ->
     // 600·1000 + 800·171 = 736800
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdir").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-cdir")
     val vecs = Seq(
       (0L, Seq(1.0f, 0.0f), 0), (1L, Seq(1.0f, 0.0f), 0),
       (2L, Seq(1.0f, 0.0f), 0), (3L, Seq(0.6f, 0.8f), 1))

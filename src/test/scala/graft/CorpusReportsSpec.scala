@@ -15,7 +15,7 @@ class CorpusReportsSpec extends AnyFunSuite {
     import spark.implicits._
     // 80 tokens -> starts 0,24,48,72 with sizes 32,32,32,8
     val text = (1 to 80).map(i => s"t$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-chunks").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-chunks")
     Seq((1L, text, "en", "src0", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -17,7 +17,7 @@ class CrossModalDedupSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("planted identical image docs land in 'both'; unrelated docs pair with nobody") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-xmodal").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-xmodal")
     val same = "the quick brown fox jumps over the lazy dog again and again tonight"
     val other = "completely unrelated corpus text carrying nothing shared whatsoever here"
     // doc_id % 3 == 0 -> BMP container: 0 and 3 are the SAME bytes in

@@ -21,7 +21,7 @@ class DfProfileSpec extends AnyFunSuite {
   }
 
   test("q219: hand buckets — a df-3 shingle lands in bit-length bucket 2") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dfprof").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-dfprof")
     Seq((0L, "a b c d"), (1L, "a b c x"), (2L, "a b c y"))
       .map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

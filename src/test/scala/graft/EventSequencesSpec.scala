@@ -20,7 +20,7 @@ class EventSequencesSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 
   test("q216: order gates conversion — a purchase before the first view never counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-funnel")
     write(dir, Seq(
       // user 1: full ordered funnel
       (1L, 1L, "view", "2024-01-01T00:00:00Z"),
@@ -44,7 +44,7 @@ class EventSequencesSpec extends AnyFunSuite {
   }
 
   test("q222: hand-checkable deltas; corpus quantiles equal a scala brute force") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ttc").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-ttc")
     write(dir, Seq(
       (1L, 1L, "view", "2024-01-01T00:00:00Z"),
       (2L, 1L, "click", "2024-01-01T00:10:00Z"),

@@ -35,7 +35,7 @@ class ImageHashSpec extends AnyFunSuite {
   }
 
   test("q212: gradient ramps pin the exact hash; BMP and PPM of the same bytes agree") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dhash").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-dhash")
     // ids 0 (BMP) and 3 (BMP) / 1 and 4 (PPM): ascending ramp under
     // both containers, descending ramp under BMP
     write(dir, Seq(
@@ -55,7 +55,7 @@ class ImageHashSpec extends AnyFunSuite {
   }
 
   test("q212: identical texts are image dups across formats; corpus covers every image doc") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dhash2").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-dhash2")
     val t = "the same document body repeated verbatim for the dup pair"
     write(dir, Seq((0L, t), (1L, t), (3L, t), (6L, "another body entirely " * 3)))
     val got = run(dir)
@@ -75,7 +75,7 @@ class ImageHashSpec extends AnyFunSuite {
   test("q221: pigeonhole pairs equal the brute-force hamming<=3 graph; cross-container dups pair at 0") {
     // hand fixture: ids 0/1 = same bytes under BMP vs PPM (hamming 0),
     // id 3 = descending ramp (hamming 64 from the ascending pair)
-    val dir = java.nio.file.Files.createTempDirectory("graft-dhash3").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-dhash3")
     write(dir, Seq((0L, ramp(desc = false)), (1L, ramp(desc = false)),
       (3L, ramp(desc = true))))
     val pairs = ops.ImageHash.queries("q221_image_neardup_pairs")(spark, dir)

@@ -51,7 +51,7 @@ class IntervalSpec extends AnyFunSuite {
       .withColumn("ts", timestamp_micros(col("us")))
       .withColumn("props", lit("{}"))
       .drop("us")
-    val dir = java.nio.file.Files.createTempDirectory("graft-interval").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-interval")
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("q81_click_attribution")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(3))).toList

@@ -35,7 +35,7 @@ class LateAuditSpec extends AnyFunSuite {
       (9L, "2024-01-01T06:30:00Z"),
       (2L, "2024-01-01T03:30:00Z"), (6L, "2024-01-01T05:00:00Z"),
       (3L, "2024-01-01T03:00:00Z"), (7L, "2024-01-01T05:30:00Z"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-late").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-late")
     rows.toDF("event_id", "tss")
       .select(col("event_id"), to_timestamp(col("tss")).as("ts"))
       .withColumn("user_id", col("event_id") % 3)

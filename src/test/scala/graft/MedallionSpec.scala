@@ -1,14 +1,19 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.datagen.EnergyGen
-import graft.pipeline.{Analysis, EnergyStar, Medallion, StarOps}
+import graft.pipeline.{Analysis, EnergyStar, Medallion, RunMedallion, StarOps}
 
 /** Reference-parity invariants (FIXTURES.md §A) over the deterministic
   * generated bronze data, on a reduced 6-month window for test speed.
   */
-class MedallionSpec extends AnyFunSuite {
+class MedallionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
   private val start = "2023-01-01"
@@ -18,6 +23,31 @@ class MedallionSpec extends AnyFunSuite {
   private lazy val emissionsBronze = EnergyGen.emissionsBronze(spark, start, end).cache()
   private lazy val energySilver = Medallion.cleanEnergy(energyBronze).cache()
   private lazy val emissionsSilver = Medallion.cleanEmissions(emissionsBronze).cache()
+
+  /** The star as the pipeline builds it: from gold marts read back from
+    * year-partitioned parquet, so a lazy star would plan file scans.
+    */
+  private lazy val parquetStar: EnergyStar = {
+    val root = ColumnBridge.tempDir("graft-gold")
+    def gold(df: DataFrame, name: String): DataFrame = {
+      df.write.partitionBy("year").parquet(s"$root/$name")
+      spark.read.parquet(s"$root/$name")
+    }
+    EnergyStar.build(
+      gold(Medallion.energyMonthly(energySilver), "energy_monthly"),
+      gold(Medallion.emissionsMonthly(emissionsSilver), "emissions_monthly"),
+      gold(Medallion.carbonIntensity(energySilver, emissionsSilver), "carbon_intensity"))
+  }
+
+  /** A new Derby database in a temp dir deleted at JVM exit. */
+  private def freshDerbyUrl(name: String): String =
+    graft.sources.JdbcStage.derbyUrl(s"${ColumnBridge.tempDir("graft-derby")}/$name")
+
+  /** The final adaptive plan of `df` after collecting it. */
+  private def executed(df: DataFrame) = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
 
   test("bronze energy has expected shape and dirt profile") {
     val base = nDays * 4 * 4
@@ -124,7 +154,7 @@ class MedallionSpec extends AnyFunSuite {
 
   test("S5/S6: JDBC staging round-trip through embedded Derby") {
     import graft.sources.JdbcStage
-    val url = JdbcStage.derbyUrl("/tmp/graft_test_derby/db")
+    val url = freshDerbyUrl("db")
     val star = EnergyStar.build(
       Medallion.energyMonthly(energySilver),
       Medallion.emissionsMonthly(emissionsSilver),
@@ -156,7 +186,7 @@ class MedallionSpec extends AnyFunSuite {
 
   test("M5: transactional warehouse load through Derby (idempotent, updating, atomic)") {
     import graft.sources.{JdbcStage, JdbcWarehouse}
-    val url = JdbcStage.derbyUrl("/tmp/graft_test_derby/warehouse")
+    val url = freshDerbyUrl("warehouse")
     val star = EnergyStar.build(
       Medallion.energyMonthly(energySilver),
       Medallion.emissionsMonthly(emissionsSilver),
@@ -199,12 +229,10 @@ class MedallionSpec extends AnyFunSuite {
     // facts from staged ids to STORED ids — or history silently
     // re-points.
     import graft.sources.{JdbcStage, JdbcWarehouse}
-    // fresh warehouse per run: this test's whole point is the two-load
-    // id lifecycle, so a database persisted from a previous run (where
-    // the evolved dim was already inserted) would shift the expectations
-    new scala.reflect.io.Directory(
-      new java.io.File("/tmp/graft_test_derby/warehouse_evolve")).deleteRecursively()
-    val url = JdbcStage.derbyUrl("/tmp/graft_test_derby/warehouse_evolve")
+    // fresh warehouse: this test's whole point is the two-load id
+    // lifecycle, so a database where the evolved dim was already
+    // inserted would shift the expectations
+    val url = freshDerbyUrl("warehouse_evolve")
     val eM = Medallion.energyMonthly(energySilver)
     val sM = Medallion.emissionsMonthly(emissionsSilver)
     val ci = Medallion.carbonIntensity(energySilver, emissionsSilver)
@@ -242,10 +270,8 @@ class MedallionSpec extends AnyFunSuite {
     // must add them itself (SQL/01_create_schema.sql parity) so a
     // concurrent loader or dirty staging can't silently insert
     // colliding ids / duplicate natural keys that fan the fact rekey out
-    import graft.sources.{JdbcStage, JdbcWarehouse}
-    new scala.reflect.io.Directory(
-      new java.io.File("/tmp/graft_test_derby/warehouse_constraints")).deleteRecursively()
-    val url = JdbcStage.derbyUrl("/tmp/graft_test_derby/warehouse_constraints")
+    import graft.sources.JdbcWarehouse
+    val url = freshDerbyUrl("warehouse_constraints")
     JdbcWarehouse.loadStar(url, EnergyStar.build(
       Medallion.energyMonthly(energySilver),
       Medallion.emissionsMonthly(emissionsSilver),
@@ -271,6 +297,46 @@ class MedallionSpec extends AnyFunSuite {
           """INSERT INTO fact_carbon_intensity SELECT * FROM fact_carbon_intensity FETCH FIRST 1 ROWS ONLY"""))
       assert(factDup.getSQLState == "23505", s"got ${factDup.getSQLState}")
     } finally conn.close()
+  }
+
+  test("star frames are materialized: q1-q7 run without a file scan") {
+    val star = parquetStar
+    Seq(
+      "q1" -> Analysis.q1TableCounts(star),
+      "q2" -> Analysis.q2MonthlyIntensity(star),
+      "q3" -> Analysis.q3TopIntensityMonths(star),
+      "q4" -> Analysis.q4AvgConsumptionPerSource(star),
+      "q5" -> Analysis.q5EmissionsVsEnergy(star),
+      "q6" -> Analysis.q6NullIntensityCount(star),
+      "q7" -> Analysis.q7IntensityRanking2024(star)
+    ).foreach { case (n, df) =>
+      val plan = executed(df)
+      val scans = collect(plan) { case f: FileSourceScanExec => f }
+      assert(scans.isEmpty, s"$n re-reads the gold parquet:\n$plan")
+    }
+  }
+
+  test("loadStar starts one Spark job per staging write") {
+    import graft.sources.JdbcWarehouse
+    val url = freshDerbyUrl("warehouse_jobs")
+    val (_, jobs) = SparkTestSession.jobsDuring(JdbcWarehouse.loadStar(url, parquetStar))
+    assert(jobs == 7, s"expected 7 staging-write jobs, got $jobs")
+  }
+
+  test("silver cleaning scans bronze once: the median branch reuses the dedup exchange") {
+    val root = ColumnBridge.tempDir("graft-bronze")
+    Seq[(String, DataFrame, org.apache.spark.sql.types.StructType, DataFrame => DataFrame)](
+      ("energy", energyBronze, RunMedallion.EnergyBronzeSchema, Medallion.cleanEnergy),
+      ("emissions", emissionsBronze, RunMedallion.EmissionsBronzeSchema, Medallion.cleanEmissions)
+    ).foreach { case (n, bronze, schema, clean) =>
+      bronze.write.option("header", true).csv(s"$root/$n")
+      val plan = executed(clean(
+        spark.read.schema(schema).option("header", true).csv(s"$root/$n")))
+      val scans = collect(plan) { case f: FileSourceScanExec => f }
+      val reused = collect(plan) { case r: ReusedExchangeExec => r }
+      assert(scans.size == 1 && reused.nonEmpty,
+        s"$n: ${scans.size} CSV scans, ${reused.size} reused exchanges:\n$plan")
+    }
   }
 
   test("assertNoNulls fails fast on null keys") {

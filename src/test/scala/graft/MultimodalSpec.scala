@@ -287,7 +287,7 @@ class MultimodalSpec extends AnyFunSuite {
     // row — never a dropped doc
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mm-empty").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-mm-empty")
     Seq((0L, ""), (1L, ""), (2L, ""), (3L, "abc"))
       .toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),

@@ -24,7 +24,7 @@ class PowerIterationSpec extends AnyFunSuite {
     // v0=(1000,1000) -> w1=(3.84e9, 1.12e9) -> v1=(1000, 291)
     // -> v2=(1000, 190) -> v3=(1000, 174) -> v4..v10=(1000, 171):
     // the integer iterate reaches its ±1000-resolution fixed point
-    val dir = java.nio.file.Files.createTempDirectory("graft-power").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-power")
     val vecs = Seq(
       (0L, Seq(1.0f, 0.0f), 0), (1L, Seq(1.0f, 0.0f), 0),
       (2L, Seq(1.0f, 0.0f), 0), (3L, Seq(0.6f, 0.8f), 1))

@@ -22,7 +22,7 @@ class StateAuditSpec extends AnyFunSuite {
     // 2 left); batch 2's late filter (lagged wm 04:00) drops the
     // 03:30 row, inserts 06:00 (3 in state, eviction wm 04:30 removes
     // none); batch 3 drops 03:00, updates 06:00 (3 in state).
-    val dir = java.nio.file.Files.createTempDirectory("graft-state").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-state")
     StateAuditSpec.writeEvents(spark, dir, StateAuditSpec.HandFixture)
     val got = run(dir)
     assert(got == StateAuditSpec.HandFixtureAudit, got.mkString(", "))

@@ -19,7 +19,7 @@ class TriangleCountSpec extends AnyFunSuite {
   test("q211: 4 vectors -> complete kNN graph -> K4's four triangles, 3 per node") {
     // with exactly 4 vectors, top-GraphK(=3) neighbors = all others, so
     // the undirected graph is K4 regardless of the cosine values
-    val dir = java.nio.file.Files.createTempDirectory("graft-tri").toString
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-tri")
     val vecs = Seq(
       (0L, Seq(1.0f, 0.1f, 0.0f), 0), (1L, Seq(0.9f, 0.2f, 0.1f), 0),
       (2L, Seq(0.1f, 1.0f, 0.2f), 1), (3L, Seq(0.0f, 0.2f, 1.0f), 1))

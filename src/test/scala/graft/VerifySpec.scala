@@ -13,7 +13,7 @@ class VerifySpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def tempDir(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-verify-spec")
+    java.nio.file.Paths.get(org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-verify-spec"))
 
   test("dump with one name writes exactly that query and its oracle key") {
     val out = tempDir()
