@@ -7,10 +7,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `DataFrame`-in/`DataFrame`-out over these tables so Catalyst sees one
   * end-to-end logical plan per query (scan → ... → sink) and can push
   * filters/projections into the parquet scan.
+  *
+  * Opening a table starts no Spark job once its schema is known. Without
+  * a schema, `spark.read.parquet` runs one schema-inference job per call,
+  * so [[table]] resolves each table's parquet schema once per (session,
+  * snapshot dir, table) through `FrameMemo.value` (key `schema:<name>`)
+  * and every call then reads with that explicit schema. The schema is
+  * memoized, not the frame: each open must be a new relation with fresh
+  * attribute ids, so that two opens of one table self-join by column
+  * reference exactly as two inferring reads do. A non-snapshot dir (a
+  * test fixture that may be rewritten between opens) is not retained by
+  * `FrameMemo`, so it still infers on every call.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = graft.ops.FrameMemo.value(spark, dir, s"schema:$name")(
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -27,7 +27,12 @@ import graft.Tables
   * each key's count table is the small side (NDV rows, not corpus
   * rows), and a TakeOrdered heap replaces the window per key. The
   * census unions |keys| such frames — independent branches, each
-  * dim-bounded after its first aggregate.
+  * dim-bounded after its first aggregate — into ONE plan that starts no
+  * job at construction: the totals and top-10 readers of a key's count
+  * table share its count exchange (exchange reuse turns the second
+  * reader into a `ReusedExchangeExec`, so each count aggregation runs
+  * once without a checkpoint), and AQE materializes the branches' scan
+  * stages concurrently.
   */
 object SkewCensus extends graft.QueryModule {
 
@@ -39,7 +44,6 @@ object SkewCensus extends graft.QueryModule {
         // folds cross at the model edge (documented BNLJ shape)
         val counts = df.groupBy(col(key).cast("long").as("k"))
           .agg(count(lit(1)).as("c"))
-          .localCheckpoint()
         val totals = counts.agg(sum(col("c")).as("n_rows"),
           count(lit(1)).as("ndv"), max(col("c")).as("top1"))
         val top10 = counts.orderBy(col("c").desc, col("k").asc).limit(10)

@@ -17,8 +17,13 @@ object EventsStreaming {
     * explicit schema).
     */
   def readEvents(s: SparkSession, dir: String,
-                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = s.read.parquet(dir).schema
+                 maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    eventsSource(s, dir, s.read.parquet(dir).schema, maxFilesPerTrigger)
+
+  /** [[readEvents]] with the events `schema` already known. */
+  private[graft] def eventsSource(s: SparkSession, dir: String,
+                                  schema: org.apache.spark.sql.types.StructType,
+                                  maxFilesPerTrigger: Option[Int]): DataFrame = {
     val reader = s.readStream.schema(schema)
     // bounding files-per-trigger splits a bounded directory into several
     // micro-batches — the watermark then advances BETWEEN batches, which

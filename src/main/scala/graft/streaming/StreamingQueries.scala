@@ -27,6 +27,14 @@ object StreamingQueries extends graft.QueryModule {
         java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
     }
 
+  /** The staged events table as an unbounded source. Its schema is the
+    * one `Tables.table` resolved for the snapshot's `events.parquet` (the
+    * stage's only file), so a replay starts no schema-inference job.
+    */
+  private def stagedEvents(s: SparkSession, d: String): DataFrame =
+    EventsStreaming.eventsSource(s, stageEventsDir(s, d),
+      graft.Tables.table(s, d, "events").schema, maxFilesPerTrigger = None)
+
   /** The sink path of a maintenance-sink query (q127's gold, q128's
     * fact): `kind` inside a fresh directory of the session's scratch
     * root, so every run rebuilds from zero and the sink's `.tmp`/`.old`
@@ -136,7 +144,7 @@ object StreamingQueries extends graft.QueryModule {
     // merges are additive (the mergeable-sketch law, q168's spec).
     "q172_stream_hotkey_cms" -> ((s, d) => {
       import graft.ops.CountMin
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val probes = stream.select(
         posexplode(array((0 until CountMin.D).map(r =>
           CountMin.bucket(col("user_id").cast("string"), lit(r))): _*))
@@ -196,7 +204,7 @@ object StreamingQueries extends graft.QueryModule {
     // state eviction, is exercised in StreamingSpec; here the contract
     // is exact oracle equality).
     "q116_stream_hourly_replay" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val replayed = EventsStreaming.runToMemory(s,
         EventsStreaming.hourlyCounts(stream), "q116_stream_hourly_replay",
         OutputMode.Complete, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -216,7 +224,7 @@ object StreamingQueries extends graft.QueryModule {
     // ~3h of the table) stay in state and are withheld, so this answer is
     // a strict subset of q116's.
     "q119_stream_hourly_append" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val sealedWindows = EventsStreaming.runToMemory(s,
         EventsStreaming.hourlyCounts(stream), "q119_stream_hourly_append",
         OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -232,7 +240,7 @@ object StreamingQueries extends graft.QueryModule {
     // MERGING-state operator under the oracle gate (q119 covers
     // fixed-window state; sessions also merge windows).
     "q122_stream_sessions_append" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val sealedSessions = EventsStreaming.runToMemory(s,
         EventsStreaming.sessionWindows(stream), "q122_stream_sessions_append",
         OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -248,7 +256,7 @@ object StreamingQueries extends graft.QueryModule {
     // streaming join machinery (two stateful sides, interval-bounded
     // buffers) reproduces it bit-for-bit.
     "q123_stream_attribution_replay" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val joined = EventsStreaming.runToMemory(s,
         EventsStreaming.purchaseAttribution(stream),
         "q123_stream_attribution_replay",
@@ -266,7 +274,7 @@ object StreamingQueries extends graft.QueryModule {
     // gates the user-defined state machine a feature-store pipeline
     // writes when the built-in semantics don't fit.
     "q124_stream_sessionize_custom" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val closed = EventsStreaming.runToMemory(s,
         EventsStreaming.sessionize(s, stream), "q124_stream_sessionize_custom",
         OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -282,7 +290,7 @@ object StreamingQueries extends graft.QueryModule {
     // dir per invocation: the rebuild IS the measured work.
     "q127_stream_gold_additive" -> ((s, d) => {
       val gold = scratchDir(s, "gold")
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val ckpt = EventsStreaming.replayCheckpointDir("q127")
       // state-partition discipline (see withStatePartitions): the
       // foreachBatch batch aggregation + merge write run at 8, matching
@@ -308,7 +316,7 @@ object StreamingQueries extends graft.QueryModule {
     // converge to (q32's aggregation).
     "q128_stream_fact_upsert" -> ((s, d) => {
       val fact = scratchDir(s, "fact")
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val ckpt = EventsStreaming.replayCheckpointDir("q128")
       // state-partition discipline (see withStatePartitions): the
       // Update-mode aggregation's state store otherwise inherits the
@@ -331,7 +339,7 @@ object StreamingQueries extends graft.QueryModule {
     // flatMapGroupsWithState): per-user running event counts in Update
     // mode; on a bounded replay the final update per user IS the total.
     "q129_stream_user_counts" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val counts = EventsStreaming.runToMemory(s,
         EventsStreaming.runningUserCounts(s, stream),
         "q129_stream_user_counts", OutputMode.Update, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -347,7 +355,7 @@ object StreamingQueries extends graft.QueryModule {
     // after the watermark window re-admitted) needs controlled
     // micro-batch fixtures and is pinned in StreamingSpec.
     "q130_stream_dedup_ingest" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val deduped = EventsStreaming.runToMemory(s,
         EventsStreaming.dedupEvents(stream), "q130_stream_dedup_ingest",
         OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
@@ -368,7 +376,7 @@ object StreamingQueries extends graft.QueryModule {
     // rows are restricted to purchases the final watermark expired;
     // unmatched purchases in the last 2h stay withheld in state.
     "q126_stream_attribution_outer" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val joined = EventsStreaming.runToMemory(s,
         EventsStreaming.purchaseAttribution(stream, joinType = "left_outer"),
         "q126_stream_attribution_outer",
@@ -377,7 +385,7 @@ object StreamingQueries extends graft.QueryModule {
     }),
 
     "q125_stream_enrich_replay" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val enriched = EventsStreaming.runToMemory(s,
         EventsStreaming.enrichWithRegion(s, stream, d),
         "q125_stream_enrich_replay",
@@ -393,7 +401,7 @@ object StreamingQueries extends graft.QueryModule {
     // purchase_ts ∈ [click_ts, click_ts + 1h]. Clicks in the last 3h
     // (1h interval + 2h delay) stay withheld in state.
     "q143_stream_attribution_full" -> ((s, d) => {
-      val stream = EventsStreaming.readEvents(s, stageEventsDir(s, d))
+      val stream = stagedEvents(s, d)
       val joined = EventsStreaming.runToMemory(s,
         EventsStreaming.purchaseAttribution(stream, joinType = "full_outer"),
         "q143_stream_attribution_full",

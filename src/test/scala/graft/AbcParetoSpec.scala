@@ -24,7 +24,7 @@ class AbcParetoSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
 
   test("q205: a part landing exactly on 80% is still A; the tail is C") {
-    val dir = "/tmp/graft_test_abc"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-abc")
     // revenues 50, 30, 15, 5 (total 100): cum shares 50%, 80%, 95%, 100%
     // -> A = {50, 30} (the 80% part INCLUDED), B = {15}, C = {5}.
     writeLineitem(dir, Seq((1L, 1L, 50.0), (2L, 2L, 30.0), (3L, 3L, 15.0), (4L, 4L, 5.0)))

@@ -11,7 +11,7 @@ class BasketAffinitySpec extends AnyFunSuite {
   import spark.implicits._
 
   test("q203: planted baskets read exact support/confidence/lift") {
-    val dir = "/tmp/graft_test_basket"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-basket")
     // 4 baskets: {1,2} {1,2} {1,3} {2,3,3} (dup 3 dedups).
     // pair (1,2): n_ab=2, c1=3, c2=3, n=4 -> lift = 4*2/(3*3) = 8/9.
     // pairs (1,3) and (2,3): n_ab=1 -> dropped by min-support 2.

@@ -19,7 +19,7 @@ class BatchPlanSpec extends AnyFunSuite {
       val n = if (id % 2 == 0) 10 else 100
       (id, Seq.fill(n)("w").mkString(" "), "en", "t", 0L)
     }
-    val dir = "/tmp/graft_test_batchplan"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-batchplan")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q176_batch_padding")(spark, dir).collect()

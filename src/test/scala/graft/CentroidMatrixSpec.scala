@@ -18,7 +18,7 @@ class CentroidMatrixSpec extends AnyFunSuite {
     // label 0: two copies of e0 -> centroid (1000, 0, ...); label 1:
     // e1 -> (0, 1000, ...); label 2: e0 -> same centroid as label 0.
     // cos(0,1) = cos(1,2) = 0; cos(0,2) = 1.
-    val dir = "/tmp/graft_test_centmatrix"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-centmatrix")
     Seq((0L, e(0), 0), (1L, e(0), 0), (2L, e(1), 1), (3L, e(0), 2))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

@@ -14,7 +14,7 @@ class ChunkingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def chunksOf(texts: Seq[(Long, String)]) = {
-    val dir = "/tmp/graft_test_chunk"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-chunk")
     texts.map { case (id, t) => (id, t, "en", "t", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -36,7 +36,7 @@ class CollocationsSpec extends AnyFunSuite {
       Seq.fill(6)("x y p q") ++
         Seq.fill(30)("p a") ++ Seq.fill(30)("b q") ++
         Seq.fill(4)("r s")
-    val dir = "/tmp/graft_test_colloc"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-colloc")
     docs.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "t", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

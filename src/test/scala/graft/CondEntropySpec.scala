@@ -16,7 +16,7 @@ class CondEntropySpec extends AnyFunSuite {
       .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
 
   test("q196: deterministic alternation reads cond 0; a branching source reads its hand value") {
-    val dir = "/tmp/graft_test_condent"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-condent")
     // D: "a b a b a b" -> bigrams ab,ba,ab,ba,ab (N=5): from a always b,
     //    from b always a -> H(X2|X1) = 0 exactly (hj_num == hf_num).
     // B: "a a a b b a b b" -> bigrams aa:2, ab:2, bb:2, ba:1 (N=7);

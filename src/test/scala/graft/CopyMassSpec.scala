@@ -22,7 +22,7 @@ class CopyMassSpec extends AnyFunSuite {
         r.getLong(4), r.getLong(5))).toSeq
 
   test("q197: a subset mirror reads 1e6 ppm in ITS row only") {
-    val dir = "/tmp/graft_test_copymass"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-copymass")
     // BIG: 10 tokens -> 6 grams; SUB: copies BIG's first 6 tokens
     // (2 grams, both inside BIG); SUB's row toward BIG = 1e6 ppm,
     // BIG's row toward SUB = 2 of 6 grams' mass. Every gram's df is
@@ -39,7 +39,7 @@ class CopyMassSpec extends AnyFunSuite {
   }
 
   test("q197: a gram in more than MaxDf documents is boilerplate — excluded from both sides") {
-    val dir = "/tmp/graft_test_copymass_cap"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-copymass-cap")
     // Boilerplate gram "b1..b5" planted in MaxDf+1 docs (df=9 > 8):
     // must vanish from shared mass AND totals. The copied gram
     // "c1..c5" lives in exactly 2 docs (one per source): it is the

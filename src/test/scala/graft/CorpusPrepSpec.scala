@@ -59,7 +59,7 @@ class CorpusPrepSpec extends AnyFunSuite {
   }
 
   test("q70: a null n_chars packs as zero tokens instead of NPEing the fold") {
-    val dir = "/tmp/graft_test_packnull"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-packnull")
     Seq((1L, "x", "en", "t", Option(100L)), (2L, "y", "en", "t", Option.empty[Long]))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -99,7 +99,7 @@ class CorpusPrepSpec extends AnyFunSuite {
   }
 
   test("q76: hand-computed tf-idf ranks, ties break by term") {
-    val dir = "/tmp/graft_test_tfidf"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-tfidf")
     Seq(
       (1L, "apple apple banana", "en", "t", 18L),
       (2L, "banana cherry", "en", "t", 13L),
@@ -121,7 +121,7 @@ class CorpusPrepSpec extends AnyFunSuite {
   }
 
   test("q72: corpus-frequency scores on a constructed corpus") {
-    val dir = "/tmp/graft_test_rarity"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-rarity")
     Seq(
       (1L, "a a b", "en", "t", 5L),
       (2L, "a c", "en", "t", 3L),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{TextFunctions => TF}
 
@@ -34,7 +35,7 @@ class CorpusSignalsSpec extends AnyFunSuite {
   }
 
   test("q64: known repetition fractions; diverse doc passes the gates") {
-    val d = writeDocs("/tmp/graft_test_rep", Seq(
+    val d = writeDocs(ColumnBridge.tempDir("graft-rep"), Seq(
       // 6×"spam": 5 bigrams all equal → top 5/5 = 1.0; 4 trigrams, 1
       // distinct → dup 3/4 = 0.75; both gates trip
       1L -> "spam spam spam spam spam spam",
@@ -48,7 +49,7 @@ class CorpusSignalsSpec extends AnyFunSuite {
   }
 
   test("q65: a 5-gram shared by 3 docs is boilerplate; by 2 is not") {
-    val d = writeDocs("/tmp/graft_test_boiler", Seq(
+    val d = writeDocs(ColumnBridge.tempDir("graft-boiler"), Seq(
       // "all rights reserved to us" is the ONLY gram shared by ≥3 docs
       // (every other window straddles into the per-doc tail)
       1L -> "all rights reserved to us alpha beta gamma delta epsilon",
@@ -72,7 +73,7 @@ class CorpusSignalsSpec extends AnyFunSuite {
   test("q66: train doc sharing a 5-gram with a test-split doc is contaminated") {
     // md5 split: first hex of md5(doc_id) — ids 3 and 5 land in
     // {'e','f'} (test), ids 0,1 do not (train)
-    val d = writeDocs("/tmp/graft_test_decon", Seq(
+    val d = writeDocs(ColumnBridge.tempDir("graft-decon"), Seq(
       3L -> "alpha beta gamma delta epsilon zeta",       // test split
       5L -> "held out benchmark prompt tokens only",     // test split
       0L -> "alpha beta gamma delta epsilon omega",      // shares 1 gram with doc 3
@@ -120,7 +121,7 @@ class CorpusSignalsSpec extends AnyFunSuite {
   }
 
   test("q146: evidence names the leaking test doc and first shared gram; set equals q66's") {
-    val d = writeDocs("/tmp/graft_test_evidence", Seq(
+    val d = writeDocs(ColumnBridge.tempDir("graft-evidence"), Seq(
       3L -> "alpha beta gamma delta epsilon zeta",       // test split
       5L -> "held out benchmark prompt tokens only",     // test split
       0L -> "alpha beta gamma delta epsilon omega",      // leaks doc 3 (1 gram)
@@ -162,10 +163,10 @@ class CorpusSignalsSpec extends AnyFunSuite {
       (9L, "the of to in and an is big red cat", "en"),                       // quality 0.43 < 0.5
       (10L, "ten assorted plain words make this other document read fine", "fr"), // wrong lang label
       (11L, "eleven distinct plain words fill this clean document nicely here", "en")) // keep
+    val d = ColumnBridge.tempDir("graft-guard")
     docs.map { case (id, t, lang) => (id, t, lang, "t", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet("/tmp/graft_test_guard/documents.parquet")
-    val d = "/tmp/graft_test_guard"
+      .write.mode("overwrite").parquet(s"$d/documents.parquet")
     val got = SparkEntry.queries("q69_corpus_curation_guarded")(spark, d)
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
     assert(got == Map(
@@ -196,7 +197,7 @@ class CorpusSignalsSpec extends AnyFunSuite {
     val leakDoc = testDoc + " extra tail"
     val cleanDoc = "totally different words about completely other topics " +
       "nothing shared with that benchmark document at all here now"
-    val dir = "/tmp/graft_test_fuzzy"
+    val dir = ColumnBridge.tempDir("graft-fuzzy")
     Seq((testId, testDoc), (leakId, leakDoc), (cleanId, cleanDoc))
       .map { case (id, t) => (id, t, "en", "t", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -247,14 +248,15 @@ class CorpusSignalsSpec extends AnyFunSuite {
     val prefix = Array.fill(16)(0.0f); prefix(0) = 1.0f
     def vec(tail: Array[Float]) = prefix ++ tail
     val zero4 = Array.fill(4)(0.0f)
+    val d = ColumnBridge.tempDir("graft-mrl")
     Seq(
       (0L, vec(zero4), 0),
       (10L, vec(Array(9f, 9f, 9f, 9f)), 0),
       (11L, vec(zero4), 0),
       (12L, Array.fill(20)(0.0f).updated(1, 1.0f), 0))
       .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet("/tmp/graft_test_mrl/embeddings.parquet")
-    val r = SparkEntry.queries("q77_matryoshka_eval")(spark, "/tmp/graft_test_mrl")
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    val r = SparkEntry.queries("q77_matryoshka_eval")(spark, d)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2)))
     assert(r.toSeq == Seq((0L, 3L, 0)), s"got ${r.toSeq}")
   }
@@ -262,10 +264,11 @@ class CorpusSignalsSpec extends AnyFunSuite {
   test("q67: exact quantization of a known vector; corpus-wide error bound") {
     // v = [1, -0.5, 0.25, 0]: maxabs 1 → s = 1/127. round(-63.5) = -64
     // (HALF_UP away from zero) → worst component error |−0.5+64/127|
+    val d = ColumnBridge.tempDir("graft-quant")
     Seq((1L, Array(1.0f, -0.5f, 0.25f, 0.0f), 0))
       .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet("/tmp/graft_test_quant/embeddings.parquet")
-    val r = SparkEntry.queries("q67_embedding_quantize")(spark, "/tmp/graft_test_quant")
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    val r = SparkEntry.queries("q67_embedding_quantize")(spark, d)
       .collect()(0)
     val s = 1.0 / 127.0
     assert(r.getDouble(2) == math.rint(s * 1e6) / 1e6)

@@ -45,7 +45,7 @@ class CurationLshSpec extends AnyFunSuite {
     val base = (1 to 40).map(i => s"word$i").mkString(" ")
     val near = (1 to 39).map(i => s"word$i").mkString(" ") + " changed"
     val other = (1 to 40).map(i => s"unrelated$i other$i").mkString(" ")
-    val dir = "/tmp/graft_test_curation"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-curation")
     Seq((1L, base, "en", "t", base.length.toLong),
       (2L, near, "en", "t", near.length.toLong),
       (3L, other, "en", "t", other.length.toLong))

@@ -21,7 +21,7 @@ class DataCardSpec extends AnyFunSuite {
     // 3 docs, one exact dup pair; 2 sources, 2 langs.
     // tokens: 2 + 2 + 3 = 7; types {a,b,c,d} = 4; ttr = 4e6/7 = 571428.
     // dup: 3 docs, 2 distinct texts -> 1 dup doc, 333333 ppm.
-    val dir = "/tmp/graft_test_datacard"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-datacard")
     Seq((0L, "a b", "en", "s1", 0L), (1L, "a b", "en", "s1", 0L),
       (2L, "b c d", "fr", "s2", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

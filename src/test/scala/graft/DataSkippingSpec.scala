@@ -122,7 +122,7 @@ class DataSkippingSpec extends AnyFunSuite {
 
   test("incremental manifest append equals the full rebuild after a new batch") {
     // two-batch layout in an isolated dir (not the shared cached one)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_manifest_inc_test"
+    val root = s"${org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-manifest")}/graft_manifest_inc_test"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)

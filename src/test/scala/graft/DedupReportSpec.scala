@@ -18,8 +18,12 @@ class DedupReportSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getLong(4), r.getDouble(5))).toMap
 
+  /** The graded corpus dir: written by the q208 test, read by q218's. */
+  private lazy val gradedDir =
+    org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-dedupreport")
+
   test("q208: planted graded-similarity corpus — certain pairs pinned, probabilistic ones bounded") {
-    val dir = "/tmp/graft_test_dedupreport"
+    val dir = gradedDir
     def toks(prefix: String, n: Int): Seq[String] = (1 to n).map(i => s"$prefix$i")
     def text(ts: Seq[String]): String = ts.mkString(" ")
     // strong pair (0,1): identical 30-token docs -> jaccard 1.0 AND
@@ -92,7 +96,7 @@ class DedupReportSpec extends AnyFunSuite {
     // {20,21} all participate; sources are src(id % 3), doc 30 is the
     // only non-participant -> src0 = {0, 21 dup; 30 not} = 2/3,
     // src1 = {1, 10} = 2/2, src2 = {11, 20} = 2/2
-    val dir = "/tmp/graft_test_dedupreport" // written by the first test
+    val dir = gradedDir // written by the first test
     val got = SparkEntry.queries("q218_dup_burden_by_source")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 
@@ -71,12 +72,13 @@ class ExtensionsSpec extends AnyFunSuite {
       (0L, base, "en", "t", 1L), (1L, nearDup, "en", "t", 1L),
       (2L, unrelated, "en", "t", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    docs.write.mode("overwrite").parquet("/tmp/graft_test/documents.parquet")
+    val dir = ColumnBridge.tempDir("graft-minhash")
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // reuse the other tables from testdata by pointing dir at a tmp copy
-    val pairs = ops.Dedup.baseQueries("q27_dedup_minhash_lsh")(spark, "/tmp/graft_test")
+    val pairs = ops.Dedup.baseQueries("q27_dedup_minhash_lsh")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((0L, 1L)))
-    val exact = ops.Dedup.baseQueries("q26_dedup_ngram_jaccard")(spark, "/tmp/graft_test")
+    val exact = ops.Dedup.baseQueries("q26_dedup_ngram_jaccard")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(exact.toSeq == Seq((0L, 1L)))
   }
@@ -85,22 +87,24 @@ class ExtensionsSpec extends AnyFunSuite {
     val base = (1 to 60).map(i => s"w$i").mkString(" ")
     val nearDup = (1 to 59).map(i => s"w$i").mkString(" ") + " z9"
     val unrelated = (100 to 160).map(i => s"v$i").mkString(" ")
+    val dir = ColumnBridge.tempDir("graft-simhash")
     Seq((0L, base, "en", "t", 1L), (1L, nearDup, "en", "t", 1L),
       (2L, unrelated, "en", "t", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet("/tmp/graft_test2/documents.parquet")
-    val pairs = ops.Dedup.baseQueries("q28_dedup_simhash")(spark, "/tmp/graft_test2")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val pairs = ops.Dedup.baseQueries("q28_dedup_simhash")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((0L, 1L)))
   }
 
   test("exact dedup groups identical texts") {
+    val dir = ColumnBridge.tempDir("graft-exact")
     Seq((10L, "same text here", "en", "t", 1L),
       (3L, "same text here", "en", "t", 1L),
       (7L, "different", "en", "t", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet("/tmp/graft_test3/documents.parquet")
-    val r = ops.Dedup.baseQueries("q25_dedup_exact")(spark, "/tmp/graft_test3")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val r = ops.Dedup.baseQueries("q25_dedup_exact")(spark, dir)
       .collect().map(x => (x.getLong(1), x.getLong(2)))
     assert(r.toSeq == Seq((3L, 2L), (7L, 1L))) // canonical=min id, copies
   }
@@ -111,9 +115,10 @@ class ExtensionsSpec extends AnyFunSuite {
     val others = (2 to 40).map(j =>
       (j.toLong, Array.tabulate(64)(i => math.cos(i * j).toFloat), j))
     val rows = Seq((0L, v0, 0), (1L, v0near, 0)) ++ others
+    val dir = ColumnBridge.tempDir("graft-knn")
     rows.toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet("/tmp/graft_test4/embeddings.parquet")
-    val r = ops.SimilaritySearch.baseQueries("q30_knn_bruteforce")(spark, "/tmp/graft_test4")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val r = ops.SimilaritySearch.baseQueries("q30_knn_bruteforce")(spark, dir)
       .filter(col("query_id") === 0 && col("rank") === 1).collect()
     assert(r(0).getLong(1) == 1L) // neighbor_id
   }
@@ -167,11 +172,12 @@ class ExtensionsSpec extends AnyFunSuite {
     val good = ("the quick brown fox jumps over the lazy dog and " * 12).trim
     val good2 = ("the small red hen walks past the old barn and " * 12).trim
     val junk = "a a a a"
+    val dir = ColumnBridge.tempDir("graft-curation")
     Seq((1L, good, "en", "t", 1L), (2L, good, "en", "t", 1L),
       (3L, junk, "en", "t", 1L), (4L, good2, "fr", "t", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet("/tmp/graft_test_cur/documents.parquet")
-    val got = ops.TextAnalysis.queries("q50_corpus_curation")(spark, "/tmp/graft_test_cur")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val got = ops.TextAnalysis.queries("q50_corpus_curation")(spark, dir)
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
     assert(got == Map(
       ("en", "keep") -> 1L,

@@ -20,14 +20,14 @@ class GiniConcentrationSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
 
   test("q207: planted equality reads Gini 0; a monopolist reads (n-1)/n") {
-    val eq = "/tmp/graft_test_gini_eq"
+    val eq = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-gini-eq")
     writeOrders(eq, (1L to 10L).map(i => (i, i, 100.0)))
     val rEq = SparkEntry.queries("q207_revenue_gini")(spark, eq).collect()
     // equal spend: G = (2*Σi*x - (n+1)*n*x) / (n*n*x) = 0 exactly
     assert(rEq.forall(_.getLong(5) == 0L), rEq.mkString(", "))
     assert(rEq.map(_.getLong(1)).sum == 10L)
 
-    val mono = "/tmp/graft_test_gini_mono"
+    val mono = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-gini-mono")
     writeOrders(mono, (1L to 9L).map(i => (i, i, 0.01)) :+ (10L, 10L, 1000000.0))
     val rMono = SparkEntry.queries("q207_revenue_gini")(spark, mono).collect()
     // near-total concentration: G -> (n-1)/n = 0.9 (up to the tiny tail)

@@ -17,7 +17,7 @@ class HeapsCurveSpec extends AnyFunSuite {
   test("q193: saturated growth reads beta 0; all-new growth reads beta near 1") {
     // doc 0: "a b"; doc 1: "a b" (repeat; cutoff 2 adds no types);
     // docs 2,3: four new types (cutoff 4 doubles tokens, triples types).
-    val dir = "/tmp/graft_test_heaps"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-heaps")
     Seq((0L, "a b", "en", "S", 0L), (1L, "a b", "en", "S", 0L),
       (2L, "c d", "en", "S", 0L), (3L, "e f", "en", "S", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -24,7 +24,7 @@ class LabelDispersionSpec extends AnyFunSuite {
       (1L, vec(i => if (i == 0) 0.3f else 0.0f), 0),
       (2L, vec(i => if (i == 0) 0.5f else 0.0f), 1),
       (3L, vec(i => if (i == 0) -0.5f else 0.0f), 1))
-    val dir = "/tmp/graft_test_labeldisp"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-labeldisp")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = SparkEntry.queries("q189_label_dispersion")(spark, dir).collect()

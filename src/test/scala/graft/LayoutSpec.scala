@@ -88,7 +88,7 @@ class LayoutSpec extends AnyFunSuite {
     p.listFiles().filter(_.getName.endsWith(".parquet"))
 
   test("compaction shrinks a small-files directory, preserving content") {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_compact_flat"
+    val root = s"${org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-compact")}/graft_compact_flat"
     Tables.events(spark, d).repartition(64)
       .write.mode("overwrite").parquet(root)
     val dir = new java.io.File(root)
@@ -108,7 +108,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compaction recovers from stale work dirs left by a crashed run") {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_compact_crash"
+    val root = s"${org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-compact")}/graft_compact_crash"
     Tables.events(spark, d).repartition(8)
       .write.mode("overwrite").parquet(root)
     val before = spark.read.parquet(root).count()
@@ -129,7 +129,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("per-partition compaction collapses each day directory independently") {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_compact_parted"
+    val root = s"${org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-compact")}/graft_compact_parted"
     // fan-out write: 8 tasks x 30 days => up to 8 files per day directory
     Tables.events(spark, "/root/testdata/sf0.01")
       .withColumn("event_date", to_date(col("ts")))

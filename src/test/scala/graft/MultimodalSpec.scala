@@ -198,9 +198,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("binaryFile ingest sniffs mime from magic bytes and decodes identically") {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createDirectories(Paths.get("/tmp/graft_test_binaryfile"))
-    // stale files from a previous run must not pollute the listing
-    Files.list(dir).forEach(p => Files.delete(p))
+    val dir = Paths.get(org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-binaryfile"))
     val bmp = MediaCodec.encodeBmp("red green blue".getBytes(StandardCharsets.UTF_8))
     val ppm = MediaCodec.encodePpm("pixel map payload".getBytes(StandardCharsets.UTF_8))
     val wav = MediaCodec.encodeWav("pcm sample run".getBytes(StandardCharsets.UTF_8))

@@ -34,7 +34,7 @@ class NoveltyCurveSpec extends AnyFunSuite {
     //   5/8-grams: none -> (0, 0, 0 ppm) by the pinned convention.
     val Seq(trainId) = idsBySplit("train", 1)
     val Seq(testId) = idsBySplit("test", 1)
-    val dir = "/tmp/graft_test_novelty"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-novelty")
     Seq((trainId, "a b a c", "en", "t", 0L), (testId, "a b c d", "en", "t", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -81,7 +81,7 @@ class NoveltyCurveSpec extends AnyFunSuite {
     val Seq(trainId) = idsBySplit("train", 1)
     val Seq(valId) = idsBySplit("validation", 1)
     val Seq(testId) = idsBySplit("test", 1)
-    val dir = "/tmp/graft_test_splitmatrix"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-splitmatrix")
     // train {a b c d e, b c d e f}; validation {a b c d e}; test {z y x w v}
     Seq((trainId, "a b c d e f", "en", "t", 0L),
       (valId, "a b c d e", "en", "t", 0L),

@@ -11,7 +11,7 @@ class NumericCorrSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("q204: planted perfect correlation reads ±1e6 and constant columns read 0") {
-    val dir = "/tmp/graft_test_corr"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-corr")
     // y = 2x (r = +1), z constant (r = 0 by the variance guard);
     // discount x in {0.01..0.04} -> cents 1..4, quantity 2..8.
     Seq((1L, 1L, 1, 2.0, 100.0, 0.01), (1L, 2L, 2, 4.0, 100.0, 0.02),

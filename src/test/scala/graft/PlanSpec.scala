@@ -226,7 +226,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("year-partitioned gold sink prunes partitions on filtered reads") {
     import org.apache.spark.sql.functions._
-    val dir = "/tmp/graft_prune/gold_energy"
+    val dir = s"${org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-prune")}/gold_energy"
     graft.pipeline.Medallion.energyMonthly(
       graft.pipeline.Medallion.cleanEnergy(
         graft.datagen.EnergyGen.energyBronze(spark, "2023-01-01", "2024-06-30")))

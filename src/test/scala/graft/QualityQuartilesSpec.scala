@@ -41,7 +41,7 @@ class QualityQuartilesSpec extends AnyFunSuite {
       "a a a a a a a a",                      // repetitive -> low quality
       "the quick brown fox jumps over dogs",  // stopword-bearing
       "zz zz", "one two three four five six seven eight nine ten")
-    val dir = "/tmp/graft_test_quartiles"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-quartiles")
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "S", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

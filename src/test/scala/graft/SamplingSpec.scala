@@ -77,7 +77,7 @@ class SamplingSpec extends AnyFunSuite {
   test("q78 temperature mixing: smallest source keeps all, rates follow sqrt(min/n)") {
     import spark.implicits._
     // 4 docs of src_small, 16 of src_big → rates 1.0 and 0.5
-    val dir = "/tmp/graft_test_mixing"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-mixing")
     val docs = (1L to 4L).map(i => (i, s"d$i", "en", "src_small", 10L)) ++
       (101L to 116L).map(i => (i, s"d$i", "en", "src_big", 10L))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -104,7 +104,7 @@ class SamplingSpec extends AnyFunSuite {
     // alloc_a = 2*(202/22) + (2*(202%22))/22 = 18 + 0 = 18 → epochs
     // ceil(18/4) = 5, CAPPED to 4, final = min(18, 16) = 16.
     // alloc_b = 20*9 + (20*4)/22 = 183 → 1 epoch, final 183.
-    val dir = "/tmp/graft_test_budget"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-budget")
     val docs = Seq((1L, "t", "en", "src_a", 16L)) ++
       (101L to 104L).map(i => (i, "t", "en", "src_b", 400L))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -38,15 +38,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("bucketed tables join without an exchange (co-located SMJ)") {
     spark.sql("DROP TABLE IF EXISTS li_bucketed")
     spark.sql("DROP TABLE IF EXISTS ord_bucketed")
-    // the catalog is in-memory per JVM: a previous run's directory
-    // survives the (no-op) DROP, so clear the location too
-    Seq("li_bucketed", "ord_bucketed").foreach { t =>
-      val dir = new java.io.File(s"/tmp/graft-warehouse/$t")
-      if (dir.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(dir).deleteRecursively()
-      }
-    }
     Tables.lineitem(spark, "/root/testdata/sf0.001")
       .select("l_orderkey", "l_quantity")
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
@@ -105,7 +96,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("sequence packing: 200k docs, invariants hold, bin count near optimal") {
     // deterministic pseudo-random sizes over the full clamp range
-    val dir = "/tmp/graft_scale_pack"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-scale-pack")
     spark.range(0, 200000)
       .select(col("id").as("doc_id"), lit("").as("text"), lit("en").as("lang"),
         lit("t").as("source"),

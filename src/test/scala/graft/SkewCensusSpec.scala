@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q200 behavior pins: a driver brute-force census replay for every
-  * audited key, and the planted-skew fixture check (a hot key reads
-  * its exact ppm share).
+  * audited key, the planted-skew fixture check (a hot key reads
+  * its exact ppm share), and its one-plan shape (no construction job,
+  * one count exchange per key).
   */
-class SkewCensusSpec extends AnyFunSuite {
+class SkewCensusSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
   test("q200: census equals a driver brute force on every audited key") {
@@ -43,5 +47,24 @@ class SkewCensusSpec extends AnyFunSuite {
       assert(r.getLong(5) <= r.getLong(6) && r.getLong(6) <= 1000000L)
       assert(r.getLong(2) > 0L)
     }
+  }
+
+  test("q200: construction starts no job, and each key's count exchange runs once") {
+    val sf = "/root/testdata/sf0.001"
+    val q200 = SparkEntry.queries("q200_join_key_skew")
+    q200(spark, sf) // resolves the table schemas
+    val (df, jobs) = SparkTestSession.jobsDuring(q200(spark, sf))
+    assert(jobs == 0, s"$jobs jobs at construction")
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    // the only hash-partitioned exchanges are the 5 per-key counts; the
+    // top-10 reader of each reuses the one the totals reader ran
+    def byKey(e: ShuffleExchangeExec) = e.outputPartitioning.isInstanceOf[HashPartitioning]
+    val counts = collect(plan) { case e: ShuffleExchangeExec if byKey(e) => e }
+    val reused = collect(plan) {
+      case r @ ReusedExchangeExec(_, e: ShuffleExchangeExec) if byKey(e) => r
+    }
+    assert(counts.size == 5 && reused.size == 5,
+      s"${counts.size} count exchanges, ${reused.size} reused:\n$plan")
   }
 }

@@ -17,7 +17,7 @@ class SourceEntropySpec extends AnyFunSuite {
       .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
 
   test("q190: uniform source reads evenness 1e6; constant source reads entropy 0") {
-    val dir = "/tmp/graft_test_srcentropy"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-srcentropy")
     Seq((0L, "a b c d", "en", "U", 0L), (1L, "x x x x", "en", "K", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

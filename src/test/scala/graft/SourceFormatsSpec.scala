@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SourceFormatsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val d = "/root/testdata/sf0.001"
-  private val tmp = System.getProperty("java.io.tmpdir")
+  private lazy val tmp = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-formats")
 
   test("ORC sink/scan round-trips the orders table exactly") {
     val src = Tables.orders(spark, d)

@@ -15,7 +15,7 @@ class SourceProfileSpec extends AnyFunSuite {
   test("q188: repetitive source reads a collapsed TTR") {
     // A: "a b c d" + "e f" -> 2 docs, 6 tokens, 6 types, TTR 1e6.
     // B: "x x x x x x x x" -> 1 doc, 8 tokens, 1 type, TTR 125000.
-    val dir = "/tmp/graft_test_srcprofile"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-srcprofile")
     Seq((0L, "a b c d", "en", "A", 0L), (1L, "e f", "en", "A", 0L),
       (2L, "x x x x x x x x", "en", "B", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

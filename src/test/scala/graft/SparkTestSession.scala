@@ -14,7 +14,8 @@ object SparkTestSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      .config("spark.sql.warehouse.dir",
+        org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-warehouse"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -27,7 +27,7 @@ class SplitBalanceSpec extends AnyFunSuite {
     val rows = tr.map(id => (id, "w", "en", "A", 0L)) ++
       Seq((te.head, "w", "en", "A", 0L)) ++
       te.tail.map(id => (id, "w", "en", "B", 0L))
-    val dir = "/tmp/graft_test_splitbal"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-splitbal")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q187_split_balance")(spark, dir).collect()

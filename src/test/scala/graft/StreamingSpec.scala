@@ -12,12 +12,16 @@ import graft.streaming.EventsStreaming
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  /** This suite's fixture root: a fresh dir, deleted at JVM exit. */
+  private lazy val scratch =
+    org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-stream")
+
   /** FileStreamSource needs a directory; stage the single testdata file
     * into one.
     */
   private lazy val dir: String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val d = Paths.get("/tmp/graft_stream/events")
+    val d = Paths.get(scratch, "events")
     Files.createDirectories(d)
     Files.copy(Paths.get("/root/testdata/sf0.001/events.parquet"),
       d.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -261,8 +265,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("left-outer stream-stream join emits unattributed purchases on state expiry") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val base = "/tmp/graft_stream/attr_outer"
-    new scala.reflect.io.Directory(new java.io.File(base)).deleteRecursively()
+    val base = s"$scratch/attr_outer"
     Files.createDirectories(Paths.get(base))
     val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
     def writeFile(name: String, modTime: Long,
@@ -318,8 +321,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("sessionize across micro-batches: watermark gates emission, late events bridge") {
     import java.nio.file.{Files, Paths}
-    val base = "/tmp/graft_stream/sess_multi"
-    new scala.reflect.io.Directory(new java.io.File(base)).deleteRecursively()
+    val base = s"$scratch/sess_multi"
     Files.createDirectories(Paths.get(base))
     val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
     // batch 1: user 1 run (00:00, 00:10); user 2 single event 00:05.
@@ -359,8 +361,7 @@ class StreamingSpec extends AnyFunSuite {
     // strict <, this test would fail with a bridged 2-event session —
     // the signal to flip the close predicate to strict.
     import java.nio.file.{Files, Paths}
-    val base = "/tmp/graft_stream/sess_boundary"
-    new scala.reflect.io.Directory(new java.io.File(base)).deleteRecursively()
+    val base = s"$scratch/sess_boundary"
     Files.createDirectories(Paths.get(base))
     val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
     // batch 1: user 5 run [00:00]; user 9 at 01:30 sets watermark to 00:30
@@ -409,7 +410,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming dedup drops replayed events across micro-batches") {
-    val d = "/tmp/graft_stream_dedup"
+    val d = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-stream-dedup")
     val base = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .orderBy("event_id").limit(200)
     base.write.mode("overwrite").parquet(d)
@@ -425,8 +426,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("commitSwap publishes atomically and failures leave previous data readable") {
     import java.nio.file.{Files, Paths}
-    val root = "/tmp/graft_stream/swap"
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
+    val root = s"$scratch/swap"
     Files.createDirectories(Paths.get(root))
     val live = new java.io.File(s"$root/live")
     def writeDir(d: java.io.File, tag: String): Unit = {
@@ -461,9 +461,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("foreachBatch streaming upsert converges to the batch fact") {
     import org.apache.spark.sql.functions._
-    val factDir = "/tmp/graft_stream/fact_hourly"
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(factDir)).deleteRecursively()
+    val factDir = s"$scratch/fact_hourly"
     val stream = EventsStreaming.readEvents(spark, dir)
     val q = EventsStreaming.upsertHourlyFact(spark, stream, factDir)
     q.awaitTermination()
@@ -496,9 +494,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stateless incremental gold converges to the batch recompute across micro-batches") {
     import org.apache.spark.sql.functions._
-    import scala.reflect.io.Directory
-    val root = "/tmp/graft_stream/inc_gold"
-    new Directory(new java.io.File(root)).deleteRecursively()
+    val root = s"$scratch/inc_gold"
     // 4 source files -> maxFilesPerTrigger=1 forces 4 separate additive
     // merges; the final gold must still equal the one-shot recompute
     val src = s"$root/src"

@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -112,5 +113,40 @@ class TablesSpec extends AnyFunSuite {
     }
     assert(viaLoader.exceptAll(expected).isEmpty &&
       expected.exceptAll(viaLoader).isEmpty)
+  }
+
+  test("reopening a snapshot table starts no job") {
+    def openAll(): Unit = Seq[(SparkSession, String) => DataFrame](
+      Tables.region, Tables.nation, Tables.customer, Tables.supplier, Tables.part,
+      Tables.orders, Tables.lineitem, Tables.events, Tables.documents, Tables.embeddings
+    ).foreach(_(spark, d))
+    openAll()
+    val (_, jobs) = SparkTestSession.jobsDuring(openAll())
+    assert(jobs == 0, s"$jobs jobs reopening the 10 tables")
+  }
+
+  test("a non-snapshot dir reads a rewritten table's new schema") {
+    import spark.implicits._
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-reopen")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/region.parquet")
+    assert(Tables.region(spark, dir).schema.fieldNames.toSeq == Seq("k", "v"))
+    Seq((2, 0.5, "b")).toDF("x", "y", "z").write.mode("overwrite").parquet(s"$dir/region.parquet")
+    val second = Tables.region(spark, dir)
+    assert(second.schema.fields.toSeq.map(f => f.name -> f.dataType) ==
+      Seq("x" -> IntegerType, "y" -> DoubleType, "z" -> StringType))
+    assert(second.collect().toSeq.map(_.toSeq) == Seq(Seq(2, 0.5, "b")))
+  }
+
+  test("two opens of one table self-join by column reference") {
+    val (a, b) = (Tables.orders(spark, d), Tables.orders(spark, d))
+    assert(a.join(b, a("o_orderkey") === b("o_orderkey")).count() == a.count())
+    // Spark re-points a trivially true `x = x` at both sides, but not `<`:
+    // this one needs each open's own attribute ids
+    val (e1, e2) = (Tables.events(spark, d), Tables.events(spark, d))
+    val pairs = e1.join(e2,
+      e1("user_id") === e2("user_id") && e1("event_id") < e2("event_id")).count()
+    val expected = e1.groupBy("user_id").count().collect()
+      .map { r => val n = r.getLong(1); n * (n - 1) / 2 }.sum
+    assert(pairs == expected && expected > 0, s"$pairs same-user pairs, expected $expected")
   }
 }

@@ -23,7 +23,7 @@ class VectorCardSpec extends AnyFunSuite {
       (2L, vec(i => if (i == 5) 0.5f else 0.3f), 1),
       (3L, vec(i => if (i == 5) 0.5f else 0.3f), 1),
       (4L, vec(i => if (i == 5) 0.5f else -0.2f), 1))
-    val dir = "/tmp/graft_test_veccard"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-veccard")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val r = SparkEntry.queries("q186_vector_card")(spark, dir).head()
@@ -41,7 +41,7 @@ class VectorCardSpec extends AnyFunSuite {
       (0L, vec(_ => 0.0f), 0),                                  // zero
       (1L, vec(i => if (i == 0) 0.05f else 0.0f), 0),           // norm2 = 2500 < 10000
       (2L, vec(i => if (i == 0) 0.2f else 0.0f), 0))            // healthy
-    val dir = "/tmp/graft_test_veccard2"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-veccard2")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val r = SparkEntry.queries("q186_vector_card")(spark, dir).head()

@@ -22,7 +22,7 @@ class VocabCoverageSpec extends AnyFunSuite {
     //   k=8: 5 types, 16 covered,       0 oov  ->      0 ppm
     val text = (Seq.fill(8)("a") ++ Seq.fill(4)("b") ++
       Seq.fill(2)("c") ++ Seq("d", "e")).mkString(" ")
-    val dir = "/tmp/graft_test_vocabcov"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-vocabcov")
     Seq((0L, text, "en", "t", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

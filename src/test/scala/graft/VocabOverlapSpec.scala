@@ -11,7 +11,7 @@ class VocabOverlapSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("q195: identical, partial, and disjoint vocabularies read exact Jaccards") {
-    val dir = "/tmp/graft_test_vocaboverlap"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-vocaboverlap")
     // A: {a,b,c,d}; B: {a,b,c,d} (identical); C: {c,d,e,f} (2/6 with A,B);
     // D: {x,y} (disjoint from all -> NO row, inner-join semantics like q145)
     Seq((0L, "a b c d", "en", "A", 0L), (1L, "a b c d", "en", "B", 0L),

@@ -11,7 +11,7 @@ class YoyGrowthSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("q206: decline reads negative ppm, first year reads NULL baseline") {
-    val dir = "/tmp/graft_test_yoy"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-yoy")
     // brand B1: 1994 -> $100, 1995 -> $25 (growth -750000 ppm)
     Seq((1L, 1L, "1994-03-01", 100.0), (2L, 1L, "1995-03-01", 25.0))
       .map { case (o, p, dt, pr) =>

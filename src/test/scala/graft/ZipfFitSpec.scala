@@ -20,7 +20,7 @@ class ZipfFitSpec extends AnyFunSuite {
     val words = ('a' to 'h').zipWithIndex.map { case (w, i) =>
       (w.toString + " ") * (840 / (i + 1))
     }.mkString(" ")
-    val dir = "/tmp/graft_test_zipf"
+    val dir = org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-zipf")
     Seq((0L, words, "en", "Z", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
