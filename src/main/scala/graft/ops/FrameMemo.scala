@@ -158,6 +158,44 @@ object FrameMemo {
     */
   private[graft] val PrebuildWorkers = 4
 
+  /** Run `tasks` on `workers` fresh threads named `name-<i>`, each taking
+    * the next task in list order, and return every task's outcome in list
+    * order. Every thread is joined before this returns, so no task — and
+    * no Spark job a task started — outlives the call. The threads inherit
+    * the caller's Spark local properties (job group, scheduler pool).
+    */
+  private def runConcurrently[A](name: String, workers: Int, tasks: Seq[() => A])
+      : Seq[Either[Throwable, A]] = {
+    val done = new Array[Either[Throwable, A]](tasks.size)
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val threads = Seq.tabulate(math.min(workers, tasks.size)) { w =>
+      new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < tasks.size) {
+          done(i) = try Right(tasks(i)()) catch { case t: Throwable => Left(t) }
+          i = next.getAndIncrement()
+        }
+      }, s"$name-$w")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    done.toSeq
+  }
+
+  /** Every task's result in list order, each task on its own thread. If
+    * any task throws, the first failed task's own exception is rethrown
+    * (later failures attached as suppressed) once every task has ended.
+    */
+  def inParallel[A](name: String)(tasks: (() => A)*): Seq[A] = {
+    val out = runConcurrently(name, tasks.size, tasks)
+    out.collect { case Left(t) => t } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => out.collect { case Right(a) => a }
+    }
+  }
+
   /** Build every `(name, builder)` of `artifacts` against (`spark`, `dir`)
     * on [[PrebuildWorkers]] threads, each taking the next entry in list
     * order. A builder that reads another memo just calls it: the memo's
@@ -174,24 +212,13 @@ object FrameMemo {
       : Either[Seq[(String, Throwable)], Seq[(String, Double)]] =
     if (!memoizable(dir)) Right(Seq.empty)
     else {
-      val done = new Array[Either[(String, Throwable), (String, Double)]](artifacts.size)
-      val next = new java.util.concurrent.atomic.AtomicInteger(0)
-      val workers = Seq.tabulate(PrebuildWorkers) { w =>
-        new Thread(() => {
-          var i = next.getAndIncrement()
-          while (i < artifacts.size) {
-            val (name, build) = artifacts(i)
-            val t0 = System.nanoTime()
-            done(i) =
-              try { build(spark, dir); Right(name -> (System.nanoTime() - t0) / 1e9) }
-              catch { case t: Throwable => Left(name -> t) }
-            i = next.getAndIncrement()
-          }
-        }, s"frame-memo-prebuild-$w")
-      }
-      workers.foreach(_.start())
-      workers.foreach(_.join())
-      val failed = done.toSeq.collect { case Left(f) => f }
-      if (failed.nonEmpty) Left(failed) else Right(done.toSeq.collect { case Right(t) => t })
+      val done = runConcurrently("frame-memo-prebuild", PrebuildWorkers,
+        artifacts.map { case (name, build) => () =>
+          val t0 = System.nanoTime()
+          build(spark, dir)
+          name -> (System.nanoTime() - t0) / 1e9
+        })
+      val failed = artifacts.zip(done).collect { case ((name, _), Left(t)) => name -> t }
+      if (failed.nonEmpty) Left(failed) else Right(done.collect { case Right(t) => t })
     }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.sql.{Connection, DriverManager}
+import graft.ops.FrameMemo
 import graft.pipeline.EnergyStar
 
 /** Transactional warehouse load (M5) — the reference wraps its entire
@@ -11,6 +12,9 @@ import graft.pipeline.EnergyStar
   * full-replace, outside the transaction — exactly like `to_sql`), then a
   * single connection with autoCommit off MERGEs staging into the
   * warehouse tables and commits, rolling back wholesale on any failure.
+  * The 7 staging writes run concurrently; the transaction stays on one
+  * connection and runs its statements in order, like the reference's
+  * single `engine.begin()`.
   *
   * MERGE covers both reference upsert forms in one statement per table:
   * WHEN NOT MATCHED INSERT is the dim insert-if-absent anti-join
@@ -227,15 +231,18 @@ object JdbcWarehouse {
       ("region_id", "stg_dim_region", "dim_region", Seq("region_name")),
       ("time_id", "stg_dim_time", "dim_time", Seq("year", "month")))))
 
-  /** Full star load: stage all 7 frames (S5), then load them in ONE
-    * transaction (M1+M2+M5) with the reference's id lifecycle:
+  /** Full star load: stage all 7 frames (S5) concurrently, then load
+    * them in ONE transaction (M1+M2+M5) with the reference's id lifecycle:
     * dims insert-if-absent (stored ids never rewritten, new ids continue
     * after the stored max), facts re-keyed from the per-load staged ids
     * to the STORED dim ids via the rekey views, then upserted. Idempotent
     * — reloading the same star is a no-op; a failure anywhere rolls back
     * every table; an evolved source (new region sorting first) inserts
     * the new dim row without renumbering history, and its facts land
-    * under the stored numbering.
+    * under the stored numbering. The staging writes are independent
+    * scratch tables, so they run at the same time (one small Spark job
+    * each); a failed write is rethrown once the others have ended, before
+    * the transaction opens, so no warehouse table changes.
     */
   def loadStar(url: String, star: EnergyStar): Unit = {
     val frames = Map(
@@ -246,13 +253,11 @@ object JdbcWarehouse {
       "fact_energy_monthly" -> star.factEnergyMonthly,
       "fact_emissions_monthly" -> star.factEmissionsMonthly,
       "fact_carbon_intensity" -> star.factCarbonIntensity)
-    DimTables.foreach { case (t, _, _, colTypes) =>
-      JdbcStage.writeStaging(frames(t), url, s"stg_$t",
-        createTableColumnTypes = colTypes)
-    }
-    FactTables.foreach { case (t, _, _) =>
-      JdbcStage.writeStaging(frames(t), url, s"stg_$t")
-    }
+    val staging = DimTables.map { case (t, _, _, colTypes) => (t, colTypes) } ++
+      FactTables.map { case (t, _, _) => (t, None) }
+    FrameMemo.inParallel("jdbc-staging")(staging.map { case (t, colTypes) => () =>
+      JdbcStage.writeStaging(frames(t), url, s"stg_$t", createTableColumnTypes = colTypes)
+    }: _*)
     inTransaction(url) { conn =>
       DimTables.foreach { case (t, idCol, nks, _) =>
         if (ensureTable(conn, t, s"stg_$t"))

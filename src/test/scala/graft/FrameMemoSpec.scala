@@ -186,6 +186,24 @@ class FrameMemoSpec extends AnyFunSuite {
     assert(highWater.get <= FrameMemo.PrebuildWorkers)
   }
 
+  test("inParallel: results in order, and a failure is rethrown as itself once every task has ended") {
+    import java.util.concurrent.atomic.AtomicInteger
+    val running = new AtomicInteger(0)
+    val highWater = new AtomicInteger(0)
+    def task(i: Int, failure: Option[Throwable] = None) = () => {
+      highWater.accumulateAndGet(running.incrementAndGet(), math.max)
+      try { Thread.sleep(if (failure.isDefined) 10 else 100); failure.foreach(throw _); i }
+      finally running.decrementAndGet()
+    }
+    assert(FrameMemo.inParallel("spec")((1 to 5).map(task(_)): _*) == (1 to 5))
+    assert(highWater.get > 1, "tasks must run at the same time")
+    val boom = new IllegalStateException("boom")
+    val thrown = intercept[IllegalStateException](FrameMemo.inParallel("spec")(
+      task(1), task(2, Some(boom)), task(3)))
+    assert(thrown eq boom, "the task's own exception, not a wrapper")
+    assert(running.get == 0, "a task was still running when inParallel threw")
+  }
+
   test("prebuild on a dir the memo does not retain builds nothing") {
     var builds = 0
     val entries = Seq("a" -> ((_: org.apache.spark.sql.SparkSession, _: String) => builds += 1))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,20 +24,39 @@ class MedallionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val energySilver = Medallion.cleanEnergy(energyBronze).cache()
   private lazy val emissionsSilver = Medallion.cleanEmissions(emissionsBronze).cache()
 
-  /** The star as the pipeline builds it: from gold marts read back from
-    * year-partitioned parquet, so a lazy star would plan file scans.
+  /** The gold marts as the pipeline reads them: year-partitioned parquet,
+    * so a lazy star would plan file scans. Reading them infers their
+    * schemas, which starts jobs of its own.
     */
-  private lazy val parquetStar: EnergyStar = {
+  private lazy val parquetGold: Seq[DataFrame] = {
     val root = ColumnBridge.tempDir("graft-gold")
     def gold(df: DataFrame, name: String): DataFrame = {
       df.write.partitionBy("year").parquet(s"$root/$name")
       spark.read.parquet(s"$root/$name")
     }
-    EnergyStar.build(
-      gold(Medallion.energyMonthly(energySilver), "energy_monthly"),
+    Seq(gold(Medallion.energyMonthly(energySilver), "energy_monthly"),
       gold(Medallion.emissionsMonthly(emissionsSilver), "emissions_monthly"),
       gold(Medallion.carbonIntensity(energySilver, emissionsSilver), "carbon_intensity"))
   }
+
+  /** The star built from [[parquetGold]], and the jobs the build started. */
+  private lazy val (parquetStar: EnergyStar, parquetStarJobs: Int) = {
+    val Seq(energy, emissions, ci) = parquetGold
+    SparkTestSession.jobsDuring(EnergyStar.build(energy, emissions, ci))
+  }
+
+  private def analysisQueries(star: EnergyStar): Seq[(String, DataFrame)] = Seq(
+    "q1" -> Analysis.q1TableCounts(star),
+    "q2" -> Analysis.q2MonthlyIntensity(star),
+    "q3" -> Analysis.q3TopIntensityMonths(star),
+    "q4" -> Analysis.q4AvgConsumptionPerSource(star),
+    "q5" -> Analysis.q5EmissionsVsEnergy(star),
+    "q6" -> Analysis.q6NullIntensityCount(star),
+    "q7" -> Analysis.q7IntensityRanking2024(star))
+
+  private def starFrames(star: EnergyStar): Seq[DataFrame] = Seq(star.dimRegion,
+    star.dimEnergySource, star.dimSector, star.dimTime, star.factEnergyMonthly,
+    star.factEmissionsMonthly, star.factCarbonIntensity)
 
   /** A new Derby database in a temp dir deleted at JVM exit. */
   private def freshDerbyUrl(name: String): String =
@@ -299,21 +318,34 @@ class MedallionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally conn.close()
   }
 
+  test("star.build starts 15 jobs and leaves every frame one partition") {
+    // 4 dim checkpoints + 8 dim broadcasts + 3 fact checkpoints: the
+    // single-partition gold reads plan no exchange under the dims
+    assert(parquetStarJobs == 15, s"expected 15 star.build jobs, got $parquetStarJobs")
+    starFrames(parquetStar).foreach(f =>
+      assert(f.rdd.getNumPartitions == 1, s"${f.columns.mkString(",")}: ${f.rdd.getNumPartitions} partitions"))
+  }
+
   test("star frames are materialized: q1-q7 run without a file scan") {
     val star = parquetStar
-    Seq(
-      "q1" -> Analysis.q1TableCounts(star),
-      "q2" -> Analysis.q2MonthlyIntensity(star),
-      "q3" -> Analysis.q3TopIntensityMonths(star),
-      "q4" -> Analysis.q4AvgConsumptionPerSource(star),
-      "q5" -> Analysis.q5EmissionsVsEnergy(star),
-      "q6" -> Analysis.q6NullIntensityCount(star),
-      "q7" -> Analysis.q7IntensityRanking2024(star)
-    ).foreach { case (n, df) =>
+    analysisQueries(star).foreach { case (n, df) =>
       val plan = executed(df)
       val scans = collect(plan) { case f: FileSourceScanExec => f }
       assert(scans.isEmpty, s"$n re-reads the gold parquet:\n$plan")
     }
+  }
+
+  test("star frames are single-partition: q1-q7 shuffle nothing and start 15 jobs") {
+    val jobs = analysisQueries(parquetStar).map { case (n, df) =>
+      val (plan, jobs) = SparkTestSession.jobsDuring(executed(df))
+      val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(shuffles.isEmpty, s"$n shuffles a single-partition star frame:\n$plan")
+      jobs
+    }
+    // one result job per query plus one per dim broadcast (q2/q3/q5/q7
+    // join two dims, q4 one); the fixture holds no 2024 rows, so q7's
+    // filtered dim_time broadcast is empty and its join needs no result job
+    assert(jobs == Seq(1, 3, 3, 2, 3, 1, 2), s"jobs per query q1-q7: $jobs")
   }
 
   test("loadStar starts one Spark job per staging write") {
@@ -321,6 +353,29 @@ class MedallionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val url = freshDerbyUrl("warehouse_jobs")
     val (_, jobs) = SparkTestSession.jobsDuring(JdbcWarehouse.loadStar(url, parquetStar))
     assert(jobs == 7, s"expected 7 staging-write jobs, got $jobs")
+  }
+
+  test("a failed staging write surfaces after the other writes end, and no warehouse table changes") {
+    import graft.sources.{JdbcStage, JdbcWarehouse}
+    val url = freshDerbyUrl("warehouse_staging_failure")
+    JdbcWarehouse.loadStar(url, parquetStar)
+    val tables = Seq("dim_region", "dim_energy_source", "dim_sector", "dim_time",
+      "fact_energy_monthly", "fact_emissions_monthly", "fact_carbon_intensity")
+    def rows(t: String) = JdbcStage.readTable(spark, url, t).collect().toSet
+    val before = tables.map(t => t -> rows(t)).toMap
+    // a changed fact that would update the warehouse, and a dim whose
+    // column name Derby rejects (longer than its 128-character limit)
+    val bumped = parquetStar.factCarbonIntensity
+      .withColumn("total_energy_mwh", col("total_energy_mwh") * 2)
+    val broken = parquetStar.copy(factCarbonIntensity = bumped,
+      dimSector = parquetStar.dimSector.withColumn("x" * 200, lit(1)))
+    val e = intercept[java.sql.SQLException](JdbcWarehouse.loadStar(url, broken))
+    assert(e.getSQLState == "42622", s"expected Derby's name-too-long error, got $e")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a staging write is still running after loadStar threw")
+    // the other writes ran to the end: the bumped fact is fully staged
+    assert(rows("stg_fact_carbon_intensity") == bumped.collect().toSet)
+    tables.foreach(t => assert(rows(t) == before(t), s"$t changed"))
   }
 
   test("silver cleaning scans bronze once: the median branch reuses the dedup exchange") {
