@@ -317,10 +317,12 @@ object Bench {
     */
   private[graft] val DetailFile = "BENCH_DETAIL.json"
 
-  /** Minimal JSON string escaper for the detail file. timeQueries only
-    * stores `getClass.getSimpleName` today, but renderDetail must stay
-    * valid JSON if a future change routes exception MESSAGES (quotes,
-    * backslashes, newlines) through the error channel.
+  /** Minimal JSON string escaper (quote, backslash, every control char
+    * below 0x20) for the detail file and Verify's `oracle_sql.json`.
+    * timeQueries only stores `getClass.getSimpleName` today, but
+    * renderDetail must stay valid JSON if a future change routes
+    * exception MESSAGES (quotes, backslashes, newlines) through the
+    * error channel.
     */
   private[graft] def jsonEscape(s: String): String =
     s.flatMap {

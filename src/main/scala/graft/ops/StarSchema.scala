@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
 /** Star-schema construction over the driver testdata, re-expressing the
@@ -107,10 +106,9 @@ object StarSchema {
     * dims are small by definition; facts never use a global window.
     */
   def dimRegion(s: SparkSession, d: String): DataFrame =
-    Tables.region(s, d).select(col("r_name").as("region_name")).distinct()
-      .withColumn("region_id",
-        row_number().over(graft.pipeline.StarOps.tinyGlobalWindow(
-          col("region_name"))).cast("int"))
+    graft.pipeline.StarOps.buildDim(
+      Tables.region(s, d).select(col("r_name").as("region_name")),
+      "region_id", "region_name")
 
   /** (year, month) time dim from the union of orders and events time
     * domains (D3: distinct pairs from multiple marts,
@@ -122,10 +120,8 @@ object StarSchema {
       .select(year(col("o_orderdate")).as("year"), month(col("o_orderdate")).as("month"))
     val fromEvents = Tables.events(s, d)
       .select(year(col("ts")).as("year"), month(col("ts")).as("month"))
-    fromOrders.union(fromEvents).distinct()
-      .withColumn("time_id",
-        row_number().over(graft.pipeline.StarOps.tinyGlobalWindow(
-          col("year"), col("month"))).cast("int"))
+    graft.pipeline.StarOps.buildDim(fromOrders.union(fromEvents),
+      "time_id", "year", "month")
   }
 
   /** Fact with surrogate keys: broadcast-join the dims onto the

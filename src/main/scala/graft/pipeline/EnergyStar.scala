@@ -66,11 +66,9 @@ object EnergyStar {
         .withColumnRenamed("sector", "sector_name")),
       // dim_time unions all three marts' (year, month) domains
       // (load_to_postgres.py:138-141) — sorted, so ids are deterministic
-      () => materialize(Seq(energy, emissions, ci).map(_.select("year", "month"))
-        .reduce(_ union _).coalesce(1).distinct()
-        .withColumn("time_id",
-          row_number().over(StarOps.tinyGlobalWindow(
-            col("year"), col("month"))).cast("int"))))
+      () => materialize(StarOps.buildDim(Seq(energy, emissions, ci)
+        .map(_.select("year", "month")).reduce(_ union _).coalesce(1),
+        "time_id", "year", "month")))
 
     def withRegion(df: DataFrame) = df.join(broadcast(dimRegion),
       df("region") === dimRegion("region_name"))

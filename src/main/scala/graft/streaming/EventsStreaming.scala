@@ -3,7 +3,8 @@ package graft.streaming
 import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
+  StreamingQueryProgress, Trigger}
 
 /** Structured Streaming over the `events` table: the same aggregation
   * logic as the batch twins in graft.ops.EventsOps, expressed as
@@ -398,9 +399,8 @@ object EventsStreaming {
   /** State-partition count for the bounded-replay query family
     * (q116–q143/q209/q215): 8, r19's measured choice for the window-keyed
     * queries; the r22 A/B in OPTIMIZATION_r22.md measured 16 and 32 on
-    * the large-state interval joins and rejected both. At cluster scale
-    * this is sized per query to executors × cores, per the
-    * [[runToMemory]] scaladoc.
+    * the large-state interval joins and rejected both. Why a replay pins
+    * it at all is in the [[replay]] scaladoc.
     */
   private[graft] val ReplayStatePartitions = 8
 
@@ -408,22 +408,10 @@ object EventsStreaming {
     * source via a memory sink; returns the materialized result table.
     * Used by tests and local verification — production would write to a
     * real sink with `trigger(Trigger.ProcessingTime(...))`.
-    *
-    * `statePartitions`: the stateful-operator partition count is fixed
-    * from `spark.sql.shuffle.partitions` at FIRST query start (it's baked
-    * into the checkpoint thereafter), and each state partition pays a
-    * delta-file round trip per micro-batch regardless of how few keys it
-    * holds — so it must track state-key CARDINALITY, not the batch
-    * shuffle default. The hourly replay holds ~3-4k window keys at bench
-    * SF: 32 partitions measured 2× slower than 8 from pure per-partition
-    * state-store overhead. At cluster scale the same knob is sized to
-    * executor count × cores, deliberately, per query. Restored after the
-    * run (bench/verify drive queries sequentially).
     */
   def runToMemory(s: SparkSession, streamed: DataFrame, name: String,
-                  mode: OutputMode = OutputMode.Append,
-                  statePartitions: Option[Int] = None): DataFrame =
-    runWithProgress(s, streamed, name, mode, statePartitions)._1
+                  mode: OutputMode = OutputMode.Append): DataFrame =
+    runWithProgress(s, streamed, name, mode)._1
 
   /** [[runToMemory]] that also returns the per-trigger progress objects
     * — the engine's own observability counters (numInputRows,
@@ -432,6 +420,68 @@ object EventsStreaming {
     * side channel, which is why this returns them instead of the query
     * re-deriving drop counts from data.
     */
+  def runWithProgress(s: SparkSession, streamed: DataFrame, name: String,
+                      mode: OutputMode = OutputMode.Append)
+      : (DataFrame, Seq[StreamingQueryProgress]) = {
+    val progress = replay(s, name) { ckpt =>
+      val writer = streamed.writeStream
+        .outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(Trigger.AvailableNow())
+      ckpt.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+    }
+    (s.table(name), progress)
+  }
+
+  /** The one lifecycle of a bounded replay: pin the state width, make a
+    * checkpoint dir, `start` the query on it, wait for it to finish,
+    * then restore the width and delete the dir (also when the query
+    * fails, whose `StreamingQueryException` is rethrown), and record
+    * the run in [[StreamingMetrics]] (BENCH_DETAIL's streaming section:
+    * batch count and state commit time per completed replay, so a slow
+    * bench line self-reports whether the engine did abnormal work).
+    *
+    * State width: the stateful-operator partition count is fixed from
+    * the session's shuffle width at FIRST query start (it's baked
+    * into the checkpoint thereafter), and each state partition pays a
+    * delta-file round trip per micro-batch regardless of how few keys it
+    * holds — so it must track state-key CARDINALITY, not the session's
+    * batch width (2×cores). The hourly replay holds ~3-4k window keys at
+    * bench SF: 32 partitions measured 2× slower than 8 from pure
+    * per-partition state-store overhead, and q128's Update-mode
+    * aggregation at 64 partitions spent 12–88 s of state commits on ~24
+    * hour keys (r21). At cluster scale the width is sized per query to
+    * executors × cores. Results are unaffected: every replayed
+    * aggregation is decimal-exact and every merge keyed.
+    *
+    * The width stays pinned for the whole run, not just `start`: q127's
+    * foreachBatch merge write runs on this session too, at the replay
+    * width. That mutates the session-global width — safe only while
+    * bench/verify drive queries sequentially, which they do, and why no
+    * replay is a `sharedArtifacts` entry (prebuild runs 4 threads). A
+    * concurrent caller would run the replay on `s.cloneSession()`.
+    */
+  private[graft] def replay(s: SparkSession, name: String)(
+      start: Option[String] => StreamingQuery): Seq[StreamingQueryProgress] = {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = s.conf.get(key)
+    s.conf.set(key, ReplayStatePartitions.toString)
+    val ckpt = replayCheckpointDir(name)
+    val progress =
+      try {
+        val q = start(ckpt)
+        q.awaitTermination()
+        q.recentProgress.toSeq
+      } finally {
+        s.conf.set(key, saved)
+        ckpt.foreach(c => new scala.reflect.io.Directory(
+          new java.io.File(c)).deleteRecursively())
+      }
+    StreamingMetrics.record(name, progress)
+    progress
+  }
+
   /** Throwaway checkpoint root for a bounded replay, on tmpfs when the
     * host has one: every micro-batch commits offset/commit-log files
     * plus one state delta PER STATE PARTITION to the checkpoint dir, and
@@ -440,71 +490,14 @@ object EventsStreaming {
     * durability of the checkpoint buys nothing here (a production query
     * puts it on shared storage for exactly-once recovery; these replays
     * rebuild from zero by design, that's the measured work). Deleted
-    * after the run; None (Spark's default temp dir) when tmpfs is
-    * missing or unwritable.
+    * after the run by [[replay]]; None (Spark's default temp dir) when
+    * tmpfs is missing or unwritable.
     */
-  private[graft] def replayCheckpointDir(name: String): Option[String] =
+  private def replayCheckpointDir(name: String): Option[String] =
     try {
       val base = java.nio.file.Paths.get("/dev/shm/graft_ckpt")
       java.nio.file.Files.createDirectories(base)
       val dir = java.nio.file.Files.createTempDirectory(base, name + "-")
       Some(dir.toString)
     } catch { case _: Throwable => None }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
-    * restoring the previous value after — the statePartitions discipline
-    * (see [[runToMemory]]) for the foreachBatch maintenance queries
-    * (q127/q128), which start their own StreamingQuery instead of going
-    * through runWithProgress. Their Update-mode aggregation otherwise
-    * bakes the session's BATCH shuffle width (2×cores) into the state
-    * store: 64 store instances — and 64 per-batch delta-file commits —
-    * for ~24 hour-grain keys (r21: q128's state_commit_ms summed 12–88 s
-    * across sessions from exactly this). Results are unaffected:
-    * the aggregation is decimal-exact (order-independent) and the merge
-    * is keyed, so only the store/file counts change.
-    *
-    * SINGLE-THREADED assumption (r21 ADVICE): this mutates the
-    * session-global shuffle width for the duration of `body` — safe only
-    * while bench/verify drive queries sequentially, which they do. A
-    * future concurrent caller on the same session would silently plan
-    * batch queries at `n` partitions; run such work on s.cloneSession()
-    * with the conf set on the clone instead.
-    */
-  private[streaming] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, saved)
-  }
-
-  def runWithProgress(s: SparkSession, streamed: DataFrame, name: String,
-                      mode: OutputMode = OutputMode.Append,
-                      statePartitions: Option[Int] = None)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    statePartitions.foreach(n => s.conf.set(key, n.toString))
-    val ckpt = replayCheckpointDir(name)
-    val progress =
-      try {
-        val writer = streamed.writeStream
-          .outputMode(mode)
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-        val q: StreamingQuery =
-          ckpt.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-        q.awaitTermination()
-        q.recentProgress.toSeq
-      } finally {
-        s.conf.set(key, saved)
-        ckpt.foreach(c => new scala.reflect.io.Directory(
-          new java.io.File(c)).deleteRecursively())
-      }
-    // observability registry (BENCH_DETAIL's streaming section): batch
-    // count + state commit time per completed replay, so a slow bench
-    // line self-reports whether the engine did abnormal work
-    StreamingMetrics.record(name, progress)
-    (s.table(name), progress)
-  }
 }

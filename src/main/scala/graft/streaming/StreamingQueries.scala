@@ -120,7 +120,7 @@ object StreamingQueries extends graft.QueryModule {
       val stream = EventsStreaming.readEvents(s, stage, maxFilesPerTrigger = Some(1))
       val (_, progress) = EventsStreaming.runWithProgress(s,
         EventsStreaming.hourlyCounts(stream), "q209_stream_late_audit",
-        OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Append)
       val rows = progress.filter(_.numInputRows > 0).zipWithIndex.map {
         case (p, i) =>
           val wmMs = java.time.Instant.parse(p.eventTime.get("watermark"))
@@ -151,8 +151,7 @@ object StreamingQueries extends graft.QueryModule {
           .as(Seq("r", "c")))
       val matrix = EventsStreaming.runToMemory(s,
         probes.groupBy("r", "c").agg(count(lit(1)).as("v")),
-        "q172_stream_hotkey_cms", OutputMode.Complete,
-        statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        "q172_stream_hotkey_cms", OutputMode.Complete)
       val events = graft.Tables.events(s, d)
       val exact = events.groupBy("user_id").agg(count(lit(1)).as("exact_n"))
         .orderBy(col("exact_n").desc, col("user_id")).limit(10)
@@ -187,7 +186,7 @@ object StreamingQueries extends graft.QueryModule {
       val stream = EventsStreaming.readEvents(s, stage, maxFilesPerTrigger = Some(1))
       val (_, progress) = EventsStreaming.runWithProgress(s,
         EventsStreaming.hourlyCounts(stream), "q215_stream_state_audit",
-        OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Append)
       progress.filter(_.numInputRows > 0).zipWithIndex.map { case (p, i) =>
         val st = p.stateOperators.head
         (i, st.numRowsTotal, st.numRowsUpdated, st.numRowsRemoved)
@@ -207,7 +206,7 @@ object StreamingQueries extends graft.QueryModule {
       val stream = stagedEvents(s, d)
       val replayed = EventsStreaming.runToMemory(s,
         EventsStreaming.hourlyCounts(stream), "q116_stream_hourly_replay",
-        OutputMode.Complete, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Complete)
       replayed.orderBy("hour", "event_type")
     }),
 
@@ -227,7 +226,7 @@ object StreamingQueries extends graft.QueryModule {
       val stream = stagedEvents(s, d)
       val sealedWindows = EventsStreaming.runToMemory(s,
         EventsStreaming.hourlyCounts(stream), "q119_stream_hourly_append",
-        OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Append)
       sealedWindows.orderBy("hour", "event_type")
     }),
 
@@ -243,7 +242,7 @@ object StreamingQueries extends graft.QueryModule {
       val stream = stagedEvents(s, d)
       val sealedSessions = EventsStreaming.runToMemory(s,
         EventsStreaming.sessionWindows(stream), "q122_stream_sessions_append",
-        OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Append)
       sealedSessions.orderBy("user_id", "session_start")
     }),
 
@@ -260,7 +259,7 @@ object StreamingQueries extends graft.QueryModule {
       val joined = EventsStreaming.runToMemory(s,
         EventsStreaming.purchaseAttribution(stream),
         "q123_stream_attribution_replay",
-        OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Append)
       joined.orderBy("purchase_id", "click_id")
     }),
 
@@ -277,7 +276,7 @@ object StreamingQueries extends graft.QueryModule {
       val stream = stagedEvents(s, d)
       val closed = EventsStreaming.runToMemory(s,
         EventsStreaming.sessionize(s, stream), "q124_stream_sessionize_custom",
-        OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Append)
       closed.orderBy("user_id", "start_micros")
     }),
 
@@ -291,17 +290,8 @@ object StreamingQueries extends graft.QueryModule {
     "q127_stream_gold_additive" -> ((s, d) => {
       val gold = scratchDir(s, "gold")
       val stream = stagedEvents(s, d)
-      val ckpt = EventsStreaming.replayCheckpointDir("q127")
-      // state-partition discipline (see withStatePartitions): the
-      // foreachBatch batch aggregation + merge write run at 8, matching
-      // the rest of the streaming family; results are key-exact
-      EventsStreaming.withStatePartitions(s, 8) {
-        val q = EventsStreaming.incrementalDailyGold(s, stream, gold, ckpt)
-        try q.awaitTermination()
-        finally ckpt.foreach(c => new scala.reflect.io.Directory(
-          new java.io.File(c)).deleteRecursively())
-        StreamingMetrics.record("q127_stream_gold_additive", q.recentProgress.toSeq)
-      }
+      EventsStreaming.replay(s, "q127_stream_gold_additive")(ckpt =>
+        EventsStreaming.incrementalDailyGold(s, stream, gold, ckpt))
       s.read.parquet(gold)
         .select(col("day"), col("event_type"),
           col("revenue").cast("double").as("revenue"), col("n_events"))
@@ -317,18 +307,8 @@ object StreamingQueries extends graft.QueryModule {
     "q128_stream_fact_upsert" -> ((s, d) => {
       val fact = scratchDir(s, "fact")
       val stream = stagedEvents(s, d)
-      val ckpt = EventsStreaming.replayCheckpointDir("q128")
-      // state-partition discipline (see withStatePartitions): the
-      // Update-mode aggregation's state store otherwise inherits the
-      // session's 64 batch shuffle partitions for ~24 hour keys — 64
-      // per-batch store commits where 8 carry the same state
-      EventsStreaming.withStatePartitions(s, 8) {
-        val q = EventsStreaming.upsertHourlyFact(s, stream, fact, ckpt)
-        try q.awaitTermination()
-        finally ckpt.foreach(c => new scala.reflect.io.Directory(
-          new java.io.File(c)).deleteRecursively())
-        StreamingMetrics.record("q128_stream_fact_upsert", q.recentProgress.toSeq)
-      }
+      EventsStreaming.replay(s, "q128_stream_fact_upsert")(ckpt =>
+        EventsStreaming.upsertHourlyFact(s, stream, fact, ckpt))
       s.read.parquet(fact)
         .select(col("hour"), col("event_type"), col("n"),
           col("total_value").cast("double").as("total_value"))
@@ -342,7 +322,7 @@ object StreamingQueries extends graft.QueryModule {
       val stream = stagedEvents(s, d)
       val counts = EventsStreaming.runToMemory(s,
         EventsStreaming.runningUserCounts(s, stream),
-        "q129_stream_user_counts", OutputMode.Update, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        "q129_stream_user_counts", OutputMode.Update)
       counts.orderBy("user_id")
     }),
 
@@ -358,7 +338,7 @@ object StreamingQueries extends graft.QueryModule {
       val stream = stagedEvents(s, d)
       val deduped = EventsStreaming.runToMemory(s,
         EventsStreaming.dedupEvents(stream), "q130_stream_dedup_ingest",
-        OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Append)
       deduped.orderBy("event_id")
     }),
 
@@ -380,7 +360,7 @@ object StreamingQueries extends graft.QueryModule {
       val joined = EventsStreaming.runToMemory(s,
         EventsStreaming.purchaseAttribution(stream, joinType = "left_outer"),
         "q126_stream_attribution_outer",
-        OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Append)
       joined.orderBy("purchase_id", "click_id")
     }),
 
@@ -389,7 +369,7 @@ object StreamingQueries extends graft.QueryModule {
       val enriched = EventsStreaming.runToMemory(s,
         EventsStreaming.enrichWithRegion(s, stream, d),
         "q125_stream_enrich_replay",
-        OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Append)
       enriched.orderBy("event_id")
     }),
 
@@ -405,7 +385,7 @@ object StreamingQueries extends graft.QueryModule {
       val joined = EventsStreaming.runToMemory(s,
         EventsStreaming.purchaseAttribution(stream, joinType = "full_outer"),
         "q143_stream_attribution_full",
-        OutputMode.Append, statePartitions = Some(EventsStreaming.ReplayStatePartitions))
+        OutputMode.Append)
       joined.orderBy("purchase_id", "click_id", "user_id")
     })
   )

@@ -548,4 +548,53 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.count() > 0, "enrichment matched no events")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
+
+  private val Width = "spark.sql.shuffle.partitions"
+
+  /** `name`'s replay checkpoint dirs now on tmpfs (see
+    * `EventsStreaming.replay`); empty when the host has no /dev/shm. */
+  private def checkpointDirs(name: String): Set[String] =
+    Option(new java.io.File("/dev/shm/graft_ckpt").list()).toSet.flatten
+      .filter(_.startsWith(name + "-"))
+
+  test("replay rethrows a failed query and still restores the width and deletes its checkpoint") {
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    val name = "replay_fail_test"
+    val before = spark.conf.get(Width)
+    assert(before != EventsStreaming.ReplayStatePartitions.toString,
+      "the session must start at another width for this test to tell")
+    val dirsBefore = checkpointDirs(name)
+    val widthInBatch = new java.util.concurrent.atomic.AtomicReference[String]()
+    val stream = EventsStreaming.readEvents(spark, dir)
+    val err = intercept[StreamingQueryException](
+      EventsStreaming.replay(spark, name) { ckpt =>
+        val writer = stream.writeStream
+          .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            widthInBatch.set(spark.conf.get(Width))
+            throw new IllegalStateException("replay_fail_test batch failed")
+          }
+          .trigger(Trigger.AvailableNow())
+        ckpt.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+      })
+    assert(err.getMessage.contains("replay_fail_test batch failed"), err.getMessage)
+    // pinned while the batch ran, restored once the query failed
+    assert(widthInBatch.get == EventsStreaming.ReplayStatePartitions.toString)
+    assert(spark.conf.get(Width) == before)
+    assert(checkpointDirs(name) == dirsBefore, "failed replay left its checkpoint dir")
+  }
+
+  test("q127 through the registry records its replay, restores the width, leaves no checkpoint") {
+    val name = "q127_stream_gold_additive"
+    val before = spark.conf.get(Width)
+    val dirsBefore = checkpointDirs(name)
+    val previous = streaming.StreamingMetrics.snapshot.get(name)
+    val got = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+    val run = streaming.StreamingMetrics.snapshot.get(name)
+    assert(run.isDefined && !previous.exists(_ eq run.get),
+      "q127's replay recorded no StreamingMetrics entry")
+    assert(run.get.batches >= 1, run.get)
+    assert(spark.conf.get(Width) == before)
+    assert(checkpointDirs(name) == dirsBefore, "q127 left its checkpoint dir")
+    assert(got.count() > 0)
+  }
 }

@@ -41,4 +41,18 @@ class VerifySpec extends AnyFunSuite {
     assert(SparkEntry.select(Set("q22")).keySet == Set("q22_text_quality"))
     assert(SparkEntry.select(Set("q16_dim_region")).keySet == Set("q16_dim_region"))
   }
+
+  test("jsonEscape round-trips every ASCII char, quote and backslash through Jackson") {
+    // the one escaper behind BENCH_DETAIL and oracle_sql.json; Jackson
+    // rejects an unescaped control char, so a missing case fails here
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def roundTrip(s: String): String =
+      mapper.readTree("\"" + Bench.jsonEscape(s) + "\"").asText()
+    val ascii = (0 to 0x7f).map(_.toChar)
+    ascii.foreach { c =>
+      assert(roundTrip(c.toString) == c.toString, f"char 0x${c.toInt}%02x")
+    }
+    val all = ascii.mkString + "\"\\" + "a\"b\\c\\\"d"
+    assert(roundTrip(all) == all)
+  }
 }
