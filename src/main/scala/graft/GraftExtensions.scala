@@ -1,34 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 import graft.expressions.{CosineSimilarity, DotProduct, GramHashes, NfcNormalize, SimHash, ZOrder16}
 
-/** SparkSessionExtensions hook exposing the engine's native expressions
-  * to SQL users:
+/** The engine's native expressions as SQL functions:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * GraftExtensions.register(spark)
   * spark.sql("SELECT cosine_similarity(a.embedding, b.embedding) ...")
   * }}}
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions._
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    builders.foreach { case (name, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, name),
-        builder))
-    }
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
-  }
-}
-
 object GraftExtensions {
   // SQL callers get float/int arrays coerced to array<double> for free
   private def asVec(e: Expression): Expression = e.dataType match {
@@ -45,9 +27,7 @@ object GraftExtensions {
     "zorder16" -> (args => ZOrder16(
       Cast(args(0), LongType), Cast(args(1), LongType))))
 
-  /** Register on an already-running session (builder extensions only
-    * apply to sessions created after `withExtensions`).
-    */
+  /** Register the six functions on a running session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     builders.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry

@@ -233,10 +233,6 @@ object EventsOps extends graft.QueryModule {
       |ORDER BY event_id""".stripMargin
 
   val asofQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // the same as-of semantics through the custom AsOfJoinExec physical
-    // operator (graft.plans.AsOfJoin) — hash-clustered build + binary
-    // search, no per-event window; oracle-checked independently of the
-    // composed q45
     // Time-series densification: the observed hourly aggregate LEFT-joins
     // a generated (hour x event_type) spine, so silent gaps become
     // explicit rows — zero-filled for the additive measures (a missing
@@ -271,22 +267,25 @@ object EventsOps extends graft.QueryModule {
         .orderBy("hour", "event_type")
     }),
 
-    "q46_asof_custom_op" -> ((s, d) => asOfViaOperator(s, d, "hash")),
+    // q45's as-of semantics through the custom operator
+    // (graft.plans.AsOfJoin, planned as the sort-merge AsOfMergeJoinExec)
+    // — no per-event window; oracle-checked independently of the
+    // composed q45
+    "q46_asof_custom_op" -> ((s, d) => asOfViaOperator(s, d)),
 
-    // the SAME as-of semantics through the sort-merge exec — O(1)
-    // carried state instead of a per-key build buffer (the fact-fact /
-    // skew-immune physical shape), oracle-checked against the identical
-    // SQL as q46 so both custom execs sit in the hash-compared surface.
-    "q75_asof_merge_op" -> ((s, d) => asOfViaOperator(s, d, "merge")))
+    // the identical plan and oracle SQL as q46, kept registered under
+    // its own name
+    "q75_asof_merge_op" -> ((s, d) => asOfViaOperator(s, d)))
 
-  /** q46/q75 share everything but the physical algorithm. */
-  private def asOfViaOperator(s: SparkSession, d: String, algo: String): DataFrame = {
+  /** q46/q75: each event's latest order at or before it, through
+    * `AsOf.join` (one sort-merge exec, no window, no cross join).
+    */
+  private def asOfViaOperator(s: SparkSession, d: String): DataFrame = {
     val e = Tables.events(s, d).select("event_id", "user_id", "ts")
     val o = Tables.orders(s, d)
       .select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
     graft.plans.AsOf.join(s, e, o,
-        Seq("user_id"), Seq("o_custkey"), "ts", "o_orderdate", "o_orderkey",
-        algo = algo)
+        Seq("user_id"), Seq("o_custkey"), "ts", "o_orderdate", "o_orderkey")
       .select(col("event_id"), col("user_id"),
         col("o_orderkey").as("last_orderkey"),
         col("o_totalprice").as("last_totalprice"))

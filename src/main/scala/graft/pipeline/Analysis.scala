@@ -11,19 +11,10 @@ import org.apache.spark.sql.expressions.Window
 object Analysis {
 
   /** Q1 — labeled row counts, UNION ALL (sql:4-10). */
-  def q1TableCounts(star: EnergyStar): DataFrame = {
-    val tables = Seq(
-      "dim_region" -> star.dimRegion,
-      "dim_energy_source" -> star.dimEnergySource,
-      "dim_sector" -> star.dimSector,
-      "dim_time" -> star.dimTime,
-      "fact_energy_monthly" -> star.factEnergyMonthly,
-      "fact_emissions_monthly" -> star.factEmissionsMonthly,
-      "fact_carbon_intensity" -> star.factCarbonIntensity)
-    tables.map { case (n, df) =>
+  def q1TableCounts(star: EnergyStar): DataFrame =
+    star.tables.map { case (n, df) =>
       df.agg(count(lit(1)).as("n_rows")).select(lit(n).as("table_name"), col("n_rows"))
     }.reduce(_ union _)
-  }
 
   private def ciJoined(star: EnergyStar): DataFrame =
     star.factCarbonIntensity

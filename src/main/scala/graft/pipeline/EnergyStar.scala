@@ -25,7 +25,18 @@ import graft.ops.FrameMemo
 case class EnergyStar(
     dimRegion: DataFrame, dimEnergySource: DataFrame, dimSector: DataFrame,
     dimTime: DataFrame, factEnergyMonthly: DataFrame,
-    factEmissionsMonthly: DataFrame, factCarbonIntensity: DataFrame)
+    factEmissionsMonthly: DataFrame, factCarbonIntensity: DataFrame) {
+
+  /** The 7 warehouse tables by name, in `01_create_schema.sql` order. */
+  def tables: Seq[(String, DataFrame)] = Seq(
+    "dim_region" -> dimRegion,
+    "dim_energy_source" -> dimEnergySource,
+    "dim_sector" -> dimSector,
+    "dim_time" -> dimTime,
+    "fact_energy_monthly" -> factEnergyMonthly,
+    "fact_emissions_monthly" -> factEmissionsMonthly,
+    "fact_carbon_intensity" -> factCarbonIntensity)
+}
 
 object EnergyStar {
 
@@ -94,13 +105,6 @@ object EnergyStar {
   /** Register all 7 tables as temp views so the analysis surface is also
     * reachable through `spark.sql`.
     */
-  def registerViews(s: SparkSession, star: EnergyStar): Unit = {
-    star.dimRegion.createOrReplaceTempView("dim_region")
-    star.dimEnergySource.createOrReplaceTempView("dim_energy_source")
-    star.dimSector.createOrReplaceTempView("dim_sector")
-    star.dimTime.createOrReplaceTempView("dim_time")
-    star.factEnergyMonthly.createOrReplaceTempView("fact_energy_monthly")
-    star.factEmissionsMonthly.createOrReplaceTempView("fact_emissions_monthly")
-    star.factCarbonIntensity.createOrReplaceTempView("fact_carbon_intensity")
-  }
+  def registerViews(s: SparkSession, star: EnergyStar): Unit =
+    star.tables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
 }

@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.mutable
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
@@ -13,8 +11,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.types.{DateType, LongType, TimestampNTZType, TimestampType}
 
 /** AS-OF JOIN as a first-class operator (SURVEY §7.3 path (c): custom
-  * `LogicalPlan` + `Strategy` + `SparkPlan`, registered through
-  * `SparkSessionExtensions`).
+  * `LogicalPlan` + `Strategy` + `SparkPlan`, registered on a session by
+  * [[AsOf.install]]).
   *
   * Semantics: for each left row, the single right row with the same
   * equi-key and the greatest right-time ≤ left-time; ties on right-time
@@ -24,23 +22,16 @@ import org.apache.spark.sql.types.{DateType, LongType, TimestampNTZType, Timesta
   * side (SQL equality semantics — NOT UnsafeRow byte equality, which
   * would make NULL = NULL).
   *
-  * Physical strategy: both sides hash-clustered on the equi-keys (one
-  * shuffle each, like a shuffled-hash join — NO cross join, NO
-  * per-row window). The right partition is grouped per key with rows
-  * pre-sorted by (time, tieBreak) via requiredChildOrdering; each left
-  * row then binary-searches its key group. Memory is bounded by the
-  * right partition (the dimension-like side), the same contract as a
-  * shuffled-hash join build side; `maxBuildGroupSize` fails fast with a
-  * clear error if one key group exceeds it (a skewed build key would
-  * otherwise OOM an executor with an opaque heap error).
+  * Physical strategy: one exec, [[AsOfMergeJoinExec]] — both sides
+  * hash-clustered on the equi-keys and sorted by (key, time), like a
+  * sort-merge join (NO cross join, NO per-row window), with O(1)
+  * carried state per partition whatever the key skew.
   */
 case class AsOfJoin(
     left: LogicalPlan, right: LogicalPlan,
     leftKeys: Seq[Expression], rightKeys: Seq[Expression],
     leftTime: Expression, rightTime: Expression,
-    tieBreak: Expression, leftOuter: Boolean = false,
-    maxBuildGroupSize: Long = AsOf.DefaultMaxBuildGroupSize,
-    merge: Boolean = false) extends BinaryNode {
+    tieBreak: Expression, leftOuter: Boolean = false) extends BinaryNode {
   override def output: Seq[Attribute] =
     left.output ++ (if (leftOuter) right.output.map(_.withNullability(true))
                     else right.output)
@@ -97,9 +88,9 @@ object PushFilterThroughAsOfJoin
   }
 }
 
-/** Time-to-long widening shared by both execs and the API-layer type
-  * check — ONE mapping, so adding a supported time type can't leave an
-  * exec behind.
+/** Time-to-long widening shared by the exec and the API-layer type
+  * check — ONE mapping, so adding a supported time type can't leave the
+  * two disagreeing.
   */
 private[plans] object AsOfTime {
   def supported(d: org.apache.spark.sql.types.DataType): Boolean = d match {
@@ -117,135 +108,24 @@ private[plans] object AsOfTime {
 
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoin(l, r, lk, rk, lt, rt, tb, outer, maxGroup, false) =>
-      AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, tb, outer, maxGroup) :: Nil
-    case AsOfJoin(l, r, lk, rk, lt, rt, tb, outer, _, true) =>
+    case AsOfJoin(l, r, lk, rk, lt, rt, tb, outer) =>
       AsOfMergeJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, tb, outer) :: Nil
     case _ => Nil
   }
 }
 
-case class AsOfJoinExec(
-    left: SparkPlan, right: SparkPlan,
-    leftKeys: Seq[Expression], rightKeys: Seq[Expression],
-    leftTime: Expression, rightTime: Expression,
-    tieBreak: Expression, leftOuter: Boolean = false,
-    maxBuildGroupSize: Long = AsOf.DefaultMaxBuildGroupSize) extends BinaryExecNode {
-
-  override def output: Seq[Attribute] =
-    left.output ++ (if (leftOuter) right.output.map(_.withNullability(true))
-                    else right.output)
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
-
-  /** Right side arrives sorted by (keys, time, tieBreak): per-key groups
-    * are contiguous and internally time-ordered, so the per-key buffer is
-    * binary-searchable as built.
-    */
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    Nil,
-    (rightKeys :+ rightTime :+ tieBreak).map(SortOrder(_, Ascending)))
-
-  /** zipPartitions emits rows partition-for-partition with the left
-    * child, so the left's hash clustering survives — advertise it, or a
-    * downstream groupBy on the join keys pays a pointless re-shuffle
-    * (the same pass-through built-in shuffled joins declare).
-    */
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    left.outputPartitioning
-
-  /** Times compare as raw longs (TimestampType = micros, DateType = days
-    * widened to long — one shared mapping, [[AsOfTime]]).
-    */
-  private def timeAsLong(e: Expression, value: Any): Long = AsOfTime.asLong(e, value)
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val leftOut = left.output
-    val rightOut = right.output
-    left.execute().zipPartitions(right.execute()) { (lIt, rIt) =>
-      val rightKeyProj = UnsafeProjection.create(rightKeys, rightOut)
-      val leftKeyProj = UnsafeProjection.create(leftKeys, leftOut)
-      val boundRightTime = BindReferences.bindReference(rightTime, rightOut)
-      val boundLeftTime = BindReferences.bindReference(leftTime, leftOut)
-
-      // build: per-key right rows, insertion order == (time, tieBreak).
-      // Rows with a null time OR any null key are skipped — a NULL key
-      // must not equal anything (UnsafeRow byte equality would happily
-      // match NULL = NULL and silently diverge from SQL join semantics).
-      val buffers = new mutable.HashMap[UnsafeRow, mutable.ArrayBuffer[(Long, InternalRow)]]
-      rIt.foreach { r =>
-        val t = boundRightTime.eval(r)
-        if (t != null) {
-          val key = rightKeyProj(r)
-          if (!key.anyNull) {
-            val buf = buffers.getOrElseUpdate(key.copy(),
-              new mutable.ArrayBuffer[(Long, InternalRow)])
-            if (buf.length >= maxBuildGroupSize)
-              throw new IllegalStateException(
-                s"as-of join build side exceeded $maxBuildGroupSize rows for key " +
-                  s"${rightKeys.mkString(", ")} — the right side must be the " +
-                  "dimension-like side; pre-aggregate it, or raise " +
-                  "graft.asof.maxBuildGroupSize if the skew is expected")
-            buf += ((timeAsLong(rightTime, t), r.copy()))
-          }
-        }
-      }
-
-      val joined = new JoinedRow
-      val resultProj = UnsafeProjection.create(output, output)
-      val nullRight = new GenericInternalRow(rightOut.size)
-      def unmatched(l: InternalRow): Iterator[InternalRow] =
-        if (leftOuter) Iterator.single(resultProj(joined(l, nullRight)))
-        else Iterator.empty
-      lIt.flatMap { l =>
-        val t = boundLeftTime.eval(l)
-        if (t == null) unmatched(l)
-        else {
-          val key = leftKeyProj(l)
-          // NULL probe keys match nothing (same reasoning as the build side)
-          val bufOpt = if (key.anyNull) None else buffers.get(key)
-          bufOpt match {
-            case None => unmatched(l)
-            case Some(buf) =>
-              // binary search: last index with rightTime <= leftTime
-              val target = timeAsLong(leftTime, t)
-              var lo = 0
-              var hi = buf.length - 1
-              var found = -1
-              while (lo <= hi) {
-                val mid = (lo + hi) >>> 1
-                if (buf(mid)._1 <= target) { found = mid; lo = mid + 1 }
-                else hi = mid - 1
-              }
-              if (found < 0) unmatched(l)
-              else Iterator.single(resultProj(joined(l, buf(found)._2)))
-          }
-        }
-      }
-    }
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: SparkPlan, newRight: SparkPlan): AsOfJoinExec =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Sort-merge as-of — the FACT-FACT variant. The hash exec above buffers
-  * the whole right side of a partition per key (the shuffled-hash-join
-  * contract: right must be dimension-like, guarded by
-  * maxBuildGroupSize). Here BOTH sides stream in (key, time) order and
-  * the carried state is ONE remembered right row — O(1) memory per
-  * partition regardless of key skew or right-side size, the same
-  * hash-vs-sort trade Spark itself makes between ShuffledHashJoin and
-  * SortMergeJoin. The price is a sort on each side (or free reuse of an
+/** Sort-merge as-of. BOTH sides stream in (key, time) order and the
+  * carried state is ONE remembered right row — O(1) memory per
+  * partition regardless of key skew or right-side size, so neither side
+  * has to be dimension-like and a hot key costs rows streamed, not
+  * memory held. The price is a sort on each side (or free reuse of an
   * existing (key, time) ordering, e.g. time-clustered ingest).
   *
   * Single forward pass: for each left row (keys sorted, times ascending
   * within a key), right rows with time ≤ left-time are consumed once and
   * never revisited — the remembered row is always the greatest
-  * (time, tieBreak) eligible match, so semantics are identical to the
-  * hash exec (AsOfJoinSpec pins the equivalence row-for-row).
+  * (time, tieBreak) eligible match (AsOfJoinSpec pins the result
+  * row-for-row against the composed join + `row_number` form).
   */
 case class AsOfMergeJoinExec(
     left: SparkPlan, right: SparkPlan,
@@ -275,8 +155,6 @@ case class AsOfMergeJoinExec(
   override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
     left.outputPartitioning
   override def outputOrdering: Seq[SortOrder] = left.outputOrdering
-
-  private def timeAsLong(e: Expression, value: Any): Long = AsOfTime.asLong(e, value)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val leftOut = left.output
@@ -315,7 +193,7 @@ case class AsOfMergeJoinExec(
           val lk = leftKeyProj(l)
           if (lk.anyNull) unmatched(l)
           else {
-            val lt = timeAsLong(leftTime, t)
+            val lt = AsOfTime.asLong(leftTime, t)
             // skip right groups strictly below this left key
             while (rBuf.hasNext && keyOrd.compare(rightKeyProj(rBuf.head), lk) < 0)
               rBuf.next()
@@ -327,7 +205,7 @@ case class AsOfMergeJoinExec(
             // consume every right row in this group that is eligible for
             // this (and, times ascending, every later) left row
             while (rBuf.hasNext && keyOrd.compare(rightKeyProj(rBuf.head), lk) == 0 &&
-                timeAsLong(rightTime, boundRightTime.eval(rBuf.head)) <= lt)
+                AsOfTime.asLong(rightTime, boundRightTime.eval(rBuf.head)) <= lt)
               last = rBuf.next().copy()
             if (last == null) unmatched(l)
             else Iterator.single(resultProj(joined(l, last)))
@@ -343,17 +221,11 @@ case class AsOfMergeJoinExec(
 }
 
 /** User-facing API: `AsOf.join(events, orders, keys..., times...)`.
-  * Requires `AsOfJoinStrategy` injected (GraftExtensions) or registered
-  * via `AsOf.install(spark)`.
+  * `join` calls [[install]], the one place the planner strategy and the
+  * pushdown rule reach a session.
   */
 object AsOf {
   import org.apache.spark.sql.graft.ColumnBridge
-
-  /** Build-side guard: max right rows buffered per key group before the
-    * join fails fast (instead of OOMing the executor on a skewed build
-    * key). Override per-session with `graft.asof.maxBuildGroupSize`.
-    */
-  val DefaultMaxBuildGroupSize: Long = 8L * 1000 * 1000
 
   def install(spark: SparkSession): Unit = AsOf.synchronized {
     // synchronized: the read-modify-write of the experimental methods
@@ -361,21 +233,13 @@ object AsOf {
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    // under GraftExtensions the rule already sits in the main
-    // operator-optimization fixpoint — appending it again would make
-    // EVERY query in the session pay a redundant extra fixpoint batch
-    val inOptimizer = spark.sessionState.optimizer.batches
-      .exists(_.rules.exists(_ eq PushFilterThroughAsOfJoin))
-    if (!inOptimizer &&
-        !spark.experimental.extraOptimizations.contains(PushFilterThroughAsOfJoin))
+    if (!spark.experimental.extraOptimizations.contains(PushFilterThroughAsOfJoin))
       // extraOptimizations run as a FIXPOINT batch but AFTER the main
       // optimizer — a predicate our rule pushes below the as-of node
       // would stop at the first built-in operator (PushDownPredicates
       // already ran). Appending Catalyst's own PushDownPredicates to the
       // same batch lets the two alternate to a fixpoint, so the filter
       // cascades through a composed left side all the way to the scan.
-      // (The GraftExtensions path doesn't need this: injectOptimizerRule
-      // joins the main operator-optimization fixpoint directly.)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+
           PushFilterThroughAsOfJoin :+
@@ -385,16 +249,14 @@ object AsOf {
   /** As-of join on `leftOn == rightOn` with `rightTime <= leftTime`,
     * latest-wins, ties broken by greatest `tieBreak` (a right-side
     * column). `leftOuter = true` keeps unmatched left rows with the
-    * right side null-extended. `algo` picks the physical shape:
-    * "hash" (binary-search per probe; right side must be
-    * dimension-like per key) or "merge" (both sides sorted, O(1)
-    * carried state — the fact-fact / skew-immune variant).
+    * right side null-extended. Plans as [[AsOfMergeJoinExec]]: both
+    * sides shuffled on the keys and sorted by (key, time), O(1) carried
+    * state per partition.
     */
   def join(spark: SparkSession, leftDf: DataFrame, rightDf: DataFrame,
            leftOn: Seq[String], rightOn: Seq[String],
            leftTime: String, rightTime: String, tieBreak: String,
-           leftOuter: Boolean = false, algo: String = "hash"): DataFrame = {
-    require(algo == "hash" || algo == "merge", s"unknown as-of algo: $algo")
+           leftOuter: Boolean = false): DataFrame = {
     install(spark)
     val lPlan = ColumnBridge.analyzedPlan(leftDf)
     val rPlan0 = ColumnBridge.analyzedPlan(rightDf)
@@ -428,11 +290,12 @@ object AsOf {
     }
     val lk = leftOn.map(attr(lPlan, _))
     val rk = rightOn.map(attr(rPlan, _))
-    // key lookup compares UnsafeRow bytes: mismatched key types (int vs
-    // long) would silently produce an empty join — fail loudly instead.
-    // Float/double keys are rejected outright: -0.0/0.0 and NaN bit
-    // patterns compare equal under SQL but differ as bytes, so the hash
-    // exec would silently drop matches the merge exec keeps.
+    // both sides are hash-partitioned on the key values: mismatched key
+    // types (int vs long) hash differently and would silently produce an
+    // empty join — fail loudly instead. Float/double keys are rejected
+    // outright: Spark's own equi-joins rewrite such keys with
+    // NormalizeFloatingNumbers (-0.0 to 0.0, one NaN) before planning,
+    // and that rule never sees this custom node.
     lk.zip(rk).foreach { case (a, b) =>
       require(a.dataType == b.dataType,
         s"as-of key type mismatch: ${a.name}:${a.dataType.catalogString} vs " +
@@ -440,8 +303,8 @@ object AsOf {
       require(a.dataType != org.apache.spark.sql.types.DoubleType &&
           a.dataType != org.apache.spark.sql.types.FloatType,
         s"as-of key ${a.name} is ${a.dataType.catalogString}: floating-point " +
-          "equi-keys are not supported (byte-equality vs SQL-equality diverge " +
-          "on -0.0/NaN) — cast to a decimal/integral key")
+          "equi-keys are not supported (-0.0/NaN are not normalized as in " +
+          "Spark's own joins) — cast to a decimal/integral key")
     }
     val lt = attr(lPlan, leftTime)
     val rt = attr(rPlan, rightTime)
@@ -469,10 +332,8 @@ object AsOf {
     // inside an executor task)
     Seq(lt, rt).foreach(a => require(AsOfTime.supported(a.dataType),
       s"as-of time must be timestamp/date/long, got ${a.dataType.catalogString}"))
-    val maxGroup = spark.conf.getOption("graft.asof.maxBuildGroupSize")
-      .map(_.toLong).getOrElse(DefaultMaxBuildGroupSize)
     val node = AsOfJoin(lPlan, rPlan, lk, rk, lt, rt, attr(rPlan, tieBreak),
-      leftOuter, maxGroup, merge = algo == "merge")
+      leftOuter)
     ColumnBridge.ofRows(spark, node)
   }
 }

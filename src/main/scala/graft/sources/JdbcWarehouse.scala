@@ -245,14 +245,7 @@ object JdbcWarehouse {
     * the transaction opens, so no warehouse table changes.
     */
   def loadStar(url: String, star: EnergyStar): Unit = {
-    val frames = Map(
-      "dim_region" -> star.dimRegion,
-      "dim_energy_source" -> star.dimEnergySource,
-      "dim_sector" -> star.dimSector,
-      "dim_time" -> star.dimTime,
-      "fact_energy_monthly" -> star.factEnergyMonthly,
-      "fact_emissions_monthly" -> star.factEmissionsMonthly,
-      "fact_carbon_intensity" -> star.factCarbonIntensity)
+    val frames = star.tables.toMap
     val staging = DimTables.map { case (t, _, _, colTypes) => (t, colTypes) } ++
       FactTables.map { case (t, _, _) => (t, None) }
     FrameMemo.inParallel("jdbc-staging")(staging.map { case (t, colTypes) => () =>

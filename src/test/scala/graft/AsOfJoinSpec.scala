@@ -3,35 +3,58 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.AsOf
 
-/** The custom AsOfJoinExec vs the composed join+window formulation:
+/** The custom AsOfMergeJoinExec vs the composed join+window formulation:
   * identical results on real data, plus the edge cases (ties, no match,
   * null times) pinned on handcrafted frames.
   */
-class AsOfJoinSpec extends AnyFunSuite {
+class AsOfJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  test("custom operator matches the composed join+window on testdata") {
+  /** The exec and the composed join + row_number form on sf0.001 events
+    * against customers' orders; `outer` runs both as a left-outer join.
+    */
+  private def checkAgainstComposed(outer: Boolean): Unit = {
     val d = "/root/testdata/sf0.001"
     val e = Tables.events(spark, d).select("event_id", "user_id", "ts")
     val o = Tables.orders(spark, d)
       .select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-    val custom = AsOf.join(spark, e, o,
-        Seq("user_id"), Seq("o_custkey"), "ts", "o_orderdate", "o_orderkey")
+    // every sf0.001 event has an earlier order, so the left-outer case
+    // drops a third of the customers' orders to leave events unmatched
+    val r = if (outer) o.filter(col("o_custkey") % 3 =!= 0) else o
+    val custom = AsOf.join(spark, e, r, Seq("user_id"), Seq("o_custkey"),
+        "ts", "o_orderdate", "o_orderkey", leftOuter = outer)
       .select("event_id", "o_orderkey", "o_totalprice")
     val w = Window.partitionBy("event_id")
       .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-    val composed = e.join(o, e("user_id") === o("o_custkey") &&
-        o("o_orderdate") <= e("ts"))
+    val latest = e.join(r, e("user_id") === r("o_custkey") &&
+        r("o_orderdate") <= e("ts"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select("event_id", "o_orderkey", "o_totalprice")
+    // left outer: the composed rn = 1 rows left-joined back onto events
+    val composed =
+      if (outer) e.select("event_id").join(latest, Seq("event_id"), "left")
+      else latest
     assert(custom.count() > 0)
-    assert(custom.exceptAll(composed).isEmpty && composed.exceptAll(custom).isEmpty)
+    if (outer) assert(custom.filter(col("o_orderkey").isNull).count() > 0,
+      "degenerate: no unmatched events in the left-outer case")
+    assert(custom.exceptAll(composed).isEmpty && composed.exceptAll(custom).isEmpty,
+      s"exec/composed divergence (outer=$outer)")
+  }
+
+  test("custom operator matches the composed join+window on testdata") {
+    checkAgainstComposed(outer = false)
+  }
+
+  test("left-outer custom operator matches the composed join+window on testdata") {
+    checkAgainstComposed(outer = true)
   }
 
   test("latest-at-or-before wins; equal times break by max tiebreak") {
@@ -99,65 +122,23 @@ class AsOfJoinSpec extends AnyFunSuite {
     assert(inner.toSeq == Seq("hit"))
   }
 
-  test("build-side group guard fails fast with a clear error on skewed keys") {
-    spark.conf.set("graft.asof.maxBuildGroupSize", "2")
-    try {
-      val l = Seq((1L, ts("2024-01-01 10:00:00"))).toDF("k", "t")
-      val r = Seq((1L, ts("2024-01-01 01:00:00"), 1L),
-        (1L, ts("2024-01-01 02:00:00"), 2L),
-        (1L, ts("2024-01-01 03:00:00"), 3L)).toDF("rk", "rt", "rid")
-      val err = intercept[org.apache.spark.SparkException] {
-        AsOf.join(spark, l, r, Seq("k"), Seq("rk"), "t", "rt", "rid").collect()
-      }
-      assert(err.getMessage.contains("maxBuildGroupSize") ||
-        Option(err.getCause).exists(_.getMessage.contains("maxBuildGroupSize")))
-    } finally spark.conf.unset("graft.asof.maxBuildGroupSize")
-  }
-
-  test("merge variant equals the hash variant row-for-row on testdata (inner + outer)") {
-    val d = "/root/testdata/sf0.001"
-    val e = Tables.events(spark, d).select("event_id", "user_id", "ts")
-    val o = Tables.orders(spark, d)
-      .select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-    for (outer <- Seq(false, true)) {
-      val hash = AsOf.join(spark, e, o, Seq("user_id"), Seq("o_custkey"),
-        "ts", "o_orderdate", "o_orderkey", leftOuter = outer)
-      val merge = AsOf.join(spark, e, o, Seq("user_id"), Seq("o_custkey"),
-        "ts", "o_orderdate", "o_orderkey", leftOuter = outer, algo = "merge")
-      assert(merge.count() == hash.count())
-      assert(merge.exceptAll(hash).isEmpty && hash.exceptAll(merge).isEmpty,
-        s"merge/hash divergence (outer=$outer)")
-    }
-    val p = AsOf.join(spark, e, o, Seq("user_id"), Seq("o_custkey"),
-      "ts", "o_orderdate", "o_orderkey", algo = "merge")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("AsOfMergeJoin"), s"merge exec missing:\n$p")
-  }
-
   test("merge variant streams a key group the hash guard rejects (fact-fact shape)") {
-    spark.conf.set("graft.asof.maxBuildGroupSize", "10")
-    try {
-      // ONE hot key with 1000 right rows: the hash exec's build guard
-      // trips; the merge exec carries O(1) state and must sail through
-      val l = (0 until 50)
-        .map(i => (1L, ts(f"2024-01-01 10:${i % 60}%02d:00"), i.toLong))
-        .toDF("k", "t", "lid")
-      val r = (0 until 1000)
-        .map(i => (1L, ts(f"2024-01-01 ${i / 60}%02d:${i % 60}%02d:00"), i.toLong))
-        .toDF("rk", "rt", "rid")
-      intercept[org.apache.spark.SparkException] {
-        AsOf.join(spark, l, r, Seq("k"), Seq("rk"), "t", "rt", "rid").collect()
-      }
-      val merged = AsOf.join(spark, l, r, Seq("k"), Seq("rk"), "t", "rt", "rid",
-        algo = "merge")
-        .select("lid", "rid").collect()
-        .map(x => (x.getLong(0), x.getLong(1))).toMap
-      // expected: latest rid at-or-before each left time = 60*10 + (i%60)
-      assert(merged.size == 50)
-      (0 until 50).foreach { i =>
-        assert(merged(i.toLong) == 600L + i % 60, s"lid $i -> ${merged(i.toLong)}")
-      }
-    } finally spark.conf.unset("graft.asof.maxBuildGroupSize")
+    // ONE hot key with 1000 right rows: the exec carries O(1) state per
+    // partition, so the skewed group streams through
+    val l = (0 until 50)
+      .map(i => (1L, ts(f"2024-01-01 10:${i % 60}%02d:00"), i.toLong))
+      .toDF("k", "t", "lid")
+    val r = (0 until 1000)
+      .map(i => (1L, ts(f"2024-01-01 ${i / 60}%02d:${i % 60}%02d:00"), i.toLong))
+      .toDF("rk", "rt", "rid")
+    val merged = AsOf.join(spark, l, r, Seq("k"), Seq("rk"), "t", "rt", "rid")
+      .select("lid", "rid").collect()
+      .map(x => (x.getLong(0), x.getLong(1))).toMap
+    // expected: latest rid at-or-before each left time = 60*10 + (i%60)
+    assert(merged.size == 50)
+    (0 until 50).foreach { i =>
+      assert(merged(i.toLong) == 600L + i % 60, s"lid $i -> ${merged(i.toLong)}")
+    }
   }
 
   test("merge variant pins the edge cases: ties, null keys/times, no-match") {
@@ -174,7 +155,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       (Option.empty[Long], Option(ts("2024-01-01 09:00:00")), 98L)) // null key
       .toDF("rk", "rt", "rid")
     val outer = AsOf.join(spark, l, r, Seq("k"), Seq("rk"), "t", "rt", "rid",
-      leftOuter = true, algo = "merge")
+      leftOuter = true)
       .select("tag", "rid").collect()
       .map(x => (x.getString(0), if (x.isNullAt(1)) -1L else x.getLong(1))).toMap
     assert(outer == Map("hit" -> 2L, "nulltime" -> -1L,
@@ -202,16 +183,37 @@ class AsOfJoinSpec extends AnyFunSuite {
     }
   }
 
-  test("plan uses AsOfJoinExec, not a cross join") {
+  test("plan uses AsOfMergeJoin, not a cross join") {
     val d = "/root/testdata/sf0.001"
     val e = Tables.events(spark, d).select("event_id", "user_id", "ts")
     val o = Tables.orders(spark, d)
       .select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
     val p = AsOf.join(spark, e, o, Seq("user_id"), Seq("o_custkey"),
       "ts", "o_orderdate", "o_orderkey").queryExecution.executedPlan.toString
-    assert(p.contains("AsOfJoin"), s"custom exec missing:\n$p")
+    assert(p.contains("AsOfMergeJoin"), s"custom exec missing:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"as-of fell back to a cross join:\n$p")
+  }
+
+  test("q46 and q75 each execute one AsOfMergeJoin, no cross join or window, same rows") {
+    val d = "/root/testdata/sf0.001"
+    def run(name: String): (Array[org.apache.spark.sql.Row], SparkPlan) = {
+      val df = SparkEntry.queries(name)(spark, d)
+      val rows = df.collect()
+      (rows, df.queryExecution.executedPlan)
+    }
+    val (q46, p46) = run("q46_asof_custom_op")
+    val (q75, p75) = run("q75_asof_merge_op")
+    for ((name, p) <- Seq("q46" -> p46, "q75" -> p75)) {
+      val nodes = collect(p) { case n => n.nodeName }
+      assert(nodes.count(_ == "AsOfMergeJoin") == 1,
+        s"$name: expected one AsOfMergeJoin:\n$p")
+      assert(!nodes.exists(n => n == "CartesianProduct" ||
+          n == "BroadcastNestedLoopJoin" || n == "Window"),
+        s"$name: cross join or window in the plan:\n$p")
+    }
+    assert(q46.nonEmpty)
+    assert(q46.toSeq == q75.toSeq)
   }
 
   test("left-side filters push THROUGH the as-of node to the scan") {
@@ -275,7 +277,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       "each row's as-of match at its own time must be itself")
   }
 
-  test("floating-point equi-keys are rejected loudly (hash/merge byte-equality divergence)") {
+  test("floating-point equi-keys are rejected loudly at plan time") {
     val l = Seq((0.0d, 10L, 1L)).toDF("k", "t", "id")
     val r = Seq((-0.0d, 5L, 2L)).toDF("rk", "rt", "rid")
     val err = intercept[IllegalArgumentException] {
