@@ -24,13 +24,13 @@ import graft.Tables
   *
   * Scale shape (Lloyd's on MapReduce): per iteration, assignment is a
   * NARROW pass — the k×64-long centroid model rides into the executors
-  * as literals (the q42-IVF collected-model pattern; k rows, documented
-  * legit) and each point computes k codegen'd integer fold expressions,
-  * zero exchanges; the update is ONE shuffle keyed (cluster, dim) —
-  * k·dims = 256 keys with map-side combine, so reducers see partials,
-  * never points. 3 iterations = 3 narrow passes + 3 tiny shuffles, and
-  * the quantized points are localCheckpoint'ed once (the PageRank
-  * lineage-truncation rule).
+  * as one array literal (the q42-IVF collected-model pattern; k rows,
+  * documented legit), each point folds it into a k-long distance array
+  * and takes the first minimum's id, zero exchanges; the update is ONE
+  * shuffle keyed (cluster, dim) — k·dims = 256 keys with map-side
+  * combine, so reducers see partials, never points. 3 iterations = 3
+  * narrow passes + 3 tiny shuffles, and the quantized points are
+  * localCheckpoint'ed once (the PageRank lineage-truncation rule).
   */
 object ClusterOps extends graft.QueryModule {
 
@@ -45,29 +45,34 @@ object ClusterOps extends graft.QueryModule {
       transform(col("embedding"),
         x => round(x.cast("double") * 1000.0, 0).cast("long") + Offset).as("q"))
 
-  /** Exact integer squared distance from `q` to a literal centroid. */
-  private def dist2(cv: Seq[Long]): Column =
-    aggregate(
-      zip_with(col("q"), typedLit(cv), (a, b) => (a - b) * (a - b)),
-      lit(0L), (acc, x) => acc + x)
+  /** Exact integer squared distance between two long-array columns. */
+  private def dist2(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
+
+  /** Per row, the distance from the long-array column `q` to every
+    * centroid of `cents`, in ascending-id order, as one array: the model
+    * rides in as a single array literal and one `transform` folds over
+    * it, so the expression is the same size for any k.
+    */
+  private[graft] def distances(q: Column, cents: Seq[(Int, Seq[Long])]): Column =
+    transform(typedLit(cents.sortBy(_._1).map(_._2)), cv => dist2(q, cv))
+
+  /** The centroid id at the FIRST minimum of `ds` (a [[distances]] array
+    * over the same `cents`). Entries are in ascending-id order, so ties
+    * go to the smallest id.
+    */
+  private[graft] def nearest(ds: Column, cents: Seq[(Int, Seq[Long])]): Column =
+    element_at(typedLit(cents.map(_._1).sorted),
+      array_position(ds, array_min(ds)).cast("int"))
 
   /** Assign each point to its nearest centroid (ties → smallest cluster
-    * id): distance columns first, then a when-chain in cluster order with
-    * `<=` against every later distance — narrow, codegen'd, no shuffle.
+    * id) — narrow, no shuffle. The distance array gets its own
+    * projection because the argmin reads it twice; inlined, it would be
+    * computed twice.
     */
-  private[graft] def assign(pts: DataFrame, cents: Seq[(Int, Seq[Long])]): DataFrame = {
-    val sorted = cents.sortBy(_._1)
-    val withD = pts.select(
-      col("vec_id") +: col("q") +:
-        sorted.zipWithIndex.map { case ((_, cv), i) => dist2(cv).as(s"d$i") }: _*)
-    val assignExpr = sorted.indices.init.foldRight(lit(sorted.last._1): Column) {
-      (i, rest) =>
-        val leqLater = sorted.indices.drop(i + 1)
-          .map(j => col(s"d$i") <= col(s"d$j")).reduce(_ && _)
-        when(leqLater, lit(sorted(i)._1)).otherwise(rest)
-    }
-    withD.select(col("vec_id"), col("q"), assignExpr.as("cluster"))
-  }
+  private[graft] def assign(pts: DataFrame, cents: Seq[(Int, Seq[Long])]): DataFrame =
+    pts.select(col("vec_id"), col("q"), distances(col("q"), cents).as("ds"))
+      .select(col("vec_id"), col("q"), nearest(col("ds"), cents).as("cluster"))
 
   /** One update: per-(cluster, dim) integer sums and counts; the count is
     * identical across a cluster's dims (every member contributes every

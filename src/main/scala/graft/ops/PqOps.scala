@@ -32,15 +32,19 @@ import graft.Tables
   * Scale shape: training is FUSED across subspaces — per Lloyd round,
   * one narrow pass assigns every subspace's code and one 512-key
   * map-side-combined shuffle updates every codebook (see
-  * [[trainCodebooks]]). Code ASSIGNMENT is a single narrow select
-  * computing all 8 codes as literal-centroid expressions — no join, no
-  * shuffle; at 100 TB the codebooks ride the closure (8 × 8 × 8 longs)
-  * and the corpus pays one pass. The ADC search path (estimate distance
-  * from codes alone) is spec-gated against exact brute force (PqSpec
-  * recall + own-code quantization-error rank); the code TABLE is the
-  * oracle-checked anchor (q147 — the full coarse chain, the residual
-  * derivation, and all 8 subspace chains replay in DuckDB), the
-  * composed IVF+ADC+rerank search is q148.
+  * [[trainCodebooks]]). Code ASSIGNMENT is a single narrow select: per
+  * subspace, one distance array against the codebook (carried as one
+  * array literal) and its first-minimum id — no join, no shuffle; at
+  * 100 TB the codebooks ride the closure (8 × 8 × 8 longs) and the
+  * corpus pays one pass. Every model enters the plan as DATA indexed by
+  * a fixed-size expression (array/map literals, or the per-probe ADC
+  * lookup tables q148 carries in its probe rows), never as code that
+  * grows with K, CoarseK or the probe count. The ADC search path
+  * (estimate distance from codes alone) is spec-gated against exact
+  * brute force (PqSpec recall + own-code quantization-error rank); the
+  * code TABLE is the oracle-checked anchor (q147 — the full coarse
+  * chain, the residual derivation, and all 8 subspace chains replay in
+  * DuckDB), the composed IVF+ADC+rerank search is q148.
   */
 object PqOps extends graft.QueryModule {
 
@@ -66,22 +70,10 @@ object PqOps extends graft.QueryModule {
   // (Shortlist=40 reranked vs ~90 exact-scanned in q42's probed cells).
   private[graft] val NProbe = 3
 
-  /** Exact integer squared distance from a `q` sub-vector column to a
-    * literal centroid (the q132 expression shape).
-    */
-  private def dist2(qcol: Column, cv: Seq[Long]): Column =
-    aggregate(
-      zip_with(qcol, typedLit(cv), (a, b) => (a - b) * (a - b)),
-      lit(0L), (acc, x) => acc + x)
-
-  private def subSlice(s: Int): Column =
-    slice(col("q"), s * SubDim + 1, SubDim)
-
   /** (keep..., c0..c7): all 8 codes against the given codebooks in two
-    * chained NARROW projections — every per-centroid distance named
-    * once, then the 8 argmin when-chains over the named columns. (An
-    * inlined draft duplicated each dist2 subtree O(K²) times per code
-    * column and spent most of its wall-clock in Catalyst analysis.)
+    * chained NARROW projections — each subspace's distance array named
+    * once (q132's [[ClusterOps.distances]] over the sub-vector), then
+    * its first-minimum id ([[ClusterOps.nearest]], ties → smaller id).
     * `keep` columns (vec_id, the residual vector for the training loop,
     * the coarse cell for the index) pass through untouched; include "q"
     * in `keep` if a later stage still needs the vector.
@@ -89,30 +81,21 @@ object PqOps extends graft.QueryModule {
   private def codesFor(pts: DataFrame, books: Seq[Seq[(Int, Seq[Long])]],
                        keep: Seq[String]): DataFrame = {
     val keepCols = keep.map(col)
-    val distCols = for {
-      (cents, sub) <- books.zipWithIndex
-      (c, cv) <- cents.sortBy(_._1)
-    } yield dist2(subSlice(sub), cv).as(s"d_${sub}_$c")
-    val withD = pts.select(keepCols ++ distCols: _*)
-    val codeCols = books.zipWithIndex.map { case (cents, sub) =>
-      val ids = cents.map(_._1).sorted
-      val chain = ids.init.zipWithIndex.foldRight(lit(ids.last): Column) {
-        case ((c, i), rest) =>
-          val leqLater = ids.drop(i + 1)
-            .map(cj => col(s"d_${sub}_$c") <= col(s"d_${sub}_$cj"))
-            .reduce(_ && _)
-          when(leqLater, lit(c)).otherwise(rest)
-      }
-      chain.as(s"c$sub")
+    val distCols = books.zipWithIndex.map { case (cents, sub) =>
+      ClusterOps.distances(slice(col("q"), sub * SubDim + 1, SubDim), cents)
+        .as(s"d$sub")
     }
-    withD.select(keepCols ++ codeCols: _*)
+    val codeCols = books.zipWithIndex.map { case (cents, sub) =>
+      ClusterOps.nearest(col(s"d$sub"), cents).as(s"c$sub")
+    }
+    pts.select(keepCols ++ distCols: _*).select(keepCols ++ codeCols: _*)
   }
 
   /** The coarse quantizer: [[CoarseIters]] exact-integer Lloyd rounds
     * over the FULL 64-dim quantized vectors (q132's assign/update
     * machinery, seeded from the [[CoarseK]] smallest vec_ids), returning
     * the final centroids as driver model state — CoarseK × 64 longs.
-    * Per round: one narrow literal-centroid assignment pass + one
+    * Per round: one narrow assignment pass ([[ClusterOps.assign]]) + one
     * (cluster, dim) map-side-combined shuffle; the corpus never pays
     * more than [[CoarseIters]] + 1 passes total (the +1 is the final
     * residual assignment).
@@ -135,19 +118,15 @@ object PqOps extends graft.QueryModule {
 
   /** (vec_id, coarse, q) with q = quantized vector − its FINAL coarse
     * centroid, component-wise exact longs (possibly negative). One
-    * narrow pass: the assignment when-chain and the centroid-array
-    * when-chain are both literal folds over the collected model.
+    * narrow pass: [[ClusterOps.assign]] picks the cell, and the cell's
+    * centroid is one lookup in a cell → centroid map literal.
     */
   private[graft] def residualsOf(pts: DataFrame,
-                                 coarse: Seq[(Int, Seq[Long])]): DataFrame = {
-    val sorted = coarse.sortBy(_._1)
-    val centArr = sorted.init.foldRight(typedLit(sorted.last._2): Column) {
-      case ((c, cv), rest) => when(col("cluster") === c, typedLit(cv)).otherwise(rest)
-    }
+                                 coarse: Seq[(Int, Seq[Long])]): DataFrame =
     ClusterOps.assign(pts, coarse)
       .select(col("vec_id"), col("cluster").as("coarse"),
-        zip_with(col("q"), centArr, (a, b) => a - b).as("q"))
-  }
+        zip_with(col("q"), element_at(typedLit(coarse.toMap), col("cluster")),
+          (a, b) => a - b).as("q"))
 
   /** Train ALL [[SubSpaces]] codebooks simultaneously over the residual
     * table: per Lloyd round, ONE narrow assignment pass produces every
@@ -262,66 +241,49 @@ object PqOps extends graft.QueryModule {
   def pqCodes(s: SparkSession, d: String): DataFrame =
     residCodes(s, d).orderBy("vec_id")
 
+  /** The ADC lookup table for one query RESIDUAL (query − a cell's
+    * centroid): per subspace, codebook centroid id → exact squared
+    * distance from the residual's sub-vector. Driver math over the
+    * collected model (8 × K longs).
+    */
+  private def lutOf(qres: Seq[Long],
+                    books: Seq[Seq[(Int, Seq[Long])]]): Seq[Map[Int, Long]] =
+    books.zipWithIndex.map { case (cents, s) =>
+      val qSub = qres.slice(s * SubDim, (s + 1) * SubDim)
+      cents.map { case (c, cv) =>
+        c -> qSub.zip(cv).map { case (a, b) => (a - b) * (a - b) }.sum
+      }.toMap
+    }
+
+  /** The ADC estimate of a coded row against the [[lutOf]] table in its
+    * `lut` column: Σ over subspaces of `lut[s][c_s]` — 8 lookups, the
+    * same expression for any K, cell count or probe count.
+    */
+  private def adc(lut: Column): Column =
+    (0 until SubSpaces)
+      .map(s => element_at(element_at(lut, s + 1), col(s"c$s")))
+      .reduce(_ + _)
+
   /** ADC (asymmetric distance computation) against the FULL corpus for
     * the spec's ranking gates: estimate ||query − x||² for every coded
     * vector WITHOUT touching x — sum, over subspaces, of the exact
     * distance from the query's RESIDUAL sub-vector (query − x's cell
-    * centroid) to x's assigned codebook centroid. The LUT therefore
-    * depends on the candidate's cell: the outer when-chain keys on the
-    * `coarse` column (CoarseK branches), the inner chains on the code
-    * columns — all integer literals, codegen-friendly. The production
-    * search (q148) only ever scores PROBED cells ([[adcForProbes]]);
-    * this full-corpus form is the spec anchor.
+    * centroid) to x's assigned codebook centroid. The table therefore
+    * depends on the candidate's cell: one cell → [[lutOf]] map literal,
+    * looked up by the `coarse` column. The production search (q148)
+    * only ever scores PROBED cells ([[ivfPqCandidates]]); this
+    * full-corpus form is the spec anchor.
     */
   private[graft] def adcDistances(codes: DataFrame,
                                   coarse: Seq[(Int, Seq[Long])],
                                   books: Seq[Seq[(Int, Seq[Long])]],
                                   query: Seq[Long]): DataFrame = {
-    val est = coarse.sortBy(_._1).map { case (cell, cv) =>
-      val qres = query.zip(cv).map { case (a, b) => a - b }
-      (cell, adcEstimate(qres, books))
-    }.foldRight(raise_error(concat(lit("adc: unmodeled coarse cell "),
-      col("coarse").cast("string"))).cast("long"): Column) {
-      case ((cell, e), rest) => when(col("coarse") === cell, e).otherwise(rest)
-    }
-    codes.select(col("vec_id"), est.as("adc_d2"))
+    val lutByCell = coarse.map { case (cell, cv) =>
+      cell -> lutOf(query.zip(cv).map { case (a, b) => a - b }, books)
+    }.toMap
+    codes.select(col("vec_id"),
+      adc(element_at(typedLit(lutByCell), col("coarse"))).as("adc_d2"))
   }
-
-  /** Σ over subspaces of the literal LUT lookup for one (query-residual,
-    * codebooks) pair — the inner expression both ADC forms share.
-    */
-  private def adcEstimate(qres: Seq[Long],
-                          books: Seq[Seq[(Int, Seq[Long])]]): Column =
-    (0 until SubSpaces).map { s =>
-      val qSub = qres.slice(s * SubDim, (s + 1) * SubDim)
-      val lut = books(s).sortBy(_._1).map { case (c, cv) =>
-        (c, qSub.zip(cv).map { case (a, b) => (a - b) * (a - b) }.sum)
-      }
-      lut.init.foldRight(lit(lut.last._2): Column) { case ((c, v), rest) =>
-        when(col(s"c$s") === c, lit(v)).otherwise(rest)
-      }
-    }.reduce(_ + _)
-
-  /** Per-candidate ADC estimate for the probed (query, cell) pairs:
-    * outer when-chain on (query_id, coarse), inner chain on each code
-    * column against that pair's precomputed 8×K lookup table (built from
-    * the query's residual wrt the PROBED cell's centroid) — all
-    * literals, flat integer whens, one codegen-friendly expression over
-    * the code columns. The fold default is raise_error, not a sentinel:
-    * q148 builds its probe frame FROM this same `probes` list, so a
-    * fallthrough means the join and the LUT drifted — that must fail
-    * loudly, never rank a candidate at infinity (the r14 advice).
-    */
-  private[graft] def adcForProbes(probes: Seq[(Long, Int, Seq[Long])],
-                                  books: Seq[Seq[(Int, Seq[Long])]]): Column =
-    probes.map { case (qid, cell, qres) => (qid, cell, adcEstimate(qres, books)) }
-      .foldRight(raise_error(concat(lit("adc: unprobed (query, cell) pair "),
-        col("query_id").cast("string"), lit(","),
-        col("coarse").cast("string"))).cast("long"): Column) {
-        case ((qid, cell, e), rest) =>
-          when(col("query_id") === qid && col("coarse") === cell, e)
-            .otherwise(rest)
-      }
 
   /** How many ADC-ranked candidates survive to the exact rerank — the
     * rerank (raw-vector read) budget per query. 40 of ~90 probed
@@ -337,16 +299,10 @@ object PqOps extends graft.QueryModule {
     * query). This is the standard residual IVF-ADC layout. Rows-only —
     * iterative k-means + code-ranked search isn't portable SQL; q117's
     * report gains a q148 recall row and PqSpec gates the shortlist
-    * behavior. Scale: probing is DRIVER math (10 queries × CoarseK cell
-    * distances on already-collected model state), the probe frame
-    * broadcasts, and the corpus side reads only (cell, codes) — the
-    * vectors of the ~Shortlist survivors per query are the only raw
-    * reads.
-    */
-  /** The composed search's top-5 result frame, FrameMemo'd like the
-    * index underneath it (the r18 q117 contract: method result frames
-    * are stored evaluation artifacts — built once in shared_build,
-    * presented by q148, scored by q117's joins).
+    * behavior. The top-5 result frame is FrameMemo'd like the index
+    * underneath it (the r18 q117 contract: method result frames are
+    * stored evaluation artifacts — built once in shared_build, presented
+    * by q148, scored by q117's joins).
     */
   def ivfPqSearch(s: SparkSession, d: String): DataFrame =
     FrameMemo.cached(s, d, "ivfPqTop5")(buildIvfPqSearch(s, d))
@@ -354,6 +310,28 @@ object PqOps extends graft.QueryModule {
   private def buildIvfPqSearch(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.VectorFunctions.cosine
+    val wAdc = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
+    val w5 = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
+    ivfPqCandidates(s, d)
+      .withColumn("arank", row_number().over(wAdc))
+      .filter(col("arank") <= Shortlist)
+      .withColumn("cos", cosine(col("qv"), col("v")))
+      .withColumn("rank", row_number().over(w5).cast("int"))
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
+        round(col("cos"), 4).as("cos_r"))
+  }
+
+  /** q148's probed candidates, ADC-scored: one row per (anchor query,
+    * coded vector in a probed cell), the query itself excluded, with the
+    * query vector `qv`, the candidate's `v` and codes, and `adc`.
+    * Scale: probing is DRIVER math (10 queries × CoarseK cell distances
+    * on already-collected model state), the probe frame broadcasts with
+    * each probe's [[lutOf]] table in its `lut` column, and the corpus
+    * side reads only (cell, codes) — the vectors of the ~Shortlist
+    * survivors per query are the only raw reads.
+    */
+  private[graft] def ivfPqCandidates(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val (coarse, books) = modelOf(s, d)
@@ -367,36 +345,27 @@ object PqOps extends graft.QueryModule {
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toSeq // 10 rows: model state
     // probe selection is pure driver math over collected model state:
     // per query, the NProbe nearest cells by exact integer distance
-    // (ties → smaller cell id, the assign convention). The probe FRAME
-    // and the ADC LUTs both derive from this one list, so they cannot
-    // drift (adcForProbes raises on any fallthrough).
-    val probes: Seq[(Long, Int, Seq[Long])] = qQuant.flatMap { case (qid, qv) =>
+    // (ties → smaller cell id, the assign convention), each with the
+    // LUT of the query's residual wrt that cell — the table sits in the
+    // row it scores, so the join cannot pair a candidate with another
+    // probe's table
+    val probes = qQuant.flatMap { case (qid, qv) =>
       coarse.map { case (cell, cv) =>
-        (qv.zip(cv).map { case (a, b) => (a - b) * (a - b) }.sum, cell)
-      }.sorted.take(NProbe).map { case (_, cell) =>
-        (qid, cell, qv.zip(coarse.find(_._1 == cell).get._2)
-          .map { case (a, b) => a - b })
+        val qres = qv.zip(cv).map { case (a, b) => a - b }
+        (qres.map(x => x * x).sum, cell, qres)
+      }.sortBy { case (d2, cell, _) => (d2, cell) }.take(NProbe).map {
+        case (_, cell, qres) => (qid, cell, lutOf(qres, books))
       }
     }
     import s.implicits._
-    val probeFrame = probes.map { case (qid, cell, _) => (qid, cell) }
-      .toDF("query_id", "coarse")
-    val q = probeFrame.join(
+    val q = probes.toDF("query_id", "coarse", "lut").join(
       e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("qv")),
       Seq("query_id"))
-    val wAdc = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-    val w5 = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
     broadcast(q).join(indexed, Seq("coarse"))
       .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("adc", adcForProbes(probes, books))
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= Shortlist)
-      .withColumn("cos", cosine(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(w5).cast("int"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        round(col("cos"), 4).as("cos_r"))
+      .withColumn("adc", adc(col("lut")))
+      .drop("lut")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -40,6 +40,19 @@ class ClusterSpec extends AnyFunSuite {
     assert(a == Map(1L -> 0, 2L -> 1, 3L -> 0))
   }
 
+  test("assignment carries the model as data: no CASE WHEN, one expression size for any k") {
+    import org.apache.spark.sql.catalyst.expressions.CaseWhen
+    val pts = ClusterOps.quantized(vecDf(Seq((1L, Seq(0.1, 0.0)))))
+    def nodes(k: Int): Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+      val cents = (0 until k).map(i => i -> Seq(1024L + i, 1024L))
+      val a = ClusterOps.assign(pts, cents)
+      Seq("ds", "cluster").flatMap(n => SparkTestSession.aliased(a, n).collect { case e => e })
+    }
+    assert(!nodes(4).exists(_.isInstanceOf[CaseWhen]), "assign must not build a CASE WHEN chain")
+    assert(nodes(2).size == nodes(16).size,
+      "the assignment expression must not grow with the centroid count")
+  }
+
   test("update: centroids are exact integer floor-averages of members") {
     val pts = ClusterOps.quantized(vecDf(Seq(
       (1L, Seq(0.001, 0.002)), (2L, Seq(0.002, 0.005)))))

@@ -214,12 +214,34 @@ class FrameMemoSpec extends AnyFunSuite {
   test("prebuild builds every declared shared artifact without streaming or touching the shuffle width") {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
     val started = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
       override def onQueryProgress(e: QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
+    // a plan Janino cannot compile still runs (interpreted, with
+    // whole-stage codegen off for that stage), so the fallback shows
+    // only in the log: CodeGenerator's ERROR and WholeStageCodegenExec's
+    // WARN are the two lines it leaves
+    val fallbacks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("codegen-fallback-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (msg.contains("Failed to compile the generated Java code") ||
+            msg.contains("Whole-stage codegen disabled"))
+          fallbacks.add(s"${e.getLoggerName}: ${msg.take(200)}")
+      }
+    }
+    val logs = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    appender.start()
+    logs.getConfiguration.getRootLogger.addAppender(appender, null, null)
+    logs.updateLoggers()
     val width = spark.conf.get("spark.sql.shuffle.partitions")
     spark.streams.addListener(listener)
     val t0 = System.nanoTime()
@@ -228,6 +250,9 @@ class FrameMemoSpec extends AnyFunSuite {
       finally {
         org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
         spark.streams.removeListener(listener)
+        logs.getConfiguration.getRootLogger.removeAppender(appender.getName)
+        logs.updateLoggers()
+        appender.stop()
       }
     info(f"prebuild of ${SparkEntry.sharedArtifacts.size} artifacts: ${(System.nanoTime() - t0) / 1e9}%.1f s")
     built match {
@@ -235,6 +260,8 @@ class FrameMemoSpec extends AnyFunSuite {
       case Left(failed) => fail(s"artifacts failed: ${failed.mkString(", ")}")
     }
     assert(started.get == 0, "a shared artifact started a streaming query")
+    assert(fallbacks.isEmpty,
+      s"shared artifacts fell back from codegen:\n${fallbacks.toArray.mkString("\n")}")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == width,
       "a shared artifact changed the session's shuffle width")
   }

@@ -81,6 +81,49 @@ class PqSpec extends AnyFunSuite {
       s"own quantization error should sit in the bottom decile, got rank $below")
   }
 
+  test("ADC tables are data: no CASE WHEN, an expression size independent of the probes") {
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, RaiseError}
+    val (coarse, books) = PqOps.modelOf(spark, d)
+    val codes = SparkEntry.queries("q147_pq_codes")(spark, d)
+    val exprs = Seq(
+      "q148 adc" -> SparkTestSession.aliased(PqOps.ivfPqCandidates(spark, d), "adc"),
+      "adcDistances" -> SparkTestSession.aliased(
+        PqOps.adcDistances(codes, coarse, books, pts(pts.keys.min).toSeq), "adc_d2"))
+    exprs.foreach { case (name, e) =>
+      val nodes = e.collect { case x => x }
+      assert(!nodes.exists(n => n.isInstanceOf[CaseWhen] || n.isInstanceOf[RaiseError]),
+        s"$name must look its table up, not branch over it")
+      // a few nodes per subspace lookup plus their sum: bounded by the
+      // subspace count alone, whatever K, CoarseK or the 10 × NProbe
+      // probe list hold
+      assert(nodes.size <= 10 * PqOps.SubSpaces, s"$name has ${nodes.size} nodes")
+    }
+  }
+
+  test("q148 ADC: every probed candidate's adc is the exact residual-to-codeword distance") {
+    val (coarse, books) = PqOps.modelOf(spark, d)
+    val cents = coarse.toMap
+    val codeCols = (0 until PqOps.SubSpaces).map(s => col(s"c$s"))
+    val rows = PqOps.ivfPqCandidates(spark, d)
+      .select(Seq(col("query_id"), col("coarse"), col("vec_id"), col("adc")) ++ codeCols: _*)
+      .collect()
+    assert(rows.nonEmpty)
+    rows.groupBy(_.getLong(0)).foreach { case (qid, rs) =>
+      val cells = rs.map(_.getInt(1)).distinct.length
+      assert(cells >= 1 && cells <= PqOps.NProbe, s"query $qid probed $cells cells")
+    }
+    rows.foreach { r =>
+      val qres = pts(r.getLong(0)).toSeq.zip(cents(r.getInt(1))).map { case (a, b) => a - b }
+      val expected = (0 until PqOps.SubSpaces).map { s =>
+        val codeword = books(s).toMap.apply(r.getInt(4 + s))
+        qres.slice(s * PqOps.SubDim, (s + 1) * PqOps.SubDim).zip(codeword)
+          .map { case (a, b) => (a - b) * (a - b) }.sum
+      }.sum
+      assert(r.getLong(3) == expected,
+        s"query ${r.getLong(0)}, vec ${r.getLong(2)}: adc ${r.getLong(3)} != $expected")
+    }
+  }
+
   test("model memo: immutable-root dirs serve ONE model instance (FrameMemo contract)") {
     // pin that a memoizable dir returns the identical model object (not
     // merely an equal retrain), so a future eviction/keying change that

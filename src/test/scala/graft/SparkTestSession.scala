@@ -40,4 +40,13 @@ object SparkTestSession {
       (out, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** The expression `df`'s analyzed plan binds to the output name `name`. */
+  def aliased(df: org.apache.spark.sql.DataFrame, name: String)
+      : org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    df.queryExecution.analyzed.flatMap(_.expressions)
+      .flatMap(_.collect { case a: Alias if a.name == name => a.child })
+      .head
+  }
 }
