@@ -28,12 +28,6 @@ object VectorFunctions {
   def cosine(a: Column, b: Column): Column =
     column(CosineSimilarity(expression(a), expression(b)))
 
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v))
-
   /** HOF reference implementations (interpreted; for differential tests). */
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.ops.StarSchema.{orderRegion, sumMoney, sumMoney6}
+import graft.ops.StarSchema.{orderRegion, sumMoney}
 
 /** Analytics beyond the reference's own surface (SURVEY §2.6/§2.7 lists
   * these as absent-from-reference but engine-relevant): multi-aggregate

@@ -103,12 +103,9 @@ object CorpusReports extends graft.QueryModule {
 
     // Per-source document cap (the C4/RefinedWeb "no source dominates"
     // rule): keep the SourceCap docs with the smallest (md5, doc_id)
-    // per source, report kept/dropped per source. The registered form
-    // is the window rank — exact and oracle-portable; the per-source
-    // sort it implies is the scale bottleneck, so the histogram-
-    // threshold form in [[sourceCapsScalable]] computes the SAME kept
-    // set with the only sort confined to one 1/256th hash bin
-    // (CorpusReportsSpec pins the equivalence).
+    // per source, report kept/dropped per source. The window rank is
+    // exact and oracle-portable; the per-source sort it implies is the
+    // part that grows with the largest source.
     "q85_source_caps" -> ((s, d) => {
       val ranked = rankedBySource(s, d)
       ranked.groupBy("source")
@@ -192,50 +189,6 @@ object CorpusReports extends graft.QueryModule {
       .withColumn("rk", row_number().over(
         Window.partitionBy("source").orderBy("h", "doc_id")))
   }
-
-  /** The kept set of q85 via histogram-threshold selection — no
-    * per-source sort. Phase 1: one aggregate counts docs per (source,
-    * 1-byte hash prefix bin); a running sum over the 256 bins finds
-    * each source's boundary bin (where the cap falls). Phase 2: docs in
-    * bins BELOW the boundary are kept outright (narrow broadcast-join
-    * filter); only the boundary bin's docs — ~1/256th of the source —
-    * are ranked to fill the remaining slots. At 100 TB this replaces a
-    * full per-source sort with one tiny aggregate plus a sort of
-    * cap-sized spillover.
-    */
-  private[graft] def sourceCapsScalableKept(s: SparkSession, d: String): DataFrame = {
-    val h = md5(col("doc_id").cast("string").cast("binary"))
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("source"), h.as("h"),
-        conv(substring(h, 1, 2), 16, 10).cast("int").as("bin"))
-    val hist = docs.groupBy("source", "bin").agg(count(lit(1)).as("cnt"))
-    val cum = hist.withColumn("running",
-      sum(col("cnt")).over(Window.partitionBy("source").orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, 0)))
-    // per source: the first bin whose running count reaches the cap,
-    // and how many slots remain for it after the bins below it
-    val boundary = cum.filter(col("running") >= SourceCap)
-      .groupBy("source").agg(min(col("bin")).as("b_bin"))
-      .join(cum, Seq("source"))
-      .filter(col("bin") === col("b_bin"))
-      .select(col("source"), col("b_bin"),
-        (lit(SourceCap) - (col("running") - col("cnt"))).as("slots"))
-    // sources smaller than the cap have no boundary bin: keep everything
-    val joined = docs.join(broadcast(boundary), Seq("source"), "left_outer")
-    val below = joined.filter(col("b_bin").isNull || col("bin") < col("b_bin"))
-      .select("doc_id", "source")
-    val atBoundary = joined.filter(col("bin") === col("b_bin"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("source").orderBy("h", "doc_id")))
-      .filter(col("rk") <= col("slots"))
-      .select("doc_id", "source")
-    below.unionByName(atBoundary)
-  }
-
-  /** Kept set of the q85 window form — differential twin for the spec. */
-  private[graft] def sourceCapsWindowKept(s: SparkSession, d: String): DataFrame =
-    rankedBySource(s, d).filter(col("rk") <= SourceCap)
-      .select("doc_id", "source")
 
   val oracleSql: Map[String, String] = Map(
     "q83_doc_chunks" ->

@@ -7,7 +7,7 @@ import graft.functions.TextFunctions.tokens
 
 /** Count-min sketch over the corpus token stream (Cormode &
   * Muthukrishnan 2005) — completes the mergeable-sketch family next to
-  * HLL distinct counts (q40/q131) and Misra-Gries heavy hitters (q73):
+  * HLL distinct counts (q40) and Misra-Gries heavy hitters (q73):
   * a [[D]]×[[W]] integer counter matrix answering point frequency
   * queries with the one-sided guarantee estimate ≥ exact and
   * overcount ≤ εN w.h.p. — the structure streaming token-frequency

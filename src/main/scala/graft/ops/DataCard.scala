@@ -26,8 +26,7 @@ import graft.functions.TextFunctions.{qualityScore, tokens}
   * the q131 narrow-pair discipline, which exists precisely so a
   * multi-distinct aggregate never plans the row-multiplying Expand),
   * finishing at the collected model edge: the card is one row of
-  * scalars. Distinct counts are exact by design — the HLL twin for
-  * approximate profiling at ingest is q131.
+  * scalars. Distinct counts are exact by design, as in q131's profile.
   */
 object DataCard extends graft.QueryModule {
 

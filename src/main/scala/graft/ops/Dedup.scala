@@ -65,9 +65,9 @@ object Dedup extends graft.QueryModule {
       xxhash64(lit(b), sig(4 * b), sig(4 * b + 1),
         sig(4 * b + 2), sig(4 * b + 3))): _*)
 
-  /** Df cap shared by the exact-pair family (q26/q47/q108/q218's
-    * maxDocFreq default) and PROFILED by q219: shingles in more docs
-    * than this are stopword-like and create quadratic fanout.
+  /** Df cap shared by the exact-pair family (q26/q47/q108/q218) and
+    * PROFILED by q219: shingles in more docs than this are stopword-like
+    * and create quadratic fanout.
     */
   private[graft] val DefaultMaxDocFreq = 100
 
@@ -79,21 +79,21 @@ object Dedup extends graft.QueryModule {
       .withColumn("n_sh", size(col("sh")))
       .filter(col("n_sh") > 0)
 
-  /** Exact Jaccard pairs via exploded shingle join. `maxDocFreq` drops
-    * shingles present in more than N docs (stopword-like shingles create
-    * quadratic fan-out at corpus scale; real pipelines always cap).
+  /** Exact Jaccard pairs via exploded shingle join. Shingles present in
+    * more than [[DefaultMaxDocFreq]] docs are dropped (stopword-like
+    * shingles create quadratic fan-out at corpus scale; real pipelines
+    * always cap).
     */
-  def jaccardPairs(s: SparkSession, d: String, threshold: Double,
-                   maxDocFreq: Int = DefaultMaxDocFreq): DataFrame =
+  def jaccardPairs(s: SparkSession, d: String, threshold: Double): DataFrame =
     // q26 registers these pairs and q47 feeds them to connected
     // components: one posting build + self-join per (dir, params), not
     // one per consumer (FrameMemo; the q43/q90/q93 edge-list discipline)
-    FrameMemo.cached(s, d, s"jaccard:$threshold:$maxDocFreq") {
-      buildJaccardPairs(s, d, threshold, maxDocFreq)
+    FrameMemo.cached(s, d, s"jaccard:$threshold") {
+      buildJaccardPairs(s, d, threshold)
     }
 
-  private def buildJaccardPairs(s: SparkSession, d: String, threshold: Double,
-                                maxDocFreq: Int): DataFrame = {
+  private def buildJaccardPairs(s: SparkSession, d: String,
+                                threshold: Double): DataFrame = {
     // The ONLY materialized state is the hashed posting list — 24-byte
     // rows of (doc_id, lang, 8-byte shingle hash); same pairs as joining
     // the strings (64-bit collision odds ~n²/2⁶⁴), and the string shingle
@@ -106,7 +106,7 @@ object Dedup extends graft.QueryModule {
       .select(col("doc_id"), col("lang"), explode(col("sh")).as("shingle"))
       .select(col("doc_id"), col("lang"), xxhash64(col("shingle")).as("shingle")))
     val rare = posting.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDocFreq)
+      .filter(col("df") <= DefaultMaxDocFreq)
     val filtered = posting.join(rare.select("shingle"), Seq("shingle"))
     val inter = filtered.as("a")
       .join(filtered.as("b"),
@@ -148,8 +148,7 @@ object Dedup extends graft.QueryModule {
     * scale.)
     */
   private[graft] def prefixJaccardFrames(s: SparkSession, d: String,
-      tNum: Int, tDen: Int, maxDocFreq: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      tNum: Int, tDen: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     // scratch, not bare localCheckpoint (r21): inside the q108 stored-
     // artifact build this intermediate is released once the pair frame
     // materializes; outside a cached build it is a plain localCheckpoint
@@ -158,7 +157,7 @@ object Dedup extends graft.QueryModule {
       .select(col("doc_id"), col("lang"), xxhash64(col("shingle")).as("shingle")))
     val docFreq = posting.groupBy("shingle").agg(count(lit(1)).as("df"))
     val filtered = posting
-      .join(docFreq.filter(col("df") <= maxDocFreq), Seq("shingle"))
+      .join(docFreq.filter(col("df") <= DefaultMaxDocFreq), Seq("shingle"))
     // J >= t forces |A'∩B'| >= ceil(t/(1+t)·n'_X) =: beta_X for EACH
     // side (Chaudhuri et al. SSJoin / Bayardo et al. All-Pairs, WWW'07),
     // so a qualifying pair must share a token within both docs' first
@@ -218,10 +217,9 @@ object Dedup extends graft.QueryModule {
     FrameMemo.cached(s, d, s"prefixJaccard:$tNum:$tDen")(
       prefixJaccardPairs(s, d, tNum, tDen))
 
-  def prefixJaccardPairs(s: SparkSession, d: String, tNum: Int, tDen: Int,
-                         maxDocFreq: Int = DefaultMaxDocFreq): DataFrame = {
-    val (_, _, docToks, candidates) =
-      prefixJaccardFrames(s, d, tNum, tDen, maxDocFreq)
+  def prefixJaccardPairs(s: SparkSession, d: String, tNum: Int,
+                         tDen: Int): DataFrame = {
+    val (_, _, docToks, candidates) = prefixJaccardFrames(s, d, tNum, tDen)
     // verification reuses docToks' already-built arrays (exchange reuse
     // materializes the groupBy once across the four consumers); the
     // candidate side is the small one, so AQE broadcasts it and the

@@ -93,17 +93,11 @@ object Dsir extends graft.QueryModule {
     * score's micro-nat grain, so key-desc sampling is exp(score/10⁶)
     * = w proportional, and the key is an exact integer SUM.
     */
-  def gumbelResample(s: SparkSession, d: String): DataFrame =
-    gumbelTop(importanceScores(s, d))
-
-  private[graft] def gumbelResampleOn(docs: DataFrame): DataFrame =
-    gumbelTop(importanceScoresOn(docs))
-
-  private def gumbelTop(scores: DataFrame): DataFrame = {
+  def gumbelResample(s: SparkSession, d: String): DataFrame = {
     val u = (pmod(conv(substring(md5(col("doc_id").cast("string")
       .cast("binary")), 1, 8), 16, 10).cast("long"), lit(1L << 20))
       .cast("double") + 0.5) / (1L << 20).toDouble
-    scores
+    importanceScores(s, d)
       .withColumn("gkey",
         col("dsir_score") + round(-log(-log(u)) * Grain, 0).cast("long"))
       .orderBy(col("gkey").desc, col("doc_id"))

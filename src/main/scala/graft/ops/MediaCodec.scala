@@ -33,19 +33,6 @@ object MediaCodec {
     case _ => byteStats(payload)
   }
 
-  /** Sniff the container format from magic bytes — the ingest path has
-    * file bytes but no trusted mime column. Matches exactly what the
-    * decoders validate: 'BM' (BMP), 'P6' + whitespace (PPM),
-    * 'RIFF….WAVE' (WAV); anything else is an opaque blob.
-    */
-  def sniffMime(p: Array[Byte]): String =
-    if (p.length >= 2 && p(0) == 'B' && p(1) == 'M') BmpMime
-    else if (p.length >= 3 && p(0) == 'P' && p(1) == '6' &&
-      (p(2) == ' ' || p(2) == '\t' || p(2) == '\n' || p(2) == '\r')) PpmMime
-    else if (p.length >= 12 && ascii(p, 0, 4) == "RIFF" &&
-      ascii(p, 8, 4) == "WAVE") WavMime
-    else "application/octet-stream"
-
   private def byteAt(content: Array[Byte], i: Int): Byte =
     if (i < content.length) content(i) else 0
 

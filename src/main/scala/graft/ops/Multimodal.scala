@@ -74,30 +74,6 @@ object Multimodal extends graft.QueryModule {
       }
   }
 
-  /** Object-store ingest: scan a directory of media FILES through
-    * Spark's `binaryFile` source into the same [[MediaRow]] frame the
-    * decode/thumbnail stages consume — the entry point a production
-    * media pipeline actually starts from (the parquet-column path above
-    * stands in only because the driver testdata ships no media files).
-    * Mime is sniffed from magic bytes ([[MediaCodec.sniffMime]] — file
-    * extensions lie), ids parsed from the leading digits of the file
-    * name. Scale shape: binaryFile splits the listing across the
-    * cluster, one row per file, and everything downstream stays
-    * partition-local — no shuffle anywhere on the payload.
-    */
-  def ingestBinaryFiles(s: SparkSession, dir: String): Dataset[MediaRow] = {
-    import s.implicits._
-    s.read.format("binaryFile").load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .map { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val digits = name.takeWhile(_.isDigit)
-        val id = if (digits.isEmpty) -1L else digits.toLong
-        MediaRow(id, MediaCodec.sniffMime(bytes), bytes)
-      }
-  }
-
   /** q138: the q35 decode pipeline with EVERY decoded column
     * driver-checked — doc_id, mime, container geometry, and all 8
     * content features rounded to 6 decimals as wide columns. TRUE

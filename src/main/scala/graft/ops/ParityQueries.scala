@@ -179,23 +179,13 @@ object ParityQueries extends graft.QueryModule {
     // M1 — dim upsert: insert-if-absent via anti join, ids continue
     "q18_upsert_dim" -> ((s, d) => {
       val n = Tables.nation(s, d)
-      val base = n.join(Tables.customer(s, d),
-          n("n_nationkey") === col("c_nationkey"), "left_semi")
-        .select("n_name").distinct()
-        // tinyGlobalWindow: ≤25 distinct dim values by construction; the
-        // constant partition key silences WindowExec's scale warning
-        .withColumn("id", row_number()
-          .over(graft.pipeline.StarOps.tinyGlobalWindow(col("n_name"))).cast("int"))
-      val incoming = n.join(Tables.supplier(s, d),
-          n("n_nationkey") === col("s_nationkey"), "left_semi")
-        .select("n_name").distinct()
-      val newVals = incoming.join(base, Seq("n_name"), "left_anti")
-        .withColumn("rid", row_number()
-          .over(graft.pipeline.StarOps.tinyGlobalWindow(col("n_name"))).cast("int"))
-      val maxId = base.agg(max(col("id")).as("mx"))
-      val appended = newVals.crossJoin(maxId)
-        .select(col("n_name"), (col("mx") + col("rid")).cast("int").as("id"))
-      base.select("n_name", "id").union(appended).orderBy("id")
+      def withNations(t: DataFrame, key: String) =
+        n.join(t, n("n_nationkey") === t(key), "left_semi")
+      val base = graft.pipeline.StarOps.buildDim(
+        withNations(Tables.customer(s, d), "c_nationkey"), "id", "n_name")
+      graft.pipeline.StarOps.upsertDim(base,
+          withNations(Tables.supplier(s, d), "s_nationkey"), "id", "n_name")
+        .orderBy("id")
     }),
 
     // M2 — fact upsert: updates override base on PK (insert-or-update)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions.tokens
@@ -10,9 +10,8 @@ import graft.functions.TextFunctions.tokens
   * a load) and per-source corpus drift reporting (the "did this crawl
   * slice change under me" check a training-data pipeline runs on every
   * ingest batch). Both are single-scan shapes designed to stay cheap at
-  * 100 TB: profiling is one aggregate pass whose only blow-up is the
-  * exact-NDV Expand (the registered scale twin replaces it with HLL —
-  * see [[approxProfile]]); divergence is one (source, token) count
+  * 100 TB: profiling replaces the exact-NDV multi-distinct Expand with
+  * one narrow dedup shuffle; divergence is one (source, token) count
   * shuffle plus a 50-row broadcast.
   */
 object ProfileOps extends graft.QueryModule {
@@ -36,9 +35,7 @@ object ProfileOps extends graft.QueryModule {
     * Σ NDV(col) narrow rows cross the wire — and phase 2 derives every
     * statistic from the deduped pairs (NDV = surviving rows, n_rows =
     * Σ counts, nulls = the null-value group's count). Measured 2.4×
-    * faster than the Expand plan (4.7 → 2.0 s, sf0.1 median-of-3). At 100 TB even the dedup shuffle goes:
-    * [[approxProfile]] is the gated scale twin (HLL NDV, zero shuffles
-    * of values, mergeable across shards).
+    * faster than the Expand plan (4.7 → 2.0 s, sf0.1 median-of-3).
     */
   def profile(s: SparkSession, d: String): DataFrame =
     profileOf(Tables.lineitem(s, d), ProfileCols)
@@ -55,8 +52,8 @@ object ProfileOps extends graft.QueryModule {
       count(when(col("v").isNotNull, lit(1))).as("n_distinct"))
     // left-join a literal column spine: an EMPTY table must still report
     // one row per column (n_rows 0, null min/max) — the oracle's
-    // per-column UNION and [[approxProfileOf]]'s global agg both do, and
-    // a pre-load table is exactly the state a profiler gets pointed at.
+    // per-column UNION does, and a pre-load table is exactly the state a
+    // profiler gets pointed at.
     // On any non-empty input every cidx exists and the join is a no-op.
     import df.sparkSession.implicits._
     val spine = cols.zipWithIndex.map { case (c, i) => (i, c) }
@@ -67,38 +64,6 @@ object ProfileOps extends graft.QueryModule {
         coalesce(col("n_nulls"), lit(0L)).as("n_nulls"),
         col("min_v"), col("max_v"),
         coalesce(col("n_distinct"), lit(0L)).as("n_distinct"))
-      .orderBy("col_name")
-  }
-
-  /** The 100 TB twin of [[profile]]: identical report shape with
-    * `approx_count_distinct` NDV — ONE pass, no Expand, and the HLL
-    * registers merge across shards/days the q61 way (profile each
-    * partition on write, fold profiles later, never rescan). Gated
-    * against the exact profile in ProfileSpec (NDV within the published
-    * HLL error at this register width; all non-estimated columns equal).
-    */
-  def approxProfile(s: SparkSession, d: String): DataFrame =
-    approxProfileOf(Tables.lineitem(s, d), ProfileCols)
-
-  private[graft] def approxProfileOf(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs: Seq[Column] = count(lit(1)).as("n_rows") +: cols.flatMap { c =>
-      Seq(
-        count(col(c)).as(s"nn_$c"),
-        min(col(c)).cast("double").as(s"min_$c"),
-        max(col(c)).cast("double").as(s"max_$c"),
-        approx_count_distinct(col(c), 0.02).as(s"nd_$c"))
-    }
-    val wide = df.agg(aggs.head, aggs.tail: _*)
-    val rows = cols.map { c =>
-      struct(
-        lit(c).as("col_name"),
-        col("n_rows"),
-        (col("n_rows") - col(s"nn_$c")).as("n_nulls"),
-        col(s"min_$c").as("min_v"),
-        col(s"max_$c").as("max_v"),
-        col(s"nd_$c").as("n_distinct"))
-    }
-    wide.select(explode(array(rows: _*)).as("p")).select("p.*")
       .orderBy("col_name")
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -45,15 +45,6 @@ object ScaleOps extends graft.QueryModule {
       .groupBy(keys.map(col): _*)
       .agg(sum(col("__partial")).as(s"sum_$valueCol"))
   }
-
-  /** Range-partitioned sort-friendly repartition for write paths: at
-    * 100 TB, `orderBy` before a sink is a global sort — prefer
-    * `repartitionByRange` (one shuffle, per-file ordering) when only
-    * file-level clustering is needed.
-    */
-  def clusterBy(df: DataFrame, numPartitions: Int, cols: Column*): DataFrame =
-    df.repartitionByRange(numPartitions, cols: _*)
-      .sortWithinPartitions(cols: _*)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Skew-immune aggregation through the salted two-phase path: only 3

@@ -59,14 +59,11 @@ object SegmentDedup extends graft.QueryModule {
     shiftleft(guarded, 20) + segIdx
   }
 
-  /** The q112 segment frame: one row per (doc_id, seg_idx) with the
-    * segment text and digest. Narrow — no exchange. */
-  private[graft] def segments(s: SparkSession, d: String): DataFrame =
-    segmentsOf(Tables.documents(s, d))
-
-  /** Frame-parameterized twin of [[segments]] so specs can run the
-    * operator over constructed fixtures (the testdata has no natural
-    * byte-identical docs at any SF — measured, r9 verdict). */
+  /** The q112 segment frame of `docs`: one row per (doc_id, seg_idx)
+    * with the segment text and digest. Narrow — no exchange. Frame-
+    * parameterized so specs can run the operator over constructed
+    * fixtures (the testdata has no natural byte-identical docs at any
+    * SF — measured, r9 verdict). */
   private[graft] def segmentsOf(docs: DataFrame): DataFrame = {
     val w = tokens(col("text"))
     docs

@@ -250,7 +250,7 @@ object SimilaritySearch extends graft.QueryModule {
     // vectors are re-joined afterwards just for the surviving id pairs
     // (an id-pair dedup first, vector payload after: ~16× less exchange
     // traffic than deduping (id, id, vec, vec) rows). A per-(tbl,bucket)
-    // population cap mirrors q26's maxDocFreq skew guard: one degenerate
+    // population cap mirrors q26's df-cap skew guard: one degenerate
     // bucket — a mass of near-identical spam vectors — would otherwise
     // go quadratic inside the bucket; capped buckets are dropped (their
     // members still meet in the 7 other tables' finer buckets).

@@ -34,12 +34,6 @@ object StarSchema {
   def sumMoney(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sum(c.cast("decimal(18,2)")).cast("double")
 
-  /** Same, for per-row derived money expressions (e.g. price*(1-disc))
-    * that carry up to 4 exact decimal digits.
-    */
-  def sumMoney6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(c.cast("decimal(22,6)")).cast("double")
-
   /** Orders enriched with region name + (year, month) — the testdata
     * analog of the reference's (region, date) grain
     * (`silver_to_gold.py:28-34`). customer⋈nation⋈region collapses to

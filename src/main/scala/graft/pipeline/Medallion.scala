@@ -67,25 +67,6 @@ object Medallion {
       .filter(col("date").isNotNull)
       .transform(imputeMedian("co2_tonnes"))
 
-  /** Single-pass data-quality observability: attach `Observation`
-    * metrics to the INPUT of a cleaning stage so the reject report
-    * (rows seen, unparseable dates, uncastable measures) piggybacks on
-    * whatever action materializes the silver frame — no second scan of
-    * bronze, which at 100 TB is the difference between free DQ metrics
-    * and doubling the ingest read. The caller runs its normal sink
-    * action, then reads `observation.get`.
-    */
-  def observedCleanEnergy(bronze: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation("clean_energy_dq")
-    val watched = bronze.observe(obs,
-      count(lit(1)).as("bronze_rows"),
-      sum(when(tryToDate(col("date")).isNull, 1L).otherwise(0L)).as("bad_dates"),
-      sum(when(col("consumption_mwh").isNotNull &&
-        expr("try_cast(consumption_mwh AS double)").isNull, 1L).otherwise(0L))
-        .as("uncastable_consumption"))
-    (cleanEnergy(watched), obs)
-  }
-
   /** `fillna(median)` (C4/A4): exact interpolating median (Spark `median`,
     * not `percentile_approx`) broadcast onto every row via a 1-row cross
     * join — no driver round-trip, stays one distributed plan.

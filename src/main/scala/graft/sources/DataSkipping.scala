@@ -82,30 +82,11 @@ object DataSkipping extends graft.QueryModule {
     * writer task instead of recomputed.
     */
   def buildManifest(s: SparkSession, path: String,
-                    cols: Seq[String]): DataFrame =
-    fileStats(s.read.parquet(path), cols)
-
-  private def fileStats(df: DataFrame, cols: Seq[String]): DataFrame = {
+                    cols: Seq[String]): DataFrame = {
     val aggs = count(lit(1)).as("n_rows") +:
       cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    df.groupBy(col("_metadata.file_path").as("file"))
+    s.read.parquet(path).groupBy(col("_metadata.file_path").as("file"))
       .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Incremental manifest maintenance — the write-time path: when a
-    * batch lands, stats are computed for the NEW files only (the writer
-    * knows its file list from the commit) and appended to the stored
-    * manifest. At 100 TB this is the difference between scanning one
-    * batch and rescanning the table to refresh its own index; the
-    * result is row-identical to a full rebuild (pinned in
-    * DataSkippingSpec). After a compaction, rebuild the affected
-    * directory's rows the same way — stats rows are per-file, so any
-    * file-level rewrite maps to a delete+append on the manifest.
-    */
-  def appendManifest(s: SparkSession, stored: DataFrame,
-                     newFiles: Seq[String], cols: Seq[String]): DataFrame = {
-    require(newFiles.nonEmpty, "appendManifest needs at least one new file")
-    stored.unionByName(fileStats(s.read.parquet(newFiles: _*), cols))
   }
 
   /** Read only the files whose [min, max] box can intersect the given
@@ -122,9 +103,9 @@ object DataSkipping extends graft.QueryModule {
     }.reduce(_ && _)
     // the manifest is small by construction (one row per file); the
     // collect is the planning step, not a data move. distinct: a
-    // duplicate manifest row (append retry, imperfect
-    // compaction-rebuild) would otherwise list the file under two root
-    // paths and double every row it contains in the scan
+    // duplicate manifest row (a stats row written twice for one file)
+    // would otherwise list the file twice and double every row it
+    // contains in the scan
     val files = manifest.filter(survives)
       .select("file").distinct().collect().map(_.getString(0)).toSeq
     if (files.isEmpty) s.read.parquet(layoutPath).filter(lit(false))

@@ -19,11 +19,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * JDBC carries only what the reference stages through it — the
   * materialized star of `pipeline.EnergyStar`: dims and monthly
   * aggregates, thousands of rows bounded by dim cardinalities, read
-  * from executor memory. `numPartitions` caps the writer's connection
-  * fan-in so a 1000-executor cluster doesn't open a socket per task
-  * against one database; the read-back side is a single partition
-  * (dims are small by definition — never range-partition a 25-row
-  * read).
+  * from executor memory. The writer coalesces to 4 partitions, which
+  * caps its connection fan-in so a 1000-executor cluster doesn't open a
+  * socket per task against one database; the read-back side is a
+  * single partition (dims are small by definition — never
+  * range-partition a 25-row read).
   */
 object JdbcStage {
 
@@ -37,12 +37,11 @@ object JdbcStage {
 
   /** S5 — full-replace staging write, the `to_sql(if_exists="replace")`
     * analog: drop-and-recreate semantics via overwrite mode. Connection
-    * fan-in capped at `numPartitions`.
+    * fan-in capped at 4.
     */
   def writeStaging(df: DataFrame, url: String, table: String,
-                   numPartitions: Int = 4,
                    createTableColumnTypes: Option[String] = None): Unit = {
-    val w = df.coalesce(numPartitions).write
+    val w = df.coalesce(4).write
       .format("jdbc")
       .option("url", url)
       .option("driver", DerbyDriver)

@@ -89,7 +89,7 @@ object Layout extends graft.QueryModule {
 
   /** Events re-laid-out hive-partitioned by event day (the gold-layer
     * layout for an append-only fact: each day's load lands in its own
-    * directory, compactable and prunable independently), written under
+    * directory, prunable independently), written under
     * a fresh directory of the session's scratch root. Returns it.
     */
   def writeEventsPartitioned(s: SparkSession, d: String): String =
@@ -111,105 +111,6 @@ object Layout extends graft.QueryModule {
         .between(lit(from).cast("date"), lit(to).cast("date")))
       .groupBy("event_date", "event_type")
       .agg(count(lit(1)).as("n"), sumMoney(col("value")).as("total_value"))
-
-  /** Compact a flat parquet directory into ceil(bytes/targetBytes)
-    * files. The small-files problem is the chronic disease of an
-    * append-only lake — a 1000-executor streaming ingest lays down
-    * thousands of kilobyte files per day, and every downstream scan
-    * then pays a task per file. Compaction is:
-    *
-    *   - `coalesce`, not `repartition`: narrowing partitions is
-    *     shuffle-free — each output task concatenates a handful of
-    *     input files;
-    *   - sized by actual on-disk bytes, so the output respects the
-    *     row-group/file size the scan path wants
-    *     (`files.maxPartitionBytes`-aligned);
-    *   - swapped in only after the rewrite fully commits (write to a
-    *     temp sibling, then two checked renames). A crash at any point
-    *     leaves the data REACHABLE: before both renames the original is
-    *     live; between them the only copy sits at the hidden `.old`
-    *     sibling, and [[recoverCompaction]] (run on entry to every
-    *     compact, and over the whole root by compactPartitioned)
-    *     restores it. Readers can transiently miss the directory inside
-    *     the two-rename window — a table-format commit log is the real
-    *     fix at scale; plain-directory swaps can't close that window.
-    *
-    * Returns the target file count.
-    */
-  def compact(s: SparkSession, path: String, targetBytes: Long): Int = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val conf = s.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(path)
-    val fs = src.getFileSystem(conf)
-    recoverCompaction(fs, src)
-    val bytes = fs.getContentSummary(src).getLength
-    val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    // dot-prefixed siblings: Spark's file listing skips hidden paths, so
-    // a concurrent reader of the parent (e.g. the partitioned root mid-
-    // per-partition compaction) never sees the in-flight copies
-    val tmp = new org.apache.hadoop.fs.Path(
-      src.getParent, s".${src.getName}.compacting")
-    val old = new org.apache.hadoop.fs.Path(
-      src.getParent, s".${src.getName}.old")
-    fs.delete(tmp, true)
-    s.read.parquet(path).coalesce(n).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(old, true)
-    require(fs.rename(src, old), s"compaction swap failed staging $path aside")
-    if (!fs.rename(tmp, src)) {
-      // roll back so the original stays live rather than hidden
-      require(fs.rename(old, src),
-        s"compaction swap AND rollback failed: data is at $old")
-      throw new IllegalStateException(
-        s"compaction swap failed publishing $tmp; original restored at $path")
-    }
-    fs.delete(old, true)
-    n
-  }
-
-  /** Repair a crash between compact's two renames: the live dir is gone
-    * and the only copy sits at the hidden `.name.old` sibling — restore
-    * it. No-op when the live dir exists (its `.old` is then just
-    * pre-delete garbage, removed by the next compact).
-    */
-  private[sources] def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem,
-                                         src: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(
-      src.getParent, s".${src.getName}.old")
-    if (!fs.exists(src) && fs.exists(old))
-      require(fs.rename(old, src), s"compaction recovery failed: $old -> $src")
-  }
-
-  /** Per-partition compaction over a hive-partitioned root (the q57
-    * layout): each `col=value` directory compacts independently — the
-    * unit of work the partitioned layout was chosen for (yesterday's
-    * directory compacts while today's is still ingesting). Returns
-    * (partition dir, file count) per compacted partition.
-    */
-  def compactPartitioned(s: SparkSession, root: String,
-                         targetBytes: Long): Seq[(String, Int)] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    // repair any crashed swap FIRST: a hidden '.p.old' whose live
-    // sibling is missing IS the data (the crash hit between compact's
-    // two renames) — restore it before listing partitions
-    fs.listStatus(rootPath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(".") &&
-        st.getPath.getName.endsWith(".old"))
-      .foreach { st =>
-        val live = new org.apache.hadoop.fs.Path(rootPath,
-          st.getPath.getName.stripPrefix(".").stripSuffix(".old"))
-        recoverCompaction(fs, live)
-      }
-    // hidden ('.') and metadata ('_') siblings are NOT partitions — a
-    // stale work dir from a crashed run contains '=' in its name and
-    // would otherwise be compacted in place, still invisible to readers
-    fs.listStatus(rootPath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
-        !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
-      .map(st => st.getPath.getName ->
-        compact(s, st.getPath.toString, targetBytes))
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q56_bucketed_join" -> ((s, d) =>

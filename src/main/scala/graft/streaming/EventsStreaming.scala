@@ -86,10 +86,9 @@ object EventsStreaming {
     * still bridge or extend any run held in state, and is never matched
     * against a session that was already emitted.
     */
-  def sessionize(s: SparkSession, events: DataFrame,
-                 gap: FiniteDuration = 30.minutes): DataFrame = {
+  def sessionize(s: SparkSession, events: DataFrame): DataFrame = {
     import s.implicits._
-    val gapMicros = gap.toMicros
+    val gapMicros = 30.minutes.toMicros
 
     events
       .withWatermark("ts", "1 hour")
@@ -227,9 +226,9 @@ object EventsStreaming {
     * re-admits a copy) that makes streaming dedup feasible at all; an
     * unbounded `dropDuplicates` would accumulate every key forever.
     */
-  def dedupEvents(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+  def dedupEvents(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Continuous warehouse maintenance: an Update-mode streaming

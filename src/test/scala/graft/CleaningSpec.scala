@@ -78,20 +78,4 @@ class CleaningSpec extends AnyFunSuite {
       .toDF("date", "region", "sector", "co2_tonnes")
     assert(Medallion.cleanEmissions(df).count() == 1)
   }
-
-  test("observed cleaning reports DQ metrics in the same pass as the sink action") {
-    val df = bronze(
-      ("2023-01-01", "North", "Gas", "100.5", "10.0"),
-      ("not-a-date", "North", "Gas", "200.0", "10.0"),
-      ("2023-01-03", "North", "Gas", "N/A", "10.0"),
-      ("2023-01-04", "North", "Gas", "300.0", "10.0"))
-    val (silver, obs) = Medallion.observedCleanEnergy(df)
-    // one action drives BOTH the silver result and the metrics
-    val kept = silver.count()
-    val m = obs.get
-    assert(kept == 2) // bad date dropped, N/A dropped
-    assert(m("bronze_rows") == 4L)
-    assert(m("bad_dates") == 1L)
-    assert(m("uncastable_consumption") == 1L)
-  }
 }

@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** q83–q88 corpus reports: chunk geometry on a constructed doc, the
-  * histogram-threshold cap vs the window form, decile ordering, and
-  * weighted-sample determinism.
+/** q83–q88 corpus reports: chunk geometry on a constructed doc, decile
+  * ordering, and weighted-sample determinism.
   */
 class CorpusReportsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -30,16 +29,6 @@ class CorpusReportsSpec extends AnyFunSuite {
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(exchanges == 0,
       s"chunking must not hash-shuffle (row-multiplying step):\n$p")
-  }
-
-  test("q85 histogram-threshold selection equals the window form") {
-    val fast = ops.CorpusReports.sourceCapsScalableKept(spark, sf)
-    val exact = ops.CorpusReports.sourceCapsWindowKept(spark, sf)
-    assert(fast.count() == exact.count())
-    assert(fast.except(exact).count() == 0)
-    assert(exact.except(fast).count() == 0)
-    // the cap binds: 20 sources x min(25, 15)
-    assert(exact.count() == 20 * 15)
   }
 
   test("q86 deciles are ordered and partition each language") {

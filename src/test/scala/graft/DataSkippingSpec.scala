@@ -120,42 +120,6 @@ class DataSkippingSpec extends AnyFunSuite {
     assert(asOf.count() == expected && expected > 0)
   }
 
-  test("incremental manifest append equals the full rebuild after a new batch") {
-    // two-batch layout in an isolated dir (not the shared cached one)
-    val root = s"${org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-manifest")}/graft_manifest_inc_test"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    def grid(pred: org.apache.spark.sql.Column) = Tables.lineitem(spark, sf)
-      .filter(pred)
-      .select(pmod(col("l_orderkey") * 37, lit(1024)).as("gx"),
-        pmod(col("l_partkey") * 41, lit(1024)).as("gy"), col("l_quantity"))
-    def listFiles(): Set[String] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(root))
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
-        .map(_.getPath.toUri.getPath).toSet
-    grid(col("l_orderkey") % 2 === 0).repartition(3)
-      .write.mode("overwrite").parquet(root)
-    val manifest1 = DataSkipping.buildManifest(spark, root, Seq("gx", "gy"))
-      .localCheckpoint()
-    val before = listFiles()
-    grid(col("l_orderkey") % 2 === 1).repartition(2)
-      .write.mode("append").parquet(root)
-    // the writer's commit knows exactly which files it added
-    val newFiles = (listFiles() -- before).toSeq.sorted
-    assert(newFiles.size == 2, s"expected 2 appended files, got $newFiles")
-    val incremental = DataSkipping
-      .appendManifest(spark, manifest1, newFiles, Seq("gx", "gy"))
-    val rebuilt = DataSkipping.buildManifest(spark, root, Seq("gx", "gy"))
-    // row-identical to the full rebuild, modulo path normalization
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("file", regexp_replace(col("file"), "^file:", ""))
-      .collect().map(_.toSeq).toSet
-    assert(canon(incremental) == canon(rebuilt),
-      "incremental manifest diverged from the full rebuild")
-    assert(rebuilt.count() == 5)
-  }
-
   test("an empty manifest intersection yields an empty, well-typed frame") {
     val (data, man) = DataSkipping.zorderedLineitem(spark, sf)
     val manifest = spark.read.parquet(man)

@@ -84,71 +84,6 @@ class LayoutSpec extends AnyFunSuite {
     }
   }
 
-  private def parquetFiles(p: java.io.File): Array[java.io.File] =
-    p.listFiles().filter(_.getName.endsWith(".parquet"))
-
-  test("compaction shrinks a small-files directory, preserving content") {
-    val root = s"${org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-compact")}/graft_compact_flat"
-    Tables.events(spark, d).repartition(64)
-      .write.mode("overwrite").parquet(root)
-    val dir = new java.io.File(root)
-    assert(parquetFiles(dir).length == 64)
-    def snapshot() = spark.read.parquet(root)
-      .agg(count(lit(1)), expr("bit_xor(xxhash64(event_id, ts))"))
-      .collect().head
-    val before = snapshot()
-    val bytes = parquetFiles(dir).map(_.length).sum
-    val n = Layout.compact(spark, root, targetBytes = bytes / 4 + 1)
-    assert(n >= 2 && n <= 8, s"expected ~4-5 target files, got $n")
-    assert(parquetFiles(dir).length == n)
-    assert(snapshot() == before)
-    assert(!dir.getParentFile.listFiles()
-      .exists(_.getName.startsWith(".graft_compact_flat.")),
-      "swap must clean up its hidden work directories")
-  }
-
-  test("compaction recovers from stale work dirs left by a crashed run") {
-    val root = s"${org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-compact")}/graft_compact_crash"
-    Tables.events(spark, d).repartition(8)
-      .write.mode("overwrite").parquet(root)
-    val before = spark.read.parquet(root).count()
-    // a previous compaction died mid-flight: both hidden siblings exist,
-    // holding garbage — a fresh run must clear them and still commit
-    val parent = new java.io.File(root).getParentFile
-    for (suffix <- Seq("compacting", "old")) {
-      val stale = new java.io.File(parent, s".graft_compact_crash.$suffix")
-      stale.mkdirs()
-      java.nio.file.Files.writeString(
-        stale.toPath.resolve("garbage.txt"), "leftover")
-    }
-    val n = Layout.compact(spark, root, targetBytes = 1L << 30)
-    assert(n == 1 && parquetFiles(new java.io.File(root)).length == 1)
-    assert(spark.read.parquet(root).count() == before)
-    assert(!parent.listFiles().exists(_.getName.startsWith(".graft_compact_crash.")),
-      "stale work directories must be cleaned up")
-  }
-
-  test("per-partition compaction collapses each day directory independently") {
-    val root = s"${org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-compact")}/graft_compact_parted"
-    // fan-out write: 8 tasks x 30 days => up to 8 files per day directory
-    Tables.events(spark, "/root/testdata/sf0.01")
-      .withColumn("event_date", to_date(col("ts")))
-      .repartition(8)
-      .write.mode("overwrite").partitionBy("event_date").parquet(root)
-    val days = new java.io.File(root).listFiles()
-      .filter(_.getName.startsWith("event_date="))
-    assert(days.nonEmpty && days.exists(parquetFiles(_).length > 1),
-      "fixture must actually have small files to compact")
-    def snapshot() = spark.read.parquet(root)
-      .agg(count(lit(1)), expr("bit_xor(xxhash64(event_id, event_date))"))
-      .collect().head
-    val before = snapshot()
-    val res = Layout.compactPartitioned(spark, root, targetBytes = 1L << 30)
-    assert(res.size == days.length && res.forall(_._2 == 1))
-    days.foreach(day => assert(parquetFiles(day).length == 1, day.getName))
-    assert(snapshot() == before)
-  }
-
   test("bucketed writes land exactly one file per bucket") {
     val root = Layout.bucketedLayout(spark, d)
     for (sub <- Seq("customer", "orders")) {

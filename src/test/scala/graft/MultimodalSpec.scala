@@ -196,30 +196,6 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
-  test("binaryFile ingest sniffs mime from magic bytes and decodes identically") {
-    import java.nio.file.{Files, Paths}
-    val dir = Paths.get(org.apache.spark.sql.graft.ColumnBridge.tempDir("graft-binaryfile"))
-    val bmp = MediaCodec.encodeBmp("red green blue".getBytes(StandardCharsets.UTF_8))
-    val ppm = MediaCodec.encodePpm("pixel map payload".getBytes(StandardCharsets.UTF_8))
-    val wav = MediaCodec.encodeWav("pcm sample run".getBytes(StandardCharsets.UTF_8))
-    Files.write(dir.resolve("101_img.dat"), bmp)   // extension lies; magic decides
-    Files.write(dir.resolve("202_img.ppm"), ppm)
-    Files.write(dir.resolve("303_clip.wav"), wav)
-    Files.write(dir.resolve("404_junk.bin"), Array[Byte](1, 2, 3, 4))
-    val rows = Multimodal.ingestBinaryFiles(spark, dir.toString)
-      .collect().map(r => r.doc_id -> r).toMap
-    assert(rows.keySet == Set(101L, 202L, 303L, 404L))
-    assert(rows(101L).mime == MediaCodec.BmpMime)
-    assert(rows(202L).mime == MediaCodec.PpmMime)
-    assert(rows(303L).mime == MediaCodec.WavMime)
-    assert(rows(404L).mime == "application/octet-stream")
-    // the ingested bytes decode exactly like the in-memory originals
-    val viaIngest = MediaCodec.decode(rows(101L).mime, rows(101L).payload)
-    val direct = MediaCodec.decode(MediaCodec.BmpMime, bmp)
-    assert(viaIngest.width == direct.width && viaIngest.height == direct.height)
-    assert(viaIngest.feature.toSeq == direct.feature.toSeq)
-  }
-
   test("q35 decodes every document through a real container") {
     val d = "/root/testdata/sf0.001"
     val out = Multimodal.queries("q35_multimodal_decode")(spark, d)

@@ -71,14 +71,6 @@ class PlanSpec extends AnyFunSuite {
       s"expected partial+final dedup agg plus the per-column rollup:\n$p")
   }
 
-  test("q131's approx twin needs no value dedup: single pass, no Expand") {
-    val p = graft.ops.ProfileOps.approxProfile(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("Expand"), s"HLL profile must not Expand:\n$p")
-    assert("Scan parquet".r.findAllIn(p).length == 1,
-      s"approx profile must read the table exactly once:\n$p")
-  }
-
   test("q59 top-k is a TakeOrdered heap over partial counts, not a global sort") {
     val p = plan("q59_top_tokens")
     assert(p.contains("TakeOrderedAndProject"),

@@ -6,8 +6,8 @@ import graft.ops.ProfileOps
 
 /** q131 table profile + q133 source divergence: the invariants the
   * oracle hash can't see — null accounting on a frame that actually has
-  * nulls (driver lineitem has none), the approx-NDV scale twin's error
-  * gate, and the information-theoretic laws of the KL report.
+  * nulls (driver lineitem has none), the empty-table shape, and the
+  * information-theoretic laws of the KL report.
   */
 class ProfileSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -40,37 +40,16 @@ class ProfileSpec extends AnyFunSuite {
 
   test("q131 profile: an EMPTY table still reports one row per column") {
     // a pre-load table is exactly what a profiler gets pointed at; the
-    // exact profile, the approx twin, and the oracle's per-column UNION
-    // must all agree on the 8-rows-of-zeros shape (the exact side used
-    // to collapse to zero rows — fixed by the spine join)
+    // profile and the oracle's per-column UNION must agree on the
+    // rows-of-zeros shape (the profile used to collapse to zero rows —
+    // fixed by the spine join)
     import spark.implicits._
     val empty = Seq.empty[(java.lang.Long, java.lang.Double)].toDF("a", "b")
-    for (p <- Seq(ProfileOps.profileOf(empty, Seq("a", "b")),
-        ProfileOps.approxProfileOf(empty, Seq("a", "b")))) {
-      val rows = p.collect()
-      assert(rows.length == 2, s"one row per column, got ${rows.length}")
-      rows.foreach { r =>
-        assert(r.getLong(1) == 0 && r.getLong(2) == 0 && r.getLong(5) == 0)
-        assert(r.isNullAt(3) && r.isNullAt(4), "min/max must be null on empty")
-      }
-    }
-  }
-
-  test("q131 approx twin: min/max/nulls identical, NDV within the register error") {
-    val exact = ProfileOps.profile(spark, d)
-      .collect().map(r => r.getString(0) -> r).toMap
-    val approx = ProfileOps.approxProfile(spark, d)
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(exact.keySet == approx.keySet)
-    for (c <- exact.keys) {
-      val (e, a) = (exact(c), approx(c))
-      assert(e.getLong(1) == a.getLong(1) && e.getLong(2) == a.getLong(2),
-        s"$c: row/null counts must not be estimated")
-      assert(e.getDouble(3) == a.getDouble(3) && e.getDouble(4) == a.getDouble(4),
-        s"$c: min/max must not be estimated")
-      val (en, an) = (e.getLong(5).toDouble, a.getLong(5).toDouble)
-      assert(math.abs(an - en) / en <= 0.10,
-        s"$c: approx NDV $an vs exact $en exceeds 10% (rsd 2% sketch)")
+    val rows = ProfileOps.profileOf(empty, Seq("a", "b")).collect()
+    assert(rows.length == 2, s"one row per column, got ${rows.length}")
+    rows.foreach { r =>
+      assert(r.getLong(1) == 0 && r.getLong(2) == 0 && r.getLong(5) == 0)
+      assert(r.isNullAt(3) && r.isNullAt(4), "min/max must be null on empty")
     }
   }
 

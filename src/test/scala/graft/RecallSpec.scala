@@ -40,7 +40,7 @@ class RecallSpec extends AnyFunSuite {
     // the point of the prefix: strictly fewer candidate pairs than
     // "docs sharing ANY capped shingle" (what the full join enumerates)
     val (_, filtered, _, candidates) =
-      ops.Dedup.prefixJaccardFrames(spark, d, 4, 5, 100)
+      ops.Dedup.prefixJaccardFrames(spark, d, 4, 5)
     val fullCandidates = filtered.as("a").join(filtered.as("b"),
         col("a.shingle") === col("b.shingle") &&
           col("a.lang") === col("b.lang") &&

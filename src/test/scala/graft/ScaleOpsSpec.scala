@@ -123,13 +123,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(elapsedSec < 120, f"packing 200k docs took $elapsedSec%.0f s")
   }
 
-  test("clusterBy orders within partitions without a global sort") {
-    val df = ScaleOps.clusterBy(skewed, 4, col("k"))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Sort") && !plan.toLowerCase.contains("global sort"))
-    assert(df.count() == 1000)
-  }
-
   test("runtime bloom filter prunes the fact side of a selective shuffle join") {
     // Spark's runtime-filter injection (on by default) plants a bloom
     // filter built from the dim side's join keys onto the fact scan —

@@ -16,7 +16,7 @@ class SegmentDedupSpec extends AnyFunSuite {
   private val d = "/root/testdata/sf0.001"
 
   test("q112 keeps exactly one occurrence of every distinct segment") {
-    val segs = SegmentDedup.segments(spark, d)
+    val segs = SegmentDedup.segmentsOf(Tables.documents(spark, d))
     val distinctSegs = segs.select("dg").distinct().count()
     val keptTotal = SegmentDedup.segmentDedup(spark, d)
       .agg(sum("n_kept")).collect()(0).getLong(0)
@@ -27,7 +27,7 @@ class SegmentDedupSpec extends AnyFunSuite {
   test("q112 reassembles a doc with no duplicated segments to its normalized self") {
     // docs none of whose segments appear anywhere else keep everything,
     // and the reassembly md5 equals md5 of the space-joined token stream
-    val segs = SegmentDedup.segments(spark, d)
+    val segs = SegmentDedup.segmentsOf(Tables.documents(spark, d))
     val shared = segs.groupBy("dg").count().filter(col("count") > 1).select("dg")
     val cleanDocs = segs.join(shared, Seq("dg"), "left_anti")
       .groupBy("doc_id").count()
